@@ -3132,10 +3132,12 @@ def _sql_mmr_topk(k: int = 5, diversity: float = 0.3, n_cand: int = 10) -> str:
     """Unrolled greedy MMR in DuckDB: step i picks, per class, the unselected
     candidate maximizing (1-λ)·rel − λ·max-trigram-Jaccard-to-selected, ties
     on term asc — exactly ``mmr_rerank``'s loop. λ weights are interpolated
-    via repr() so both engines multiply the same doubles."""
+    via repr() so both engines multiply the same doubles. Every step reads
+    all earlier steps, so the chain is MATERIALIZED: inlined, DuckDB
+    re-evaluates it exponentially often in k."""
     w_rel, w_div = repr(1 - diversity), repr(diversity)
     parts = [f"""WITH {_TOKS}, {_XCLS}, {_scores_sql('xcls', 'lang', False, False)},
-cand AS (
+cand AS MATERIALIZED (
   SELECT lang, term, round(score, 6) AS score FROM (
     SELECT lang, term, score,
            row_number() OVER (PARTITION BY lang ORDER BY score DESC, term ASC) AS rn
@@ -3145,12 +3147,12 @@ grams AS (
          list_distinct(list_transform(range(1, length('  ' || term || ' ') - 1),
              x -> substr('  ' || term || ' ', CAST(x AS INT), 3))) AS g
   FROM cand),
-sims AS (
+sims AS MATERIALIZED (
   SELECT a.lang, a.term AS ta, b.term AS tb,
          CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
            / greatest(len(list_distinct(list_concat(a.g, b.g))), 1) AS sim
   FROM grams a JOIN grams b ON a.lang = b.lang AND a.term <> b.term),
-sel1 AS (
+sel1 AS MATERIALIZED (
   SELECT lang, term, 1 AS mmr_rank FROM (
     SELECT lang, term,
            row_number() OVER (PARTITION BY lang
@@ -3164,7 +3166,7 @@ msi{i} AS (
   SELECT s.lang, s.ta AS term, max(s.sim) AS msim
   FROM sims s JOIN selu{i - 1} p ON p.lang = s.lang AND p.term = s.tb
   GROUP BY s.lang, s.ta),
-sel{i} AS (
+sel{i} AS MATERIALIZED (
   SELECT lang, term, {i} AS mmr_rank FROM (
     SELECT c.lang, c.term,
            row_number() OVER (PARTITION BY c.lang
@@ -3339,7 +3341,8 @@ def _sql_hier_cte(n_leaves: int = N_LANG_TOPICS) -> str:
     n_leaves−1 merge steps, each = argmin pair (ties (d, a, b) asc) +
     min-rule distance update + membership relabel (``mem{i}``). Distances
     round to 6dp before any comparison, mirroring
-    ``class_pair_distances``. Shared by the linkage-tree oracle
+    ``class_pair_distances``. ``dist{i}`` reads ``dist{i-1}`` twice, so
+    the chain is MATERIALIZED (inlined, it doubles per step). Shared by the linkage-tree oracle
     (`_sql_hierarchical`) and the per-level assignment oracle
     (`_sql_hierarchy_levels`)."""
     parts = [f"""WITH
@@ -3357,7 +3360,7 @@ cosr AS (SELECT a.topic AS ta, b.topic AS tb, sum(a.v * b.v) AS cos
          FROM nrmd a JOIN nrmd b ON a.term = b.term AND a.topic < b.topic
          GROUP BY a.topic, b.topic),
 tl AS (SELECT DISTINCT topic FROM xcls),
-dist0 AS (
+dist0 AS MATERIALIZED (
   SELECT x.topic AS a, y.topic AS b, round(1.0 - coalesce(c.cos, 0.0), 6) AS d
   FROM tl x JOIN tl y ON x.topic < y.topic
   LEFT JOIN cosr c ON c.ta = x.topic AND c.tb = y.topic),
@@ -3366,7 +3369,7 @@ mem0 AS (SELECT topic AS cluster, topic AS leaf FROM tl)"""]
         nid = n_leaves + i - 1
         parts.append(f""",
 m{i} AS (SELECT a, b, d FROM dist{i - 1} ORDER BY d, a, b LIMIT 1),
-dist{i} AS (
+dist{i} AS MATERIALIZED (
   SELECT p.a, p.b, p.d FROM dist{i - 1} p, m{i}
   WHERE p.a NOT IN (m{i}.a, m{i}.b) AND p.b NOT IN (m{i}.a, m{i}.b)
   UNION ALL
@@ -3375,7 +3378,7 @@ dist{i} AS (
     FROM dist{i - 1} p, m{i}
     WHERE (p.a IN (m{i}.a, m{i}.b)) <> (p.b IN (m{i}.a, m{i}.b))
   ) q GROUP BY q.c),
-mem{i} AS (
+mem{i} AS MATERIALIZED (
   SELECT CASE WHEN m.cluster IN (m{i}.a, m{i}.b) THEN {nid} ELSE m.cluster END AS cluster,
          m.leaf
   FROM mem{i - 1} m, m{i})""")
@@ -10140,6 +10143,9 @@ def q_mmr_diversify_ann(spark, sf_dir):
 
 
 def _sql_mmr_diversify() -> str:
+    # cand/psims are MATERIALIZED and psims reads only the candidates'
+    # vectors (cv): inlined into every sel{i}, the pairwise sims were
+    # recomputed per step over the whole table and ran out of memory.
     ids = ", ".join(str(i) for i in ANN_QUERY_IDS)
     w_rel, w_div = repr(1.0 - MMRD_LAMBDA), repr(MMRD_LAMBDA)
     parts = [f"""WITH {_SQL_COS_CORE},
@@ -10149,7 +10155,7 @@ dots AS (
   FROM v q JOIN v d ON q.dim = d.dim
   WHERE q.vec_id IN ({ids}) AND d.vec_id != q.vec_id
   GROUP BY q.vec_id, d.vec_id),
-cand AS (
+cand AS MATERIALIZED (
   SELECT query_vec_id, vec_id, cos FROM (
     SELECT query_vec_id, dots.vec_id AS vec_id,
            round(dot / (nq.nrm * nd.nrm), 6) AS cos,
@@ -10158,16 +10164,17 @@ cand AS (
     FROM dots JOIN norms nq ON nq.vec_id = query_vec_id
               JOIN norms nd ON nd.vec_id = dots.vec_id)
   WHERE rn <= {MMRD_CANDS}),
-psims AS (
+cv AS MATERIALIZED (
+  SELECT v.vec_id, v.dim, v.val, n.nrm FROM v JOIN norms n USING (vec_id)
+  WHERE vec_id IN (SELECT vec_id FROM cand)),
+psims AS MATERIALIZED (
   SELECT a.query_vec_id, a.vec_id AS ia, b.vec_id AS ib,
-         round(sum(va.val * vb.val) / (na.nrm * nb.nrm), 6) AS sim
+         round(sum(va.val * vb.val) / (va.nrm * vb.nrm), 6) AS sim
   FROM cand a JOIN cand b ON b.query_vec_id = a.query_vec_id
        AND b.vec_id != a.vec_id
-  JOIN v va ON va.vec_id = a.vec_id
-  JOIN v vb ON vb.vec_id = b.vec_id AND vb.dim = va.dim
-  JOIN norms na ON na.vec_id = a.vec_id
-  JOIN norms nb ON nb.vec_id = b.vec_id
-  GROUP BY a.query_vec_id, a.vec_id, b.vec_id, na.nrm, nb.nrm),
+  JOIN cv va ON va.vec_id = a.vec_id
+  JOIN cv vb ON vb.vec_id = b.vec_id AND vb.dim = va.dim
+  GROUP BY a.query_vec_id, a.vec_id, b.vec_id, va.nrm, vb.nrm),
 sel1 AS (
   SELECT query_vec_id, vec_id, 1 AS mmr_rank FROM (
     SELECT query_vec_id, vec_id,

@@ -2570,11 +2570,13 @@ def rank_eval(
     # extra Spark action in serving loops (VERDICT r4 #3). A bad grade
     # raises a SparkRuntimeException naming max_grade when the evaluation
     # executes — ES rank_eval exposes the same knob as maximum_relevance.
+    # A NULL grade passes the guard (it is never relevant: every grade
+    # comparison below is NULL, hence false).
     _chk = F.assert_true(
-        F.col("grade") <= F.lit(float(max_grade)),
+        F.col("grade").isNull() | (F.col("grade") <= F.lit(float(max_grade))),
         F.concat(F.lit(f"judgment grade exceeds max_grade={max_grade} "
                        "(pass the true maximum_relevance to rank_eval): "),
-                 F.col("grade")))
+                 F.coalesce(F.col("grade").cast("string"), F.lit("NULL"))))
     judgments = judgments.withColumn(
         "grade", F.when(_chk.isNull(), F.col("grade")))
     win = hits.filter(F.col("rank") <= k).select("query_id", id_col, "rank")

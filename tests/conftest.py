@@ -41,3 +41,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def documents_df(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+
+
+# Run order: the tests that need no SparkSession first, then the Spark tests
+# in file order, and last the two oracle replays of the WHOLE registry (each
+# runs every queries() entry on Spark and on DuckDB — the longest tests in
+# the suite). Nothing is deselected; only the order changes.
+WHOLE_REGISTRY_REPLAYS = {
+    "test_full_registry_matches_oracle_at_sf001x10",
+    "test_all_queries_match_duckdb_oracle",
+}
+
+
+def pytest_collection_modifyitems(items):
+    items.sort(key=lambda it: (
+        "spark" in getattr(it, "fixturenames", ()),
+        getattr(it, "originalname", "") in WHOLE_REGISTRY_REPLAYS))

@@ -46,15 +46,11 @@ def test_driver_sample_matches_oracle_at_sf01(spark):
     con = oc.duckdb_con(SF01)
     import __spark_entry__ as e
 
-    qs, osql = e.queries(), e.oracle_sql()
+    qs = e.queries()
     unknown = [n for n in SAMPLE if n not in qs]
     assert not unknown, f"sample names not in registry: {unknown}"
-    failed = []
-    for name in SAMPLE:
-        spdf = qs[name](spark, SF01).toPandas()
-        errs = oc.compare(name, spdf, con.sql(osql[name]).df())
-        if errs:
-            failed.append((name, errs))
+    failed = [(name, errs) for name, status, errs
+              in oc.replay(spark, con, SF01, SAMPLE) if status != "OK"]
     assert not failed, failed
 
 
@@ -74,13 +70,7 @@ def test_full_registry_matches_oracle_at_sf001x10(spark):
     import __spark_entry__ as e
 
     con = oc.duckdb_con(SF001X10)
-    qs, osql = e.queries(), e.oracle_sql()
-    failed = []
-    for name, fn in qs.items():
-        spdf = fn(spark, SF001X10).toPandas()
-        if name not in osql:
-            continue
-        errs = oc.compare(name, spdf, con.sql(osql[name]).df())
-        if errs:
-            failed.append((name, errs))
+    failed = [(name, errs) for name, status, errs
+              in oc.replay(spark, con, SF001X10, list(e.queries()))
+              if status == "FAIL"]
     assert not failed, failed

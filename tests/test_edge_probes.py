@@ -58,6 +58,48 @@ def test_oov_only_query_and_mixed_batch(spark, tiny_seg):
     assert {r["query_id"] for r in got} == {1}
 
 
+@pytest.fixture(scope="module")
+def sparse_seg(spark, tmp_path_factory):
+    """The 20-doc tiny corpus spread over 64 buckets: most bucket
+    directories do not exist."""
+    rows = [
+        ("r", f"f{i}.py", "c0", f"def handler_{i}(): return widget_{i % 3}", i)
+        for i in range(20)
+    ]
+    scores = doc_scores(spark.createDataFrame(rows, CORPUS_SCHEMA), mode="ascii_code")
+    path = str(tmp_path_factory.mktemp("sparse") / "seg")
+    write_index_segments(build_block_index(scores, SPAN), path, n_buckets=64)
+    return path
+
+
+def test_query_on_absent_buckets(spark, sparse_seg):
+    """Terms whose buckets have no directory read as an empty scan: the
+    query returns no rows with the serving schema, and a mixed batch still
+    answers its other queries, cold and warm."""
+    import os
+
+    from bertopic_spark.index.segments import term_bucket
+
+    present = {int(d.split("=")[1]) for d in os.listdir(sparse_seg)
+               if d.startswith("bucket=")}
+    assert len(present) < 64
+    absent = [t for t in (f"nowhere{i}" for i in range(200))
+              if term_bucket(t, 64) not in present][:2]
+    assert len(absent) == 2
+    out = serve_topk(spark, sparse_seg, {7: absent}, k=5, span=SPAN, n_buckets=64)
+    assert out.count() == 0
+    assert set(out.columns) == {"query_id", "doc_id", "score", "rank"}
+    mixed = {1: ["handler_1"], 2: ["widget_2", absent[0]], 7: absent}
+    cold = serve_topk(spark, sparse_seg, mixed, k=5, span=SPAN, n_buckets=64)
+    with IndexServer(spark, sparse_seg, span=SPAN, n_buckets=64) as srv:
+        warm = srv.topk(mixed, k=5).collect()
+    for got in (cold.collect(), warm):
+        by_q = {}
+        for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
+            by_q.setdefault(r["query_id"], []).append(r["doc_id"])
+        assert by_q == {1: [1], 2: [2, 5, 8, 11, 14]}
+
+
 def test_null_content_rows_drop_from_postings(spark):
     """NULL content tokenizes to a NULL array; explode drops the row — the
     doc is absent from the index (documented), everything else intact."""

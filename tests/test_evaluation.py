@@ -153,3 +153,25 @@ def test_err_hand_case(spark):
     assert out7["err_at_k"] == pytest.approx((2 ** 7 - 1) / 2 ** 7, abs=1e-9)
     with pytest.raises(ValueError, match="max_grade"):
         rank_eval(hits, big, k=3, max_grade=0.0)
+
+
+def test_rank_eval_null_grade_is_unjudged(spark):
+    """A NULL-graded judgment passes the max_grade guard and scores as a
+    non-relevant (grade-0) judgment; the guard's message names the bad
+    grade."""
+    from bertopic_spark.operators.bm25 import rank_eval
+
+    hits = spark.createDataFrame(
+        [(0, 10, 1), (0, 11, 2), (0, 12, 3)],
+        "query_id long, doc_id long, rank long")
+    schema = "query_id long, doc_id long, grade double"
+    with_null = spark.createDataFrame(
+        [(0, 10, 3.0), (0, 11, None), (0, 12, 2.0), (0, 13, None)], schema)
+    with_zero = spark.createDataFrame(
+        [(0, 10, 3.0), (0, 11, 0.0), (0, 12, 2.0), (0, 13, 0.0)], schema)
+    got = rank_eval(hits, with_null, k=3).collect()[0].asDict()
+    want = rank_eval(hits, with_zero, k=3).collect()[0].asDict()
+    assert got == pytest.approx(want, abs=1e-12)
+    big = spark.createDataFrame([(0, 10, 7.0), (0, 11, None)], schema)
+    with pytest.raises(Exception, match="max_grade=4.0.*: 7.0"):
+        rank_eval(hits, big, k=3).collect()

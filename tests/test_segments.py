@@ -95,3 +95,77 @@ def test_index_server_matches_cold_path_and_releases_cache(spark, seg_path):
     assert warm == cold
     assert one[0] == cold[0]
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0
+
+
+TIE_CORPUS = [
+    "alpha beta gamma", "alpha delta", "alpha beta shared", "alpha beta shared",
+    "alpha beta shared", "beta gamma gamma", "delta epsilon",
+    "alpha alpha beta beta", "gamma epsilon zeta", "alpha beta shared",
+    "alpha beta shared", "shared delta",
+]
+
+
+@pytest.fixture(scope="module")
+def tie_seg(spark, tmp_path_factory):
+    """12 docs in 3 blocks per common term; the "alpha beta ..." triples
+    score bit-identically, so ties straddle rank k."""
+    rows = [("r", f"f{i}.py", "c0", t, i) for i, t in enumerate(TIE_CORPUS)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, content string, doc_id long")
+    scores = doc_scores(df, mode="ascii_code").persist()
+    path = str(tmp_path_factory.mktemp("ties") / "idx")
+    write_index_segments(build_block_index(scores, 4), path, n_buckets=16)
+    return path, scores
+
+
+def test_serve_topk_fanout_repeats_and_ties(spark, tie_seg):
+    """Queries sharing terms, a repeated term and ties at rank k: the
+    answer is rank-identical to bm25_topk, ties broken by doc_id asc."""
+    path, scores = tie_seg
+    k = 3
+    texts = {0: "alpha beta", 1: "beta gamma", 2: "alpha alpha shared",
+             3: "shared delta", 4: "gamma zzzoov"}
+    qts = {q: tokenize_one(t, "ascii_code") for q, t in texts.items()}
+    assert qts[2].count("alpha") == 2
+    qt = query_terms(queries_df(spark, texts), "ascii_code")
+
+    def ranked(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"]))
+        return {q: sorted(v) for q, v in out.items()}
+
+    full = ranked(bm25_topk(scores, qt, k=len(TIE_CORPUS)))
+    # the fixture really cuts a tie group at rank k
+    cut = [q for q, v in full.items() if len(v) > k and v[k - 1][2] == v[k][2]]
+    assert 0 in cut
+    want = {q: v[:k] for q, v in full.items()}
+    got = ranked(serve_topk(spark, path, qts, k=k, span=4, n_buckets=16))
+    assert set(got) == set(want)
+    for q in want:
+        assert [(r, d) for r, d, _ in got[q]] == [(r, d) for r, d, _ in want[q]], q
+        for (_, _, gs), (_, _, ws) in zip(got[q], want[q]):
+            assert gs == pytest.approx(ws, abs=1e-12)
+    for q in cut:
+        tied = [d for _, d, s in full[q] if s == full[q][k - 1][2]]
+        in_topk = [d for _, d, _ in got[q] if d in tied]
+        assert in_topk == sorted(tied)[:len(in_topk)], q
+
+
+def test_pruned_scan_reads_only_query_buckets(spark, tie_seg):
+    import re
+
+    path, _ = tie_seg
+    terms = ["alpha", "zeta"]
+    want = {term_bucket(t, 16) for t in terms}
+    sc = pruned_block_scan(spark, path, terms, n_buckets=16)
+    leaves = sc._jdf.queryExecution().executedPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        assert leaf.getClass().getSimpleName() == "FileSourceScanExec"
+        paths = leaf.relation().location().rootPaths()
+        roots += [paths.apply(j).toString() for j in range(paths.size())]
+    assert {int(re.search(r"bucket=(\d+)$", r).group(1)) for r in roots} == want
+    assert {r["term"] for r in sc.select("term").collect()} == set(terms)
