@@ -6278,8 +6278,7 @@ def q_search_query_indexed(spark, sf_dir):
         d = term_dictionary(docs, "text", "doc_id", MODE)
         out = search_query_indexed(
             spark, f"{root}/seg", f"{root}/pos", QL_QUERY, dictionary=d,
-            meta=docs.select("doc_id", "lang"), k=10, mode=MODE,
-            n_buckets=16, span=512, pos_buckets=16)
+            meta=docs.select("doc_id", "lang"), k=10, mode=MODE)
         out = out.select("doc_id", _r6(F.col("score")).alias("score"),
                          F.col("rank").cast("long").alias("rn"))
         out = out.localCheckpoint(eager=True)
@@ -6775,7 +6774,7 @@ def q_okapi_wand_topk(spark, sf_dir):
     rel = okapi_doc_scores(d, k1=OKAPI_K1, b=OKAPI_B, text_col="text",
                            mode=MODE, _persisted_out=handles)
     blocks = build_block_index(rel, span=512)
-    t = blockmax_topk(blocks, qt, k=10, span=512, persist_cand=False)
+    t = blockmax_topk(blocks, qt, k=10, persist_cand=False)
     return t.select(
         "query_id", "doc_id", _r6(F.col("score")).alias("score"),
         F.col("rank").cast("long").alias("rn"),

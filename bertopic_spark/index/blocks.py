@@ -309,14 +309,6 @@ def decode_block_pfor_arrays(payload: bytes, range_start: int):
     return doc_ids, tfs.astype(np.int64), scores
 
 
-CODECS = {
-    "varint": (lambda i, t, s, rs: encode_block(i, t, s, rs),
-               lambda p, rs: decode_block_arrays(p, rs)),
-    "pfor": (lambda i, t, s, rs: encode_block_pfor(i, t, s, rs),
-             lambda p, rs: decode_block_pfor_arrays(p, rs)),
-}
-
-
 def decode_block_arrays(payload: bytes, range_start: int):
     """Decode to numpy arrays (int64 ids, int64 tfs, float64 scores) —
     the zero-copy-ish path the query kernels consume."""
@@ -330,3 +322,11 @@ def decode_block_arrays(payload: bytes, range_start: int):
     scores = np.frombuffer(payload, dtype="<f8", count=n, offset=pos)
     doc_ids = np.cumsum(deltas.astype(np.int64)) + range_start
     return doc_ids, tfs.astype(np.int64), scores
+
+
+# codec name → (encode, decode); the name is what a block payload's
+# format tag records (segments.tag_payload)
+CODECS = {
+    "varint": (encode_block, decode_block_arrays),
+    "pfor": (encode_block_pfor, decode_block_pfor_arrays),
+}

@@ -4,8 +4,11 @@ Spark has no cross-job resume; this is plain bookkeeping (north rule):
 every stage writes a parquet segment dir + ``_MANIFEST.json`` recording
 
   { stage, input_fingerprint, created_utc, rows, bytes,
-    partitions: [{partition_id, rows, bytes, file}],
-    metrics: {...} }
+    partitions: [{file, rows, bytes}], metrics: {...}, schema }
+
+The term-bucketed segment trees (segments.write_tree) are written through
+the same ``write_stage`` and carry the same manifest, with metrics
+{n_buckets, format}; it is all a tree reader needs to know.
 
 Resume = if the manifest exists AND its input fingerprint matches the
 current input, the stage is skipped and its parquet is read back;
@@ -28,6 +31,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+MANIFEST = "_MANIFEST.json"
+
 
 def df_fingerprint(df: DataFrame, cols: list[str] | None = None) -> str:
     """Order/partitioning-insensitive content fingerprint: sum + xor of
@@ -47,8 +52,28 @@ def df_fingerprint(df: DataFrame, cols: list[str] | None = None) -> str:
     return f"n{row['n']}_x{row['x1']}_y{row['x2']}"
 
 
-def _manifest_path(seg_dir: str) -> str:
-    return os.path.join(seg_dir, "_MANIFEST.json")
+def _filesystem(seg_dir: str):
+    """(pyarrow filesystem, root) resolved from a segment URI, so hdfs://
+    and s3a://-style dirs are listed, read and written through the same
+    filesystem Spark wrote to (``open``/``os.walk`` would silently see
+    only the local disk)."""
+    from pyarrow import fs as pafs
+
+    if "://" in seg_dir:
+        uri = seg_dir.replace("s3a://", "s3://")  # pyarrow speaks s3://
+        return pafs.FileSystem.from_uri(uri)
+    return pafs.LocalFileSystem(), os.path.abspath(seg_dir)
+
+
+def read_manifest(seg_dir: str) -> dict:
+    """The ``_MANIFEST.json`` of a stage or tree; FileNotFoundError naming
+    the directory when it has none."""
+    filesystem, root = _filesystem(seg_dir)
+    try:
+        with filesystem.open_input_stream(f"{root}/{MANIFEST}") as f:
+            return json.loads(f.read())
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no {MANIFEST} under {seg_dir!r}") from None
 
 
 def _footer_lineage(seg_dir: str) -> list[dict]:
@@ -56,41 +81,37 @@ def _footer_lineage(seg_dir: str) -> list[dict]:
     re-scan of the data. A full read-back count here was a whole extra
     pass per stage; at 100 TB that pass costs as much as the stage.
 
-    Listing and footer reads go through ``pyarrow.fs`` resolved from the
-    segment URI, so hdfs:// and s3a://-style dirs are walked through the
-    same filesystem Spark wrote to (an os.walk would silently see nothing
-    there and record an empty manifest). Raises if no parquet files are
-    found — an empty manifest is always a bug, never a valid checkpoint.
+    Zero parquet files are a valid (empty) output only next to Spark's
+    ``_SUCCESS`` marker, which is all Spark writes for an empty
+    partitioned frame. A directory with neither raises: an empty manifest
+    there means a wrong filesystem or a failed write, never a checkpoint.
     """
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
-    if "://" in seg_dir:
-        uri = seg_dir.replace("s3a://", "s3://")  # pyarrow speaks s3://
-        filesystem, root = pafs.FileSystem.from_uri(uri)
-    else:
-        filesystem, root = pafs.LocalFileSystem(), os.path.abspath(seg_dir)
+    filesystem, root = _filesystem(seg_dir)
     infos = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
-    parts = []
+    parts, success = [], False
     for info in infos:
-        if info.type != pafs.FileType.File or not info.path.endswith(".parquet"):
+        if info.type != pafs.FileType.File:
+            continue
+        rel = os.path.relpath(info.path, root)
+        success |= rel == "_SUCCESS"
+        if not info.path.endswith(".parquet"):
             continue
         with filesystem.open_input_file(info.path) as f:
             n_rows = pq.ParquetFile(f).metadata.num_rows
-        parts.append({
-            "file": os.path.relpath(info.path, root),
-            "rows": n_rows,
-            "bytes": info.size,
-        })
-    if not parts:
+        parts.append({"file": rel, "rows": n_rows, "bytes": info.size})
+    if not parts and not success:
         raise FileNotFoundError(
-            f"no parquet files under {seg_dir!r} — refusing to write an "
-            "empty lineage manifest (wrong filesystem or failed write?)")
+            f"no parquet files and no _SUCCESS under {seg_dir!r} — refusing "
+            "to write an empty lineage manifest (wrong filesystem or failed "
+            "write?)")
     parts.sort(key=lambda d: d["file"])
     return parts
 
 
-def write_stage(df: DataFrame, seg_dir: str, stage: str, input_fingerprint: str,
+def write_stage(df: DataFrame, seg_dir: str, stage: str, input_fingerprint: str | None,
                 metrics: dict | None = None, partition_cols: list[str] | None = None) -> dict:
     """Materialize a stage to parquet + manifest with per-partition lineage."""
     writer = df.write.mode("overwrite")
@@ -107,22 +128,19 @@ def write_stage(df: DataFrame, seg_dir: str, stage: str, input_fingerprint: str,
         "n_partitions": len(parts),
         "partitions": parts,
         "metrics": metrics or {},
-        # stage schema, so resume reads never depend on file-level schema
-        # inference (all-empty buckets / zero-file dirs can't infer)
+        # stage schema (with its field metadata), so reads never depend on
+        # file-level schema inference (zero-file dirs can't infer)
         "schema": df.schema.jsonValue(),
     }
-    with open(_manifest_path(seg_dir), "w") as f:
-        json.dump(manifest, f, indent=1)
+    filesystem, root = _filesystem(seg_dir)
+    with filesystem.open_output_stream(f"{root}/{MANIFEST}") as f:
+        f.write(json.dumps(manifest, indent=1).encode())
     return manifest
 
 
 def stage_is_complete(seg_dir: str, input_fingerprint: str) -> bool:
-    p = _manifest_path(seg_dir)
-    if not os.path.exists(p):
-        return False
     try:
-        with open(p) as f:
-            m = json.load(f)
+        m = read_manifest(seg_dir)
     except (json.JSONDecodeError, OSError):
         return False
     return m.get("input_fingerprint") == input_fingerprint
@@ -141,8 +159,7 @@ def run_stage(
     from parquet either way, so downstream lineage is cut at the segment)."""
     if not stage_is_complete(seg_dir, input_fingerprint):
         write_stage(compute(), seg_dir, stage, input_fingerprint, metrics, partition_cols)
-    with open(_manifest_path(seg_dir)) as f:
-        schema = json.load(f).get("schema")
+    schema = read_manifest(seg_dir).get("schema")
     reader = spark.read
     if schema is not None:
         from pyspark.sql.types import StructType
@@ -151,11 +168,29 @@ def run_stage(
     return reader.parquet(seg_dir)
 
 
+def derive(parent_fp: str, stage: str, params: str) -> str:
+    """A stage's gate fingerprint, DERIVED rather than re-scanned: every
+    stage is a deterministic function of its input + params, so
+    fp(stage) = hash(fp(input), stage, params). An input change OR a param
+    change for THIS stage flips its own gate (and, through the chain,
+    every downstream gate) exactly as a content re-scan would, without
+    paying a full extra pass per stage — at 100 TB each of those passes
+    costs as much as the stage itself. Content integrity is covered
+    separately: the sha256 per-row invariant at the source, and
+    decode-time structural checks on the blocks."""
+    import hashlib
+
+    return stage[0] + "_" + hashlib.sha256(
+        f"{parent_fp}|{stage}|{params}".encode()).hexdigest()[:24]
+
+
 class IndexBuild:
     """The staged, resumable BM25 index build (north rule end-to-end job).
 
     stages: docids → postings(scored) → blocks; each checkpointed under
     ``root/<stage>/`` with lineage manifests. ``status()`` reports progress.
+    The blocks carry their span and codec in the payload tag, so no reader
+    is told them again.
     """
 
     STAGES = ("docids", "postings", "blocks")
@@ -213,22 +248,6 @@ class IndexBuild:
         fp_corpus = f"n{row['n']}_x{row['x1']}_y{row['x2']}"
         self.timings["invariant_fingerprint"] = round(time.perf_counter() - t0, 3)
 
-        # Downstream stage fingerprints are DERIVED, not re-scanned: every
-        # stage is a deterministic function of its input + params, so each
-        # stage is gated on fp(stage) = hash(fp(input), stage, params) —
-        # an input change OR a param change for THIS stage flips its own
-        # gate (and, through the chain, every downstream gate) exactly as
-        # a content re-scan would, without paying a full extra pass per
-        # stage — at 100 TB each of those passes costs as much as the
-        # stage itself. Content integrity is covered separately: the
-        # sha256 per-row invariant at the source, and decode-time
-        # structural checks on the blocks.
-        def derive(parent_fp: str, stage: str, params: str) -> str:
-            import hashlib
-
-            return stage[0] + "_" + hashlib.sha256(
-                f"{parent_fp}|{stage}|{params}".encode()).hexdigest()[:24]
-
         # The docids artifact is the KEY→ID MAP ONLY — (repo, path, commit,
         # doc_id), ~1-3% of the corpus bytes — never a second copy of the
         # content. At 100 TB duplicating the corpus into the index root
@@ -251,8 +270,7 @@ class IndexBuild:
         # (≤ ~5M docs ≈ a few hundred MB); beyond that fall back to a
         # shuffle join — on a cluster that is one co-partitioned SMJ of
         # map vs corpus, still far cheaper than re-writing the corpus.
-        with open(_manifest_path(self._dir("docids"))) as f:
-            n_map_rows = json.load(f)["rows"]
+        n_map_rows = read_manifest(self._dir("docids"))["rows"]
         if n_map_rows != n_corpus:
             raise ValueError(
                 f"natural key ({', '.join(keys)}) is not unique: "
@@ -270,11 +288,15 @@ class IndexBuild:
                                mode=self.mode),
         )
         self.timings["stage_postings"] = round(time.perf_counter() - t0, 3)
-        fp_blocks = derive(fp_postings, "blocks", f"span={self.span}")
+        # the codec and the payload-tagged "blocks" format are params too,
+        # so blocks checkpointed in another format recompute, never resume
+        codec = "varint"
+        fp_blocks = derive(fp_postings, "blocks",
+                           f"span={self.span},codec={codec},format=blocks")
         t0 = time.perf_counter()
         blocks = run_stage(
             self.spark, self._dir("blocks"), "blocks", fp_blocks,
-            lambda: build_block_index(postings, self.span),
+            lambda: build_block_index(postings, self.span, codec),
         )
         self.timings["stage_blocks"] = round(time.perf_counter() - t0, 3)
         return blocks
@@ -282,14 +304,13 @@ class IndexBuild:
     def status(self) -> dict:
         out = {}
         for s in self.STAGES:
-            p = _manifest_path(self._dir(s))
-            if os.path.exists(p):
-                with open(p) as f:
-                    m = json.load(f)
-                out[s] = {"rows": m["rows"], "bytes": m["bytes"],
-                          "n_partitions": m["n_partitions"]}
-            else:
+            try:
+                m = read_manifest(self._dir(s))
+            except FileNotFoundError:
                 out[s] = None
+                continue
+            out[s] = {"rows": m["rows"], "bytes": m["bytes"],
+                      "n_partitions": m["n_partitions"]}
         return out
 
 

@@ -51,11 +51,10 @@ from pyspark.sql import functions as F
 from bertopic_spark.index.segments import (
     DEFAULT_SPAN,
     N_TERM_BUCKETS,
+    SegmentTree,
     assign_doc_ids,
     build_block_index,
     decode_blocks,
-    read_index_segments,
-    term_bucket,
     verify_content_sha,
     write_index_segments,
 )
@@ -431,24 +430,23 @@ class IncrementalIndex:
             idf = F.log(F.lit(a) / F.col("df") + 1.0)
         return dft.select("term", "df", idf.alias("idf"))
 
+    def _segments(self, g: dict) -> SegmentTree:
+        return SegmentTree(
+            self.spark, os.path.join(self._gen_dir(g["name"]), "segments"),
+            "blocks")
+
     def _pruned_candidates(self, terms: Sequence[str]) -> DataFrame | None:
         """(term, doc_id, tf, tfn32) decoded postings of the query's terms,
-        bucket/term pruning pushed to every generation's scan."""
+        read from only the buckets of each generation's tree that hold
+        them."""
         adds = [g for g in self.manifest["gens"] if g["kind"] == "add"]
         if not adds:
             return None
-        buckets = sorted({term_bucket(t, self.cfg["n_buckets"]) for t in terms})
-        parts = []
-        for g in adds:
-            scan = read_index_segments(
-                self.spark, os.path.join(self._gen_dir(g["name"]), "segments"))
-            parts.append(scan.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))))
+        parts = [self._segments(g).scan(terms) for g in adds]
         blocks = parts[0]
         for p in parts[1:]:
             blocks = blocks.unionByName(p)
-        dec = decode_blocks(blocks, self.cfg["span"])
-        return dec.withColumnRenamed("score", "tfn32")
+        return decode_blocks(blocks).withColumnRenamed("score", "tfn32")
 
     def norms(self) -> DataFrame:
         """(doc_id, doc_len) across add generations (doc ids are disjoint)."""
@@ -551,14 +549,7 @@ class IncrementalIndex:
         if not adds:
             return self.spark.createDataFrame(
                 [], "term string, doc_id long, tf long")
-        parts = [
-            decode_blocks(
-                read_index_segments(
-                    self.spark,
-                    os.path.join(self._gen_dir(g["name"]), "segments")),
-                self.cfg["span"])
-            for g in adds
-        ]
+        parts = [decode_blocks(self._segments(g).scan()) for g in adds]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -1,7 +1,9 @@
 """Positional index segments: the persisted (doc_id, term, pos) relation
-behind phrase / proximity / boolean queries, bucketed exactly like the
-scoring segments (index/segments.py:129) so a query's terms prune to
-≤ |q| directory buckets + parquet term min/max row-group stats.
+behind phrase / proximity / boolean queries, written and read as a
+term-bucketed tree exactly like the scoring segments (segments.write_tree
+and segments.SegmentTree), so a query's terms prune to ≤ |q| directory
+buckets + parquet term min/max row-group stats, and readers take the
+bucket count and block span from the tree itself.
 
 Lucene stores positions next to postings; here they are a SEPARATE parquet
 tree — the scoring path never pays for positions it doesn't read, and the
@@ -17,38 +19,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bertopic_spark.index.segments import N_TERM_BUCKETS, term_bucket
-
-POS_SCHEMA = "doc_id long, term string, pos int, bucket int"
+from bertopic_spark.index.segments import (N_TERM_BUCKETS, SegmentTree,
+                                           payload_format, tag_payload,
+                                           write_tree)
 
 
 def write_positions(positions: DataFrame, path: str,
-                    n_buckets: int = N_TERM_BUCKETS) -> None:
-    """Persist a (doc_id, term, pos) relation partitioned by term bucket,
+                    n_buckets: int = N_TERM_BUCKETS) -> dict:
+    """Persist a (doc_id, term, pos) relation as a "positions" tree,
     sorted by (term, doc_id, pos) within files for row-group pruning and
     run-length-friendly encoding."""
-    out = positions.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    (out.select(F.col("doc_id").cast("long"), "term",
-                F.col("pos").cast("int"), "bucket")
-     .repartition("bucket")
-     .sortWithinPartitions("term", "doc_id", "pos")
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
+    return write_tree(
+        positions.select(F.col("doc_id").cast("long"), "term",
+                         F.col("pos").cast("int")),
+        path, "positions", n_buckets)
 
 
-def read_positions(spark, path: str, terms,
-                   n_buckets: int = N_TERM_BUCKETS) -> DataFrame:
-    """Pruned positional scan for a term set: bucket PartitionFilters are
+def read_positions(spark, path: str, terms) -> DataFrame:
+    """Pruned positional scan for a term set: the tree's buckets are
     computed DRIVER-SIDE (pure-Python XXH64, bit-identical to the writer —
-    no Spark job to plan the scan), term equality pushes to parquet.
-    Explicit schema so an empty index is servable."""
+    no Spark job to plan the scan), term equality pushes to parquet."""
     ts = sorted(set(str(t) for t in terms))
     if not ts:
         raise ValueError("need at least one term")
-    buckets = sorted({term_bucket(t, n_buckets) for t in ts})
-    df = spark.read.schema(POS_SCHEMA).parquet(path)
-    return (df.filter(F.col("bucket").isin(buckets)
-                      & F.col("term").isin(ts))
+    return (SegmentTree(spark, path, "positions").scan(ts)
             .select("doc_id", "term", "pos"))
 
 
@@ -64,9 +58,6 @@ from pyspark.sql.types import BinaryType
 
 from bertopic_spark.index.blocks import (DEFAULT_SPAN, _varint_decode_np,
                                          _varint_encode_np)
-
-POS_BLOCK_SCHEMA = ("term string, blk long, n_docs long, n_pos long, "
-                    "payload binary, bucket int")
 
 
 def encode_pos_block(doc_ids, counts, flat_pos, range_start: int) -> bytes:
@@ -138,31 +129,28 @@ def build_pos_blocks(positions: DataFrame,
                     F.count(F.lit(1)).alias("n_pos"),
                     F.sort_array(F.collect_list(
                         F.struct("doc_id", "pos"))).alias("pl")))
-    return (grouped.withColumn(
-        "payload", enc(F.col("blk"), F.col("pl.doc_id"), F.col("pl.pos")))
+    payload = enc(F.col("blk"), F.col("pl.doc_id"), F.col("pl.pos"))
+    return (grouped.withColumn("payload",
+                               tag_payload(payload, span, "pos_varint"))
             .drop("pl"))
 
 
 def write_pos_segments(blocks: DataFrame, path: str,
-                       n_buckets: int = N_TERM_BUCKETS) -> None:
-    out = blocks.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    (out.repartition("bucket").sortWithinPartitions("term", "blk")
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
+                       n_buckets: int = N_TERM_BUCKETS) -> dict:
+    """Persist ``build_pos_blocks`` output as a "pos_blocks" tree."""
+    return write_tree(blocks, path, "pos_blocks", n_buckets)
 
 
-def read_pos_segments(spark, path: str, terms,
-                      n_buckets: int = N_TERM_BUCKETS,
-                      span: int = DEFAULT_SPAN) -> DataFrame:
-    """Pruned + decoded positional scan: (doc_id, term, pos). Bucket
-    PartitionFilters driver-side, term pushed to parquet, payloads decode
-    in Arrow batches (numpy cumsums, no per-position Python)."""
+def read_pos_segments(spark, path: str, terms) -> DataFrame:
+    """Pruned + decoded positional scan: (doc_id, term, pos). Buckets
+    driver-side, term pushed to parquet, payloads decode in Arrow batches
+    (numpy cumsums, no per-position Python); the span comes from the
+    payload tag."""
     ts = sorted(set(str(t) for t in terms))
     if not ts:
         raise ValueError("need at least one term")
-    buckets = sorted({term_bucket(t, n_buckets) for t in ts})
-    df = (spark.read.schema(POS_BLOCK_SCHEMA).parquet(path)
-          .filter(F.col("bucket").isin(buckets) & F.col("term").isin(ts)))
+    df = SegmentTree(spark, path, "pos_blocks").scan(ts)
+    span, _ = payload_format(df)
 
     def gen(batches):
         for b in batches:
@@ -362,13 +350,12 @@ class IncrementalPositions:
         tombstone set is editorial-sized and broadcasts). Feeds every
         ``*_match_postings`` operator unchanged."""
         adds = [g for g in self.manifest["gens"] if g["kind"] == "add"]
-        nb = self.manifest["config"]["n_buckets"]
         if not adds:
             return self.spark.createDataFrame(
                 [], "doc_id long, term string, pos int")
         parts = [read_positions(
             self.spark, os.path.join(self.root, g["name"], "positions"),
-            terms, nb) for g in adds]
+            terms) for g in adds]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)
@@ -385,9 +372,10 @@ class IncrementalPositions:
         if not adds:
             raise ValueError("nothing to compact")
         nb = self.manifest["config"]["n_buckets"]
-        parts = [self.spark.read.schema(POS_SCHEMA).parquet(
-            os.path.join(self.root, g["name"], "positions"))
-            .select("doc_id", "term", "pos") for g in adds]
+        parts = [SegmentTree(self.spark,
+                             os.path.join(self.root, g["name"], "positions"),
+                             "positions").scan()
+                 .select("doc_id", "term", "pos") for g in adds]
         live = parts[0]
         for p in parts[1:]:
             live = live.unionAll(p)

@@ -16,9 +16,12 @@ Pipeline (SURVEY §4.2):
    payload with per-block max_score/doc-range metadata. Heavy (stop)
    terms split across many (term, blk) groups — the composite key is the
    deterministic skew salt.
-4. segment write — parquet partitioned-by hash bucket of term, plus a
-   JSON manifest with per-partition lineage (rows/terms/bytes) and the
-   corpus fingerprint for resume (checkpoint.py).
+4. segment write — a self-describing tree: parquet partitioned by hash
+   bucket of term, plus the checkpoint manifest (checkpoint.py) with the
+   schema, per-file rows/bytes and {n_buckets, format}. The payload
+   column's field metadata tags the block format {span, codec}, so
+   readers (``SegmentTree``, ``serve_topk``, ``decode_blocks``) take no
+   format arguments.
 
 The per-row invariant (sha256(content) vs source) is asserted in
 ``verify_content_sha`` at build and re-scan time (north rule).
@@ -31,11 +34,12 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import BinaryType, StructType
 
-from bertopic_spark.index.blocks import DEFAULT_SPAN, decode_block_arrays
+from bertopic_spark.index.blocks import CODECS, DEFAULT_SPAN
+from bertopic_spark.index.checkpoint import read_manifest, write_stage
 
 
 def assign_doc_ids(df: DataFrame, order_cols: Sequence[str],
@@ -98,8 +102,6 @@ def build_block_index(scores: DataFrame, span: int = DEFAULT_SPAN,
     block grid, metadata and score stream; only the integer-stream bytes
     differ (content-equality tested, sizes A/B'd in jobs/pfor_ab.py).
     """
-    from bertopic_spark.index.blocks import CODECS
-
     encode_fn = CODECS[codec][0]
     # JVM two-phase agg builds the sorted per-block posting arrays (cheap,
     # partial-agg friendly); field extraction hands the pandas UDF plain
@@ -128,16 +130,126 @@ def build_block_index(scores: DataFrame, span: int = DEFAULT_SPAN,
     )
     return grouped.withColumn(
         "payload",
-        enc(F.col("blk"), F.col("plist.doc_id"), F.col("plist.tf"), F.col("plist.score")),
+        tag_payload(enc(F.col("blk"), F.col("plist.doc_id"), F.col("plist.tf"),
+                        F.col("plist.score")), span, codec),
     ).drop("plist")
 
 
+# ---------------------------------------------------------------------------
+# The term-bucketed tree: one writer, one pruned reader. A tree is a parquet
+# dir partitioned by a hash bucket of the term (write_tree) plus the
+# checkpoint manifest (checkpoint.write_stage): the schema, whose payload
+# field carries the block format tag, per-file rows and bytes, and
+# metrics {n_buckets, format}. Writers are the only place the bucket
+# count, span and codec are set; readers take them from the tree.
+# ---------------------------------------------------------------------------
+
 N_TERM_BUCKETS = 64
+
+# tree format → (row order within a bucket, payload codecs it may carry)
+TREE_FORMATS = {
+    "blocks": (("term", "blk"), tuple(CODECS)),
+    "pos_blocks": (("term", "blk"), ("pos_varint",)),
+    "positions": (("term", "doc_id", "pos"), ()),
+}
+
+
+def tag_payload(payload: Column, span: int, codec: str) -> Column:
+    """The ``payload`` column tagged with its block format. Spark field
+    metadata rides through projections, joins, unions, caching and the
+    parquet footer, so every decoder reads span and codec off the frame."""
+    return payload.alias("payload", metadata={"span": int(span), "codec": codec})
+
+
+def payload_format(df: DataFrame, where: str = "frame") -> tuple[int, str]:
+    """(span, codec) from the payload tag; raises when there is none."""
+    md = df.schema["payload"].metadata if "payload" in df.columns else {}
+    if "span" not in md or "codec" not in md:
+        raise ValueError(
+            f"{where}: payload column carries no format tag {{span, codec}} — "
+            "build blocks with build_block_index / build_pos_blocks")
+    return int(md["span"]), md["codec"]
+
+
+def block_decoder(df: DataFrame):
+    """(span, decode_fn) for the scoring blocks in ``df``."""
+    span, codec = payload_format(df)
+    if codec not in CODECS:
+        raise ValueError(f"payload codec {codec!r} is not a scoring-block codec")
+    return span, CODECS[codec][1]
+
+
+def write_tree(df: DataFrame, path: str, fmt: str, n_buckets: int) -> dict:
+    """Write ``df`` as a ``fmt`` tree of ``n_buckets`` term buckets; returns
+    its manifest. Every tree writer goes through here."""
+    order, codecs = TREE_FORMATS[fmt]
+    if codecs:
+        _, codec = payload_format(df, path)
+        if codec not in codecs:
+            raise ValueError(f"{path}: codec {codec!r} cannot make a {fmt!r} tree")
+    out = df.withColumn(
+        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+    return write_stage(
+        out.repartition("bucket").sortWithinPartitions(*order), path, fmt, None,
+        metrics={"n_buckets": int(n_buckets), "format": fmt},
+        partition_cols=["bucket"])
+
+
+def term_bucket(term: str, n_buckets: int) -> int:
+    """Driver-side bucket id — bit-identical to write_tree's bucket column
+    (verified pure-Python XXH64, no Spark job)."""
+    from bertopic_spark.index.xxh import xxhash64_str
+
+    return xxhash64_str(term) % n_buckets
+
+
+class SegmentTree:
+    """The one reader of a term-bucketed tree, configured by its manifest
+    alone: a tree without a manifest, of an unknown format or of another
+    format than ``fmt`` raises, naming the path.
+
+    ``scan(terms)`` lists nothing: the manifest names the non-empty
+    buckets, so only the query's ``bucket=N`` directories that hold data
+    are handed to the parquet reader (with ``basePath``, so ``bucket``
+    stays a partition column), and parquet term min/max stats prune row
+    groups within them. A query whose buckets are all empty, or an empty
+    tree, reads as an empty frame with the tree's schema.
+    """
+
+    def __init__(self, spark, path: str, fmt: str):
+        m = read_manifest(path)
+        found = m.get("metrics", {}).get("format")
+        if found not in TREE_FORMATS:
+            raise ValueError(f"{path}: unknown tree format {found!r}")
+        if found != fmt:
+            raise ValueError(f"{path}: a {found!r} tree, not a {fmt!r} tree")
+        self.spark, self.path = spark, path.rstrip("/")
+        self.n_buckets = int(m["metrics"]["n_buckets"])
+        self.schema = StructType.fromJson(m["schema"])
+        self.buckets = {int(p["file"].split("/")[0].split("=")[1])
+                        for p in m["partitions"]}
+
+    def buckets_of(self, terms) -> list[int]:
+        """The non-empty buckets that can hold ``terms``."""
+        return sorted({term_bucket(t, self.n_buckets) for t in terms}
+                      & self.buckets)
+
+    def scan(self, terms=None) -> DataFrame:
+        """The whole tree, or only the rows of ``terms``."""
+        reader = self.spark.read.schema(self.schema)
+        if terms is None:
+            return reader.parquet(self.path)
+        buckets = self.buckets_of(terms)
+        if not buckets:
+            return self.spark.createDataFrame([], self.schema)
+        return (reader.option("basePath", self.path)
+                .parquet(*[f"{self.path}/bucket={b}" for b in buckets])
+                .filter(F.col("term").isin(sorted(set(terms)))))
 
 
 def write_index_segments(blocks: DataFrame, path: str,
-                         n_buckets: int = N_TERM_BUCKETS) -> None:
-    """Persist the block index partitioned by a term-hash bucket.
+                         n_buckets: int = N_TERM_BUCKETS) -> dict:
+    """Persist ``build_block_index`` output as a "blocks" tree.
 
     Serving-path layout: a query's terms map to ≤ |q| buckets, so the scan
     prunes to n_buckets⁻¹ of the index per term (directory-level partition
@@ -145,80 +257,26 @@ def write_index_segments(blocks: DataFrame, path: str,
     bucket. At 100 TB this is the difference between touching the whole
     index and touching ~1/64 of it per query term.
     """
-    out = blocks.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    (
-        out.repartition("bucket")
-        .sortWithinPartitions("term", "blk")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    return write_tree(blocks, path, "blocks", n_buckets)
 
 
-# On-disk segment schema (what write_index_segments produces). Reads pass it
-# explicitly so an EMPTY index — zero input docs, or a bucket dir with no
-# files — is servable (schema inference over zero files throws); at 100 TB
-# an empty shard/bucket is routine, not an error.
-BLOCK_SCHEMA = (
-    "term string, blk long, n_docs long, doc_min long, doc_max long, "
-    "max_score double, sum_tf long, payload binary, bucket int"
-)
+def pruned_block_scan(spark, path: str, terms: list[str]) -> DataFrame:
+    """The blocks of ``terms`` in the tree at ``path``, read from only the
+    buckets that hold them. The tree supplies its own bucket count and
+    block format; ``.explain`` shows PushedFilters on term."""
+    return SegmentTree(spark, path, "blocks").scan(terms)
 
 
-def read_index_segments(spark, path: str) -> DataFrame:
-    return spark.read.schema(BLOCK_SCHEMA).parquet(path)
-
-
-def term_bucket(term: str, n_buckets: int = N_TERM_BUCKETS) -> int:
-    """Driver-side bucket id — bit-identical to the writer's
-    pmod(xxhash64(term), n) (verified pure-Python XXH64, no Spark job)."""
-    from bertopic_spark.index.xxh import xxhash64_str
-
-    return xxhash64_str(term) % n_buckets
-
-
-def pruned_block_scan(spark, path: str, terms: list[str],
-                      n_buckets: int = N_TERM_BUCKETS) -> DataFrame:
-    """Read only the buckets/terms a query needs.
-
-    One Hadoop ``globStatus`` over ``bucket={b1,b2,...}`` finds the bucket
-    directories that exist; only those are handed to the reader (with
-    ``basePath`` so ``bucket`` stays a partition column), so a request
-    never lists the other buckets of the tree. ``.explain`` shows
-    PushedFilters on term. A bucket with no directory (no term of the
-    index hashed there) or an empty index reads as an empty frame with
-    ``BLOCK_SCHEMA``; a root that does not exist raises.
-    """
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-    dirs = _bucket_dirs(spark, path, buckets) if buckets else []
-    if not dirs:
-        return spark.createDataFrame([], BLOCK_SCHEMA)
-    df = (spark.read.schema(BLOCK_SCHEMA).option("basePath", path)
-          .parquet(*dirs))
-    return df.filter(F.col("term").isin(list(terms)))
-
-
-def _bucket_dirs(spark, path: str, buckets: list[int]) -> list[str]:
-    """The existing ``path/bucket=N`` directories among ``buckets``."""
-    jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    pattern = "{" + ",".join(str(b) for b in buckets) + "}"
-    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(root, f"bucket={pattern}"))
-    dirs = [st.getPath().toString() for st in (found or [])]
-    if not dirs and not fs.exists(root):
-        raise FileNotFoundError(f"no index segments at {path}")
-    return sorted(dirs)
-
-
-def serve_topk(spark, path: str, query_terms: dict[int, list[str]], k: int = 10,
-               span: int = DEFAULT_SPAN, n_buckets: int = N_TERM_BUCKETS) -> DataFrame:
+def serve_topk(spark, path: str, query_terms: dict[int, list[str]],
+               k: int = 10) -> DataFrame:
     """Low-latency serving path: pruned scan → one shuffle of the
     compressed blocks by query → decode, score and top-k per query in one
     Arrow pass (vs blockmax_topk's multi-phase plan, which wins when the
     candidate set is large; after bucket+term pruning it rarely is).
+
+    The tree at ``path`` carries its own format — bucket count in its
+    manifest, span and codec in the payload tag — so any tree
+    ``write_index_segments`` wrote is served without format arguments.
 
     query_terms: {query_id: [terms]} for a whole batch — one request
     serves the batch in two Spark jobs (scan + shuffle write, then the
@@ -229,17 +287,19 @@ def serve_topk(spark, path: str, query_terms: dict[int, list[str]], k: int = 10,
     (score desc, doc_id asc) order.
     """
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
-    scan = pruned_block_scan(spark, path, all_terms, n_buckets)
-    return _topk_over_scan(scan, query_terms, k, span)
+    return _topk_over_scan(pruned_block_scan(spark, path, all_terms),
+                           query_terms, k)
 
 
 class IndexServer:
     """Warm serving session: pins the segment relation in executor storage
     ONCE and answers every subsequent query from the cache through the
-    same tail as ``serve_topk`` — no parquet listing or footer reads per
-    request. The gain is small: on a 250-file corpus (4-core VM) its p50
-    was 326 ms against 369 ms for the cold path, because at that size
-    per-job Spark overhead, not the listing or the scan, sets the latency.
+    same tail as ``serve_topk`` — no manifest or footer reads per
+    request. Like ``serve_topk`` it takes the bucket count and block
+    format from the tree. The gain is small: on a 250-file corpus (4-core
+    VM) its p50 was 326 ms against 369 ms for the cold path, because at
+    that size per-job Spark overhead, not the listing or the scan, sets
+    the latency.
 
     The cached relation keeps the (bucket, term) sort order from
     ``write_index_segments``, so InMemoryTableScan's per-batch min/max
@@ -252,20 +312,17 @@ class IndexServer:
     released (same lifetime contract as bm25.py / wand.py).
     """
 
-    def __init__(self, spark, path: str, span: int = DEFAULT_SPAN,
-                 n_buckets: int = N_TERM_BUCKETS, eager: bool = True):
-        self.span = span
-        self.n_buckets = n_buckets
-        self.blocks = read_index_segments(spark, path).persist()
-        if eager:
-            self.blocks.count()
+    def __init__(self, spark, path: str):
+        self.tree = SegmentTree(spark, path, "blocks")
+        self.blocks = self.tree.scan().persist()
+        self.blocks.count()
 
     def topk(self, query_terms: dict[int, list[str]], k: int = 10) -> DataFrame:
         all_terms = sorted({t for ts in query_terms.values() for t in ts})
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in all_terms})
         scan = self.blocks.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(all_terms))
-        return _topk_over_scan(scan, query_terms, k, self.span)
+            F.col("bucket").isin(self.tree.buckets_of(all_terms))
+            & F.col("term").isin(all_terms))
+        return _topk_over_scan(scan, query_terms, k)
 
     def close(self) -> None:
         self.blocks.unpersist()
@@ -281,7 +338,7 @@ TOPK_SCHEMA = "query_id long, doc_id long, score double, rank int"
 
 
 def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
-                    k: int, span: int) -> DataFrame:
+                    k: int) -> DataFrame:
     """Shared tail of the serving paths.
 
     The term → query-ids map rides in the plan as one constant, exploded
@@ -292,6 +349,7 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
     only its candidate blocks, so its memory is bounded by the postings
     it scores.
     """
+    span, decode = block_decoder(scan)
     by_term: dict[str, list[int]] = {}
     for qid, ts in sorted(query_terms.items()):
         for t in sorted(set(ts)):
@@ -307,7 +365,7 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
         pdf = pdf.sort_values(["term", "blk"], kind="stable")
         ids, scores = [], []
         for blk, payload in zip(pdf["blk"], pdf["payload"]):
-            i, _, s = decode_block_arrays(bytes(payload), int(blk) * span)
+            i, _, s = decode(bytes(payload), int(blk) * span)
             ids.append(i)
             scores.append(s)
         docs, inv = np.unique(np.concatenate(ids), return_inverse=True)
@@ -324,9 +382,9 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
     return cand.groupBy("query_id").applyInPandas(topk, TOPK_SCHEMA)
 
 
-def decode_blocks(blocks: DataFrame, span: int = DEFAULT_SPAN,
-                  codec: str = "varint") -> DataFrame:
-    """Inverse of build_block_index → (term, doc_id, tf, score) long form.
+def decode_blocks(blocks: DataFrame) -> DataFrame:
+    """Inverse of build_block_index → (term, doc_id, tf, score) long form;
+    span and codec come from the payload tag.
 
     mapInPandas (Arrow batches): one narrow pass, no shuffle.
     """
@@ -339,10 +397,7 @@ def decode_blocks(blocks: DataFrame, span: int = DEFAULT_SPAN,
         StructField("tf", LongType()),
         StructField("score", DoubleType()),
     ])
-
-    from bertopic_spark.index.blocks import CODECS
-
-    decode_fn = CODECS[codec][1]
+    span, decode_fn = block_decoder(blocks)
 
     def gen(batches):
         for pdf in batches:

@@ -27,23 +27,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
-from bertopic_spark.index.blocks import DEFAULT_SPAN
+from bertopic_spark.index.segments import block_decoder
 
 
-def _decode_score(cand: DataFrame, span: int, codec: str = "varint") -> DataFrame:
-    """(query_id, term, blk, payload) → exact (query_id, doc_id, score) sums."""
+def _decode_score(cand: DataFrame) -> DataFrame:
+    """(query_id, term, blk, payload) → exact (query_id, doc_id, score) sums;
+    span and codec come from the payload tag."""
     out_schema = StructType([
         StructField("query_id", LongType()),
         StructField("doc_id", LongType()),
         StructField("score", DoubleType()),
     ])
 
+    span, decode_fn = block_decoder(cand)
+
     def gen(batches):
         import numpy as np
 
-        from bertopic_spark.index.blocks import CODECS
-
-        decode_fn = CODECS[codec][1]
         for pdf in batches:
             qids, dids, scs = [], [], []
             for qid, blk, payload in zip(pdf["query_id"], pdf["blk"], pdf["payload"]):
@@ -68,17 +68,16 @@ def blockmax_topk(
     blocks: DataFrame,
     qterms: DataFrame,
     k: int = 10,
-    span: int = DEFAULT_SPAN,
     seed_buckets: int = 4,
     persist_cand: bool = True,
     _persisted_out: list | None = None,
-    codec: str = "varint",
     stats_out: list | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, rank) — rank-identical to the exhaustive
     scorer; prunes buckets whose block-max upper bound can't reach top-k.
 
-    ``blocks``: build_block_index output (persist it across query batches).
+    ``blocks``: build_block_index output (persist it across query batches);
+    its payload tag supplies the span and codec.
     ``qterms``: (query_id, term) distinct.
 
     Cache lifetime (same contract as bm25.py): the candidate relation feeds
@@ -104,8 +103,7 @@ def blockmax_topk(
     w_ub = Window.partitionBy("query_id").orderBy(F.desc("ub"), F.asc("blk"))
     seed = ub.withColumn("r", F.row_number().over(w_ub)).filter(F.col("r") <= seed_buckets)
     seed_scores = _decode_score(
-        cand.join(seed.select("query_id", "blk"), ["query_id", "blk"]), span, codec
-    )
+        cand.join(seed.select("query_id", "blk"), ["query_id", "blk"]))
     w_seed = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     theta = (
         seed_scores.withColumn("r", F.row_number().over(w_seed))
@@ -128,8 +126,7 @@ def blockmax_topk(
                 F.round((F.col("n_buckets") - nsur) / F.col("n_buckets"),
                         6).alias("skip_rate")))
     final = _decode_score(
-        cand.join(survivors.select("query_id", "blk"), ["query_id", "blk"]), span, codec
-    )
+        cand.join(survivors.select("query_id", "blk"), ["query_id", "blk"]))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         final.withColumn("rank", F.row_number().over(w))

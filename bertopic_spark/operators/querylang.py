@@ -244,9 +244,7 @@ def search_query_indexed(spark, seg_path: str, pos_path: str, q: str,
                          dictionary: DataFrame | None = None,
                          meta: DataFrame | None = None, k: int = 10,
                          id_col: str = "doc_id", mode: str = "ascii_code",
-                         max_expand: int = 1000, n_buckets: int | None = None,
-                         span: int | None = None,
-                         pos_buckets: int | None = None) -> DataFrame:
+                         max_expand: int = 1000) -> DataFrame:
     """The query language served ENTIRELY from persisted index trees — no
     corpus scan: gating clauses read the positional segments
     (bucket-pruned), scoring reads the compressed scoring segments
@@ -257,18 +255,15 @@ def search_query_indexed(spark, seg_path: str, pos_path: str, q: str,
     is required when the query has wildcard/fuzzy clauses; ``meta`` (id +
     metadata columns) is required for field:value clauses. Only the
     query's own terms are ever read: ≤ |clauses|+max_expand postings
-    lists, each pruned to its term-hash bucket.
+    lists, each pruned to its term-hash bucket. Both trees carry their
+    own format (bucket count in the manifest, block span and codec in the
+    payload tag), so the caller passes none.
     """
     from bertopic_spark.index.positions import read_positions
-    from bertopic_spark.index.segments import (DEFAULT_SPAN, N_TERM_BUCKETS,
-                                               decode_blocks,
-                                               pruned_block_scan)
+    from bertopic_spark.index.segments import decode_blocks, pruned_block_scan
     from bertopic_spark.operators.fulltext import (boolean_match_postings,
                                                    phrase_match_postings)
 
-    nb = n_buckets or N_TERM_BUCKETS
-    pb = pos_buckets or nb
-    sp = span or DEFAULT_SPAN
     spec = parse_query(q, mode)
     expansions: list[str] = []
     if spec["wildcards"] or spec["fuzzies"]:
@@ -290,7 +285,7 @@ def search_query_indexed(spark, seg_path: str, pos_path: str, q: str,
 
     gate_terms = sorted({*positive, *spec["must_not"],
                          *(t for p in spec["not_phrases"] for t in p)})
-    pos = read_positions(spark, pos_path, gate_terms, pb)
+    pos = read_positions(spark, pos_path, gate_terms)
     cand = boolean_match_postings(
         pos.select(id_col, "term"), must=spec["must"], should=positive,
         must_not=spec["must_not"], min_should=1,
@@ -309,7 +304,7 @@ def search_query_indexed(spark, seg_path: str, pos_path: str, q: str,
                          .select(id_col), id_col, "leftsemi")
 
     scores = _apply_boosts(
-        decode_blocks(pruned_block_scan(spark, seg_path, positive, nb), sp),
+        decode_blocks(pruned_block_scan(spark, seg_path, positive)),
         spec["boosts"])
     hits = (scores.join(cand, id_col, "leftsemi")
             .groupBy(id_col).agg(F.sum("score").alias("score")))

@@ -89,11 +89,10 @@ def main(argv: list[str] | None = None) -> int:
                for qid in sorted(fq)}
         # one warm batch (plan/codegen), then the measured batch
         serve_topk(spark, f"{args.output}/segments",
-                   dict(list(qts.items())[:8]), k=10,
-                   n_buckets=args.n_buckets).count()
+                   dict(list(qts.items())[:8]), k=10).count()
         t0 = time.perf_counter()
-        n_hits = serve_topk(spark, f"{args.output}/segments", qts, k=10,
-                            n_buckets=args.n_buckets).count()
+        n_hits = serve_topk(spark, f"{args.output}/segments", qts,
+                            k=10).count()
         qdt = time.perf_counter() - t0
         result["query_batch"] = args.query_bench
         result["query_batch_sec"] = round(qdt, 3)

@@ -68,7 +68,7 @@ def build_variant(corpus, order: str, span: int) -> dict:
     ).collect()[0]
     # content fingerprint: decoded postings keyed by the NATURAL key, so the
     # fingerprint is id-assignment-invariant iff the index content is
-    keyed = decode_blocks(blocks, span).join(F.broadcast(id_map), "doc_id")
+    keyed = decode_blocks(blocks).join(F.broadcast(id_map), "doc_id")
     h1 = F.xxhash64(*KEYS, "term", "tf", F.round("score", 9))
     h2 = F.xxhash64(F.lit(23), *KEYS, "term", "tf", F.round("score", 9))
     fp = keyed.select(h1.alias("h1"), h2.alias("h2")).agg(

@@ -45,15 +45,14 @@ def build_variant(scores, codec: str, span: int, qt) -> dict:
     ).collect()[0]
     build_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    fp = (decode_blocks(blocks, span, codec=codec)
+    fp = (decode_blocks(blocks)
           .select(F.xxhash64("doc_id", "term", "tf",
                              F.round("score", 9)).alias("h"))
           .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("s"))
           .collect()[0])
     decode_s = time.perf_counter() - t0
     handles: list = []
-    topk = blockmax_topk(blocks, qt, k=10, span=span, codec=codec,
-                         _persisted_out=handles)
+    topk = blockmax_topk(blocks, qt, k=10, _persisted_out=handles)
     tfp = (topk.select(F.xxhash64("query_id", "doc_id", F.round("score", 9),
                                   "rank").alias("h"))
            .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("s"))

@@ -56,7 +56,7 @@ def main(argv: list[str] | None = None) -> int:
     span = 256  # many buckets at 5k docs so bucket pruning is exercised
     blocks = build_block_index(scores, span).persist()
     bm_stats: list = []
-    blockmax_topk(blocks, qt, k=10, span=span, seed_buckets=4,
+    blockmax_topk(blocks, qt, k=10, seed_buckets=4,
                   stats_out=bm_stats).count()
     print("\n## Block-max WAND bucket skip rates (span=256)\n")
     print("| query_id | n_buckets | n_survivors | n_skipped | skip_rate |")

@@ -16,6 +16,9 @@ deterministic fixture query set is used. Two serving shapes are measured:
   path — ms/query amortizes scheduling),
 * per-query (with --per-query-latency): one job per query against the
   pruned bucket scan (latency path — p50/p99 per north rule).
+
+The segment tree carries its own bucket count and block format, so the
+job takes no format flags.
 """
 
 from __future__ import annotations
@@ -33,8 +36,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--queries", default=None, help="JSON file {query_id: text}")
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--mode", default="ascii_code")
-    p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--span", type=int, default=4096)
     p.add_argument("--output", default=None, help="write results parquet here")
     p.add_argument("--bench-json", default=None)
     p.add_argument("--per-query-latency", action="store_true")
@@ -61,8 +62,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # throughput path: whole batch, one job
     t0 = time.perf_counter()
-    res = serve_topk(spark, seg, qterms, k=args.k,
-                     span=args.span, n_buckets=args.n_buckets)
+    res = serve_topk(spark, seg, qterms, k=args.k)
     if args.output:
         res.write.mode("overwrite").parquet(args.output)
         n_rows = spark.read.parquet(args.output).count()
@@ -82,8 +82,7 @@ def main(argv: list[str] | None = None) -> int:
         lat = []
         for qid in sorted(qterms):
             t0 = time.perf_counter()
-            serve_topk(spark, seg, {qid: qterms[qid]}, k=args.k,
-                       span=args.span, n_buckets=args.n_buckets).collect()
+            serve_topk(spark, seg, {qid: qterms[qid]}, k=args.k).collect()
             lat.append(time.perf_counter() - t0)
         lat.sort()
         out["p50_sec"] = round(statistics.median(lat), 4)

@@ -12,7 +12,8 @@ scan — the deployment shape of operators/querylang.search_query_indexed:
 Wildcard/fuzzy clauses need a term dictionary: pass the build's
 materialized postings stage (--dict-from-postings, zero re-tokenization)
 or a corpus to derive one from (--corpus). field:value clauses need
---meta (a parquet with doc_id + the metadata columns).
+--meta (a parquet with doc_id + the metadata columns). Both trees carry
+their own bucket count and block format, so the job takes no format flags.
 """
 
 from __future__ import annotations
@@ -37,9 +38,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="parquet with doc_id + metadata columns")
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--mode", default="ascii_code")
-    p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--span", type=int, default=4096)
-    p.add_argument("--pos-buckets", type=int, default=None)
     p.add_argument("--output", default=None)
     args = p.parse_args(argv)
 
@@ -65,8 +63,7 @@ def main(argv: list[str] | None = None) -> int:
         t0 = time.perf_counter()
         out = search_query_indexed(
             spark, args.seg, args.pos, q, dictionary=d, meta=meta,
-            k=args.k, mode=args.mode, n_buckets=args.n_buckets,
-            span=args.span, pos_buckets=args.pos_buckets)
+            k=args.k, mode=args.mode)
         rows = out.collect()
         sec = time.perf_counter() - t0
         results.append({"query": q, "sec": round(sec, 4),

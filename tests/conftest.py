@@ -10,7 +10,9 @@ from bertopic_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("bertopic_spark_tests", cpus=8, shuffle_partitions=8)
+    # cores from get_spark's default ($SPARK_GRAFT_CPUS, else all of the
+    # host's), so the session never asks for more threads than cores
+    s = get_spark("bertopic_spark_tests", shuffle_partitions=8)
     yield s
 
 

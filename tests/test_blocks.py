@@ -50,7 +50,7 @@ def test_spark_block_index_roundtrip(spark, corpus_df):
     ).count()
     assert bad == 0
     decoded = {(r["term"], r["doc_id"]): (r["tf"], r["score"])
-               for r in decode_blocks(blocks, span).collect()}
+               for r in decode_blocks(blocks).collect()}
     orig = {(r["term"], r["doc_id"]): (r["tf"], r["score"])
             for r in scores.collect()}
     assert decoded == orig  # lossless including float64 scores

@@ -16,10 +16,10 @@ def root(tmp_path):
     return str(tmp_path / "index")
 
 
-def _decoded(spark, blocks_df, span=4096):
+def _decoded(spark, blocks_df):
     return {
         (r["term"], r["doc_id"]): (r["tf"], round(r["score"], 12))
-        for r in decode_blocks(blocks_df, span).collect()
+        for r in decode_blocks(blocks_df).collect()
     }
 
 
@@ -151,3 +151,55 @@ def test_index_dictionary_matches_live(spark, tmp_path):
     want = {(r.term, r.df) for r in
             term_dictionary(corpus, "content", "doc_id").collect()}
     assert got == want and got
+
+
+def test_empty_partitioned_stage_is_valid(spark, tmp_path):
+    """Spark writes only _SUCCESS for an empty partitioned frame: that is
+    an empty stage (an empty corpus gives an empty, servable tree)."""
+    from bertopic_spark.index.checkpoint import write_stage
+
+    seg = str(tmp_path / "empty")
+    empty = spark.createDataFrame([], "term string, bucket int")
+    m = write_stage(empty, seg, "t", None, partition_cols=["bucket"])
+    assert not any(f.endswith(".parquet") for _, _, fs in os.walk(seg) for f in fs)
+    assert m["rows"] == 0 and m["partitions"] == []
+
+
+def test_no_files_and_no_success_marker_raises(tmp_path):
+    """A directory with neither parquet files nor _SUCCESS is a failed
+    write or the wrong filesystem, never an empty stage."""
+    from bertopic_spark.index.checkpoint import _footer_lineage
+
+    bare = tmp_path / "bare"
+    bare.mkdir()
+    (bare / "stray.txt").write_text("x")
+    with pytest.raises(FileNotFoundError, match="bare"):
+        _footer_lineage(str(bare))
+
+
+def test_pre_tag_blocks_checkpoint_is_not_resumed(spark, tmp_path):
+    """A blocks checkpoint written before the payload tag — gated on the
+    span alone, schema without field metadata — recomputes instead of
+    resuming untagged blocks; the earlier stages still resume."""
+    from bertopic_spark.corpus import load_corpus
+    from bertopic_spark.index.checkpoint import derive, read_manifest
+    from bertopic_spark.index.segments import payload_format
+
+    corpus = load_corpus(spark, n_files=120, seed=42)
+    root = str(tmp_path / "idx")
+    IndexBuild(spark, root).build(corpus)
+    bdir = os.path.join(root, "blocks")
+    postings = read_manifest(os.path.join(root, "postings"))
+    old = read_manifest(bdir)
+    old["input_fingerprint"] = derive(postings["input_fingerprint"], "blocks",
+                                      "span=4096")
+    old["created_utc"] = "2000-01-01T00:00:00Z"
+    for f in old["schema"]["fields"]:
+        f["metadata"] = {}
+    with open(os.path.join(bdir, "_MANIFEST.json"), "w") as f:
+        json.dump(old, f)
+
+    blocks = IndexBuild(spark, root).build(corpus)
+    assert read_manifest(bdir)["created_utc"] != old["created_utc"]
+    assert read_manifest(os.path.join(root, "postings")) == postings
+    assert payload_format(blocks) == (4096, "varint")

@@ -6,6 +6,8 @@ These document the engine's contract at the edges a 100-TB crawl WILL hit
 empty result or a clear error — never a silent wrong answer.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,10 +43,10 @@ def tiny_seg(spark, tmp_path_factory):
 
 def test_empty_query_batch(spark, tiny_seg):
     """Empty batch → empty result with the serving schema, not a crash."""
-    out = serve_topk(spark, tiny_seg, {}, k=5, span=SPAN, n_buckets=4)
+    out = serve_topk(spark, tiny_seg, {}, k=5)
     assert out.count() == 0
     assert set(out.columns) == {"query_id", "doc_id", "score", "rank"}
-    with IndexServer(spark, tiny_seg, span=SPAN, n_buckets=4) as srv:
+    with IndexServer(spark, tiny_seg) as srv:
         assert srv.topk({}, k=5).count() == 0
 
 
@@ -52,9 +54,9 @@ def test_oov_only_query_and_mixed_batch(spark, tiny_seg):
     """A query of only out-of-vocabulary terms returns no rows for that
     query while the rest of the batch is unaffected."""
     oov = {7: ["zzzqx", "notaterm99"]}
-    assert serve_topk(spark, tiny_seg, oov, k=5, span=SPAN, n_buckets=4).count() == 0
+    assert serve_topk(spark, tiny_seg, oov, k=5).count() == 0
     mixed = {1: ["handler_1"], 7: ["zzzqx"]}
-    got = serve_topk(spark, tiny_seg, mixed, k=5, span=SPAN, n_buckets=4).collect()
+    got = serve_topk(spark, tiny_seg, mixed, k=5).collect()
     assert {r["query_id"] for r in got} == {1}
 
 
@@ -76,8 +78,6 @@ def test_query_on_absent_buckets(spark, sparse_seg):
     """Terms whose buckets have no directory read as an empty scan: the
     query returns no rows with the serving schema, and a mixed batch still
     answers its other queries, cold and warm."""
-    import os
-
     from bertopic_spark.index.segments import term_bucket
 
     present = {int(d.split("=")[1]) for d in os.listdir(sparse_seg)
@@ -86,18 +86,111 @@ def test_query_on_absent_buckets(spark, sparse_seg):
     absent = [t for t in (f"nowhere{i}" for i in range(200))
               if term_bucket(t, 64) not in present][:2]
     assert len(absent) == 2
-    out = serve_topk(spark, sparse_seg, {7: absent}, k=5, span=SPAN, n_buckets=64)
+    out = serve_topk(spark, sparse_seg, {7: absent}, k=5)
     assert out.count() == 0
     assert set(out.columns) == {"query_id", "doc_id", "score", "rank"}
     mixed = {1: ["handler_1"], 2: ["widget_2", absent[0]], 7: absent}
-    cold = serve_topk(spark, sparse_seg, mixed, k=5, span=SPAN, n_buckets=64)
-    with IndexServer(spark, sparse_seg, span=SPAN, n_buckets=64) as srv:
+    cold = serve_topk(spark, sparse_seg, mixed, k=5)
+    with IndexServer(spark, sparse_seg) as srv:
         warm = srv.topk(mixed, k=5).collect()
     for got in (cold.collect(), warm):
         by_q = {}
         for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
             by_q.setdefault(r["query_id"], []).append(r["doc_id"])
         assert by_q == {1: [1], 2: [2, 5, 8, 11, 14]}
+
+
+@pytest.fixture(scope="module")
+def seg16(spark, tmp_path_factory):
+    """The 20-doc tiny corpus as a 16-bucket tree (the readers' old
+    default was 64), with its scored postings for the oracle."""
+    rows = [
+        ("r", f"f{i}.py", "c0", f"def handler_{i}(): return widget_{i % 3}", i)
+        for i in range(20)
+    ]
+    scores = doc_scores(spark.createDataFrame(rows, CORPUS_SCHEMA),
+                        mode="ascii_code").persist()
+    path = str(tmp_path_factory.mktemp("seg16") / "seg")
+    write_index_segments(build_block_index(scores, SPAN), path, n_buckets=16)
+    yield path, scores
+    scores.unpersist()
+
+
+def test_tree_serves_with_its_own_bucket_count(spark, seg16):
+    """A 16-bucket tree read with no format arguments returns the full
+    answer: serve_topk, IndexServer.topk and pruned_block_scan take the
+    bucket count from the manifest and the span from the payload tag."""
+    from bertopic_spark.index.segments import pruned_block_scan
+    from bertopic_spark.operators.bm25 import bm25_topk
+
+    path, scores = seg16
+    qts = {i: [f"handler_{i}", f"widget_{i % 3}"] for i in range(8)}
+    qts[10] = ["def", "return"]
+    qt = spark.createDataFrame(
+        [(q, t) for q, ts in qts.items() for t in ts], "query_id long, term string")
+
+    def ranked(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"]))
+        return {q: sorted(v) for q, v in out.items()}
+
+    want = ranked(bm25_topk(scores, qt, k=5))
+    assert set(want) == set(qts)
+    with IndexServer(spark, path) as srv:
+        warm = ranked(srv.topk(qts, k=5))
+    for got in (ranked(serve_topk(spark, path, qts, k=5)), warm):
+        assert set(got) == set(want)
+        for q in want:
+            assert [(r, d) for r, d, _ in got[q]] == [(r, d) for r, d, _ in want[q]], q
+            for (_, _, gs), (_, _, ws) in zip(got[q], want[q]):
+                assert gs == pytest.approx(ws, abs=1e-12)
+    terms = sorted({t for ts in qts.values() for t in ts})
+    scanned = {(r["term"], r["blk"]) for r in
+               pruned_block_scan(spark, path, terms).collect()}
+    stored = {(r["term"], r["blk"]) for r in spark.read.parquet(path)
+              .filter(F.col("term").isin(terms)).collect()}
+    assert scanned == stored and len({t for t, _ in scanned}) == len(terms)
+
+
+def test_tree_misuse_raises_naming_the_path(spark, seg16, tmp_path):
+    """A tree without a manifest, a blocks frame without the payload tag
+    and a manifest of an unknown format each fail loudly."""
+    import json
+    import shutil
+
+    from bertopic_spark.index.positions import read_positions
+    from bertopic_spark.index.segments import decode_blocks
+
+    path, _ = seg16
+    bare = str(tmp_path / "no_manifest")
+    shutil.copytree(path, bare)
+    os.remove(os.path.join(bare, "_MANIFEST.json"))
+    with pytest.raises(FileNotFoundError, match="no_manifest"):
+        serve_topk(spark, bare, {0: ["def"]}, k=5)
+
+    untagged = spark.createDataFrame(
+        [("def", 0, 1, 0, 0, 1.0, 1, bytearray(b"\x01\x00\x01"))],
+        "term string, blk long, n_docs long, doc_min long, doc_max long, "
+        "max_score double, sum_tf long, payload binary")
+    with pytest.raises(ValueError, match="untagged"):
+        write_index_segments(untagged, str(tmp_path / "untagged"))
+    with pytest.raises(ValueError, match="no format tag"):
+        decode_blocks(untagged)
+
+    odd = str(tmp_path / "odd_format")
+    shutil.copytree(path, odd)
+    mpath = os.path.join(odd, "_MANIFEST.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["metrics"]["format"] = "blocks-v0"
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="odd_format.*unknown tree format"):
+        serve_topk(spark, odd, {0: ["def"]}, k=5)
+    with pytest.raises(ValueError, match="a 'blocks' tree"):
+        read_positions(spark, path, ["def"])
 
 
 def test_null_content_rows_drop_from_postings(spark):
@@ -120,7 +213,7 @@ def test_empty_corpus_builds_empty_index(spark, tmp_path):
     assert scores.count() == 0
     path = str(tmp_path / "seg")
     write_index_segments(build_block_index(scores, SPAN), path, n_buckets=4)
-    out = serve_topk(spark, path, {0: ["alpha"]}, k=5, span=SPAN, n_buckets=4)
+    out = serve_topk(spark, path, {0: ["alpha"]}, k=5)
     assert out.count() == 0
 
 

@@ -1,7 +1,7 @@
 """PFor-delta posting-block codec (index/blocks.py): exact roundtrip,
 byte-level edge cases (width 0, width 64, exception patches), content
 equality with the varint codec, and the codec seam through
-build_block_index / decode_blocks / blockmax_topk."""
+build_block_index / decode_blocks / blockmax_topk / serve_topk."""
 
 import numpy as np
 import pytest
@@ -73,28 +73,56 @@ def test_pfor_beats_varint_on_gap_profiles():
         assert len(_pfor_encode_np(v)) < len(_varint_encode_np(v)), name
 
 
-def test_codec_seam_end_to_end(spark):
+def _ranked(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], r["score"]))
+    return {q: sorted(v) for q, v in out.items()}
+
+
+def test_codec_seam_end_to_end(spark, tmp_path):
+    """Both codecs decode to the same postings and rank identically through
+    blockmax_topk and, written as a segment tree, through serve_topk —
+    whose answer matches bm25_topk rank for rank. No reader is told the
+    codec: it rides in the payload tag."""
     from bertopic_spark.corpus import fixture_queries, load_corpus
-    from bertopic_spark.index.segments import build_block_index, decode_blocks
+    from bertopic_spark.index.segments import (build_block_index,
+                                               decode_blocks, serve_topk,
+                                               write_index_segments)
     from bertopic_spark.index.wand import blockmax_topk
-    from bertopic_spark.operators.bm25 import (doc_scores, queries_df,
-                                               query_terms)
+    from bertopic_spark.operators.bm25 import (bm25_topk, doc_scores,
+                                               queries_df, query_terms)
+    from bertopic_spark.tokenizer import tokenize_one
 
     corpus = load_corpus(spark, n_files=300)
     scores = doc_scores(corpus, text_col="content", id_col="doc_id").persist()
-    qt = query_terms(queries_df(spark, fixture_queries(5)), "ascii_code")
+    fq = fixture_queries(5)
+    qt = query_terms(queries_df(spark, fq), "ascii_code")
+    qts = {q: sorted(set(tokenize_one(fq[q], "ascii_code"))) for q in fq}
+    want = _ranked(bm25_topk(scores, qt, k=5))
     outs = {}
     for codec in ("varint", "pfor"):
         blocks = build_block_index(scores, span=64, codec=codec).persist()
-        dec = decode_blocks(blocks, span=64, codec=codec)
+        seg = str(tmp_path / codec)
+        write_index_segments(blocks, seg, n_buckets=16)
         outs[codec] = {
-            "content": sorted(map(tuple, dec.collect())),
+            "content": sorted(map(tuple, decode_blocks(blocks).collect())),
             "topk": sorted(map(tuple, blockmax_topk(
-                blocks, qt, k=5, span=64, codec=codec,
-                persist_cand=False).collect())),
+                blocks, qt, k=5, persist_cand=False).collect())),
+            "served": _ranked(serve_topk(spark, seg, qts, k=5)),
         }
         blocks.unpersist()
     scores.unpersist()
     assert outs["varint"]["content"] == outs["pfor"]["content"]
     assert outs["varint"]["topk"] == outs["pfor"]["topk"]
     assert len(outs["varint"]["content"]) > 0
+    assert want
+    for codec, out in outs.items():
+        got = out["served"]
+        assert set(got) == set(want), codec
+        for q in want:
+            assert ([(r, d) for r, d, _ in got[q]]
+                    == [(r, d) for r, d, _ in want[q]]), (codec, q)
+            for (_, _, gs), (_, _, ws) in zip(got[q], want[q]):
+                assert gs == pytest.approx(ws, abs=1e-12)

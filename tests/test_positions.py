@@ -30,19 +30,18 @@ def pos_path(spark, docs, tmp_path_factory):
 def test_roundtrip_and_pruned_serving(spark, docs, pos_path):
     live = doc_term_positions(docs, "text", "doc_id",
                               terms=["customer", "order"])
-    stored = read_positions(spark, pos_path, ["customer", "order"],
-                            n_buckets=16)
+    stored = read_positions(spark, pos_path, ["customer", "order"])
     assert {tuple(r) for r in stored.collect()} == \
            {tuple(r) for r in live.collect()}
     # phrase + proximity over the stored index == scan paths
     ph = phrase_match_postings(
-        read_positions(spark, pos_path, ["customer", "stream"], 16),
+        read_positions(spark, pos_path, ["customer", "stream"]),
         ["customer", "stream"])
     assert {tuple(r) for r in ph.collect()} == \
            {tuple(r) for r in phrase_match(docs, "customer stream",
                                            "text").collect()}
     px = proximity_match_postings(
-        read_positions(spark, pos_path, ["customer", "order"], 16),
+        read_positions(spark, pos_path, ["customer", "order"]),
         ["customer", "order"], 12)
     assert {tuple(r) for r in px.collect()} == \
            {tuple(r) for r in proximity_match(docs, ["customer", "order"],
@@ -50,11 +49,11 @@ def test_roundtrip_and_pruned_serving(spark, docs, pos_path):
 
 
 def test_scan_is_pruned(spark, pos_path):
-    plan = read_positions(spark, pos_path, ["customer"], 16) \
+    plan = read_positions(spark, pos_path, ["customer"]) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
     with pytest.raises(ValueError):
-        read_positions(spark, pos_path, [], 16)
+        read_positions(spark, pos_path, [])
 
 
 from bertopic_spark.index.positions import (build_pos_blocks,
@@ -91,12 +90,12 @@ def test_compressed_pos_segments_serve_phrase(spark, docs, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("posblk") / "posseg")
     write_pos_segments(build_pos_blocks(live, span=256), path, n_buckets=16)
     terms = ["customer", "stream"]
-    stored = read_pos_segments(spark, path, terms, n_buckets=16, span=256)
+    stored = read_pos_segments(spark, path, terms)
     want = {tuple(r) for r in doc_term_positions(
         docs, "text", "doc_id", terms=terms).collect()}
     assert {tuple(r) for r in stored.collect()} == want
     ph = phrase_match_postings(
-        read_pos_segments(spark, path, terms, 16, 256), terms)
+        read_pos_segments(spark, path, terms), terms)
     assert {tuple(r) for r in ph.collect()} == \
            {tuple(r) for r in phrase_match(docs, "customer stream",
                                            "text").collect()}

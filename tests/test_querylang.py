@@ -117,8 +117,7 @@ def test_indexed_search_equals_scan_path(spark, docs, tmp_path_factory):
         got = [(r.doc_id, round(r.score, 9), r["rank"])
                for r in search_query_indexed(
                    spark, seg, posp, q, dictionary=d,
-                   meta=docs.select("doc_id", "lang"), k=5,
-                   n_buckets=16, span=256, pos_buckets=16).collect()]
+                   meta=docs.select("doc_id", "lang"), k=5).collect()]
         want = [(r.doc_id, round(r.score, 9), r["rank"])
                 for r in search_query(docs, q, k=5, text_col="text").collect()]
         assert got == want and got, q
@@ -185,8 +184,7 @@ class TestFuzzIndexedParity:
             q = " ".join(parts)
             got = [(r.doc_id, round(r.score, 9), r["rank"])
                    for r in search_query_indexed(
-                       spark, seg, posp, q, dictionary=d, k=5,
-                       n_buckets=16, span=256, pos_buckets=16).collect()]
+                       spark, seg, posp, q, dictionary=d, k=5).collect()]
             want = [(r.doc_id, round(r.score, 9), r["rank"])
                     for r in search_query(docs, q, k=5,
                                           text_col="text").collect()]

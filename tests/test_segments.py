@@ -38,7 +38,7 @@ def test_xxhash64_matches_spark(spark):
 
 def test_bucket_layout_pruned_scan(spark, seg_path):
     path, scores = seg_path
-    sc = pruned_block_scan(spark, path, ["the", "license"], n_buckets=16)
+    sc = pruned_block_scan(spark, path, ["the", "license"])
     terms = {r["term"] for r in sc.select("term").distinct().collect()}
     assert terms <= {"the", "license"} and terms
     plan = sc._jdf.queryExecution().executedPlan().toString()
@@ -54,7 +54,7 @@ def test_serve_topk_rank_identical(spark, corpus_df, seg_path):
     fq = fixture_queries(20)
     qts = {qid: sorted(set(tokenize_one(fq[qid], "ascii_code"))) for qid in sorted(fq)}
     got = {}
-    for r in serve_topk(spark, path, qts, k=10, span=SPAN, n_buckets=16).collect():
+    for r in serve_topk(spark, path, qts, k=10).collect():
         got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
     qt = query_terms(queries_df(spark, fq), "ascii_code")
     want = {}
@@ -86,9 +86,9 @@ def test_index_server_matches_cold_path_and_releases_cache(spark, seg_path):
                 (r["rank"], r["doc_id"], round(r["score"], 9)))
         return {q: sorted(v) for q, v in out.items()}
 
-    cold = rel(serve_topk(spark, path, qts, k=10, span=SPAN, n_buckets=16))
+    cold = rel(serve_topk(spark, path, qts, k=10))
     n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with IndexServer(spark, path, span=SPAN, n_buckets=16) as srv:
+    with IndexServer(spark, path) as srv:
         warm = rel(srv.topk(qts, k=10))
         # single-query serve against the cache too
         one = rel(srv.topk({0: qts[0]}, k=10))
@@ -141,7 +141,7 @@ def test_serve_topk_fanout_repeats_and_ties(spark, tie_seg):
     cut = [q for q, v in full.items() if len(v) > k and v[k - 1][2] == v[k][2]]
     assert 0 in cut
     want = {q: v[:k] for q, v in full.items()}
-    got = ranked(serve_topk(spark, path, qts, k=k, span=4, n_buckets=16))
+    got = ranked(serve_topk(spark, path, qts, k=k))
     assert set(got) == set(want)
     for q in want:
         assert [(r, d) for r, d, _ in got[q]] == [(r, d) for r, d, _ in want[q]], q
@@ -159,7 +159,7 @@ def test_pruned_scan_reads_only_query_buckets(spark, tie_seg):
     path, _ = tie_seg
     terms = ["alpha", "zeta"]
     want = {term_bucket(t, 16) for t in terms}
-    sc = pruned_block_scan(spark, path, terms, n_buckets=16)
+    sc = pruned_block_scan(spark, path, terms)
     leaves = sc._jdf.queryExecution().executedPlan().collectLeaves()
     roots = []
     for i in range(leaves.size()):

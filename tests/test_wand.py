@@ -30,7 +30,7 @@ def _collect(df):
 def test_rank_identical_to_exhaustive(spark, setup):
     scores, blocks, qt = setup
     want = _collect(bm25_topk(scores, qt, k=10))
-    got = _collect(blockmax_topk(blocks, qt, k=10, span=SPAN, seed_buckets=2))
+    got = _collect(blockmax_topk(blocks, qt, k=10, seed_buckets=2))
     assert set(got) == set(want)
     for q in want:
         assert [(r, d) for r, d, _ in got[q]] == [(r, d) for r, d, _ in want[q]], q
@@ -44,7 +44,7 @@ def test_stats_counters_consistent_on_fixture(spark, setup):
     skip>0 assertion lives on the skewed fixture below)."""
     scores, blocks, qt = setup
     stats = []
-    out = blockmax_topk(blocks, qt, k=10, span=SPAN, seed_buckets=2,
+    out = blockmax_topk(blocks, qt, k=10, seed_buckets=2,
                         stats_out=stats)
     out.count()  # materialize alongside the stats relation
     rows = stats[0].collect()
@@ -69,7 +69,7 @@ def test_pruning_actually_prunes(spark):
                                "query_id long, term string")
     stats = []
     got = sorted((r.rank, r.doc_id) for r in
-                 blockmax_topk(blocks, qt, k=10, span=SPAN, seed_buckets=2,
+                 blockmax_topk(blocks, qt, k=10, seed_buckets=2,
                                stats_out=stats).collect())
     exact = sorted((r.rank, r.doc_id) for r in
                    bm25_topk(sc, qt, k=10).collect())
@@ -96,13 +96,13 @@ def test_serve_loop_does_not_leak_cached_relations(spark, setup):
 
     # warm-up batch so lazy setup caches (fixtures) are counted in base
     handles = []
-    blockmax_topk(blocks, qt5, k=5, span=SPAN, _persisted_out=handles).count()
+    blockmax_topk(blocks, qt5, k=5, _persisted_out=handles).count()
     for h in handles:
         h.unpersist(blocking=True)
     base = n_cached()
     for _ in range(50):
         handles = []
-        blockmax_topk(blocks, qt5, k=5, span=SPAN, _persisted_out=handles).count()
+        blockmax_topk(blocks, qt5, k=5, _persisted_out=handles).count()
         for h in handles:
             h.unpersist(blocking=True)
     assert n_cached() == base
