@@ -1680,8 +1680,10 @@ def q_common_terms_topk(spark, sf_dir):
     d = _docs(spark, sf_dir)
     scores = doc_scores(d, text_col="text",
                         id_col="doc_id", mode=MODE, _persisted_out=handles)
-    # N from the parquet metadata count — skips the operator's fallback
-    # count_distinct shuffle over the postings (its widest job)
+    # N = every row of documents (Lucene's maxDoc, token-empty docs
+    # included), from the parquet metadata count — skips the operator's
+    # fallback count_distinct shuffle over the postings (its widest job);
+    # the oracle's nd CTE counts the same rows
     t = common_terms_topk(scores, qt, k=10, max_df=0.78, n_docs=d.count())
     return t.select(
         "query_id", "doc_id", _r6(F.col("score")).alias("score"),
@@ -1691,8 +1693,8 @@ def q_common_terms_topk(spark, sf_dir):
 
 SQL_COMMON_TERMS = f"""WITH {_TOKS}, {_XDOC}, {_scores_sql('xdoc', 'doc_id', True, False)},
 dfr AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM scores GROUP BY term),
-nd AS (SELECT CAST(ceil(0.78 * count(DISTINCT doc_id)) AS BIGINT) AS cutoff
-       FROM scores),
+nd AS (SELECT CAST(ceil(0.78 * count(*)) AS BIGINT) AS cutoff
+       FROM documents),
 q(query_id, term) AS (VALUES {_query_term_values()}),
 qd AS (SELECT q.query_id, q.term,
               coalesce(dfr.df, 0) <= nd.cutoff AS is_rare
@@ -3855,20 +3857,28 @@ SELECT id_a, id_b, round(cos, 6) AS cos FROM sims
 WHERE cos >= {NEARDUP_THRESHOLD}"""
 
 
-def q_embedding_neardup_lsh(spark, sf_dir):
+# a (table, bucket) holding more vectors than this pairs none of them
+NEARDUP_LSH_MAX_BUCKET = 4096
+
+
+def q_embedding_neardup_lsh(spark, sf_dir,
+                            max_bucket: int = NEARDUP_LSH_MAX_BUCKET):
     """The SCALE path for embedding near-dup (dedup.embedding_neardup_
     lsh_pairs): candidates from collisions in any of 8 six-bit sign-LSH
     tables, exact cosine verification ≥ threshold — no crossJoin, full
     table (no slice needed). The oracle SQL replays the identical
-    md5-derived hyperplanes, so the match is exact despite LSH."""
+    md5-derived hyperplanes and the same oversized-bucket cap, so the
+    match is exact despite LSH."""
     from bertopic_spark.operators.dedup import embedding_neardup_lsh_pairs
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return embedding_neardup_lsh_pairs(emb, threshold=NEARDUP_THRESHOLD)
+    return embedding_neardup_lsh_pairs(emb, threshold=NEARDUP_THRESHOLD,
+                                       max_bucket=max_bucket)
 
 
 def _sql_embedding_neardup_lsh(n_planes: int = 6, n_tables: int = 8,
-                               seed: int = 42) -> str:
+                               seed: int = 42,
+                               max_bucket: int = NEARDUP_LSH_MAX_BUCKET) -> str:
     return f"""WITH {_SQL_COS_CORE},
 coeff AS (
   SELECT p.plane, d.dim,
@@ -3881,9 +3891,13 @@ rbuckets AS (
   SELECT vec_id, plane // {n_planes} AS tbl,
          CAST(sum(CASE WHEN s > 0 THEN 1 << (plane % {n_planes}) ELSE 0 END) AS BIGINT) AS bucket
   FROM ps GROUP BY vec_id, plane // {n_planes}),
+kept AS MATERIALIZED (
+  SELECT vec_id, tbl, bucket FROM (
+    SELECT *, count(*) OVER (PARTITION BY tbl, bucket) AS m FROM rbuckets)
+  WHERE m <= {max_bucket}),
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM rbuckets a JOIN rbuckets b
+  FROM kept a JOIN kept b
     ON b.tbl = a.tbl AND b.bucket = a.bucket AND a.vec_id < b.vec_id),
 dots AS (
   SELECT c.id_a, c.id_b, sum(x.val * y.val) AS dot

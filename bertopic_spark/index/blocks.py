@@ -1,5 +1,7 @@
-"""Compressed posting blocks: delta + varint doc-ids, varint tfs,
-float32 scores, per-block max-score / doc-range metadata (north rule).
+"""Compressed posting blocks: delta + varint doc-ids, varint tfs, one
+float64 value per posting (the score in a "blocks" tree, the document
+length in an incremental generation's "gen_blocks" tree), per-block
+max-value / doc-range metadata (north rule).
 
 Layout decision for 100 TB: blocks are keyed by (term, doc_id // SPAN) —
 doc-id-RANGE aligned, not fixed-count. Rationale:

@@ -65,15 +65,36 @@ def _filesystem(seg_dir: str):
     return pafs.LocalFileSystem(), os.path.abspath(seg_dir)
 
 
-def read_manifest(seg_dir: str) -> dict:
-    """The ``_MANIFEST.json`` of a stage or tree; FileNotFoundError naming
-    the directory when it has none."""
+def read_manifest(seg_dir: str, name: str = MANIFEST) -> dict:
+    """The ``name`` manifest (``_MANIFEST.json`` of a stage or tree by
+    default) under ``seg_dir``; FileNotFoundError naming the directory
+    when it has none."""
     filesystem, root = _filesystem(seg_dir)
     try:
-        with filesystem.open_input_stream(f"{root}/{MANIFEST}") as f:
+        with filesystem.open_input_stream(f"{root}/{name}") as f:
             return json.loads(f.read())
     except FileNotFoundError:
-        raise FileNotFoundError(f"no {MANIFEST} under {seg_dir!r}") from None
+        raise FileNotFoundError(f"no {name} under {seg_dir!r}") from None
+
+
+def write_manifest(seg_dir: str, manifest: dict, name: str = MANIFEST) -> None:
+    """Write ``manifest`` as ``seg_dir/name`` through the directory's own
+    filesystem: to a temp file first, then moved over the old one (a
+    rename on a local disk), so a reader never sees half a manifest."""
+    filesystem, root = _filesystem(seg_dir)
+    filesystem.create_dir(root, recursive=True)
+    with filesystem.open_output_stream(f"{root}/{name}.tmp") as f:
+        f.write(json.dumps(manifest, indent=1).encode())
+    filesystem.move(f"{root}/{name}.tmp", f"{root}/{name}")
+
+
+def remove_dir(seg_dir: str) -> None:
+    """Delete ``seg_dir`` and everything under it, if it exists."""
+    filesystem, root = _filesystem(seg_dir)
+    try:
+        filesystem.delete_dir(root)
+    except FileNotFoundError:
+        pass
 
 
 def _footer_lineage(seg_dir: str) -> list[dict]:
@@ -132,9 +153,7 @@ def write_stage(df: DataFrame, seg_dir: str, stage: str, input_fingerprint: str 
         # file-level schema inference (zero-file dirs can't infer)
         "schema": df.schema.jsonValue(),
     }
-    filesystem, root = _filesystem(seg_dir)
-    with filesystem.open_output_stream(f"{root}/{MANIFEST}") as f:
-        f.write(json.dumps(manifest, indent=1).encode())
+    write_manifest(seg_dir, manifest)
     return manifest
 
 
@@ -199,7 +218,8 @@ class IndexBuild:
                  mode: str = "ascii_code"):
         self.spark, self.root, self.span, self.mode = spark, root, span, mode
         self.timings: dict[str, float] = {}
-        os.makedirs(root, exist_ok=True)
+        filesystem, path = _filesystem(root)
+        filesystem.create_dir(path, recursive=True)
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)

@@ -4,74 +4,79 @@ generations, rank-identical to a full rebuild.
 The reference rebuilds its model from scratch on new data (BERTopic's
 ``partial_fit`` recomputes c-TF-IDF over accumulated counts,
 ``_bertopic.py:703-760``); a 100-TB index cannot. This module is the
-engine's Lucene-shaped answer — and it falls out of the scoring algebra:
+engine's Lucene-shaped answer, and it falls out of the scoring algebra:
 
     score(doc, term) = (tf / doc_len) * idf(term)        (operators/ctfidf.py)
 
-The per-doc factor ``tfn = tf/doc_len`` never changes when OTHER documents
-are added or removed; only the tiny per-term ``idf`` table does (df and the
+A document's own tf and doc_len never change when OTHER documents are
+added or removed; only the small per-term ``idf`` table does (df and the
 int-truncated average length A are corpus-global). So:
 
-* every **add generation** stores idf-FREE postings — the payload's score
-  slot holds tfn (float32, a valid per-block max for future pruning) — plus
-  a ``norms`` sidecar (doc_id, doc_len; Lucene's .nvd) for exact float64
-  rescoring, and a per-term stats relation (term, df = Σtf).
+* every **add generation** stores idf-free postings as a "gen_blocks"
+  tree: the payload carries (doc id, tf) and, in its float64 value slot,
+  the document length (Lucene keeps norms in .nvd; here they ride the
+  block). Beside it sit a per-term stats relation (term, df = Σtf,
+  n_docs = documents holding the term) and a ``norms`` sidecar
+  (doc_id, doc_len) for the id-collision check and ``changes_between``.
 * every **delete generation** stores the tombstoned doc_ids plus the same
   stats relation computed over the deleted docs — a NEGATIVE delta.
 * at query time the merged statistics are one signed sum over the per-gen
   stats (pruned to the query's terms, pushed to the parquet scan) and a
-  driver-side sum of per-gen scalar counters; the merged idf is a
-  broadcast-joined table exactly as in the one-shot path. Result: top-k
-  over (adds − deletes) is bit-near-identical (float64 throughout on the
-  exact path) to rebuilding the index over the surviving documents.
+  driver-side sum of per-gen scalar counters. Spark computes each query
+  term's idf from them, and the idf table and the tombstones go to the
+  same top-k kernel that serves batch trees (segments._topk_over_scan),
+  which scores every posting from its tf and doc length in float64, in
+  the operation order of the one-shot scorers. Top-k over
+  (adds − deletes) therefore matches a rebuild over the surviving
+  documents.
 
 At 100 TB: an append touches only the new documents (one tokenize pass, one
 (term, blk) shuffle over the NEW postings); a delete tokenizes only the
 deleted documents; nothing ever rewrites existing segments until
 ``compact()`` — which is itself a single decode→filter→re-encode pass with
-no retokenization (doc_len is recovered exactly as Σtf over each doc's
-decoded postings, so compaction never needs the original corpus).
+no retokenization (each posting carries its document's length), so
+compaction never needs the original corpus.
 
 Crash safety: generation directories are written first and the root
-manifest (``gens.json``) is swapped last via atomic rename; a crashed
-append/delete leaves an unreferenced directory, never a half-visible
-generation (same contract as checkpoint.py's stage manifests).
+manifest (``gens.json``) is swapped last by a temp-file move, through the
+root's own filesystem (a local path or a URI); a crashed append/delete
+leaves an unreferenced directory, never a half-visible generation (same
+contract as checkpoint.py's stage manifests).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 from typing import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bertopic_spark.index.checkpoint import (read_manifest, remove_dir,
+                                             write_manifest)
 from bertopic_spark.index.segments import (
     DEFAULT_SPAN,
     N_TERM_BUCKETS,
+    TOPK_SCHEMA,
     SegmentTree,
+    _topk_over_scan,
     assign_doc_ids,
     build_block_index,
     decode_blocks,
     verify_content_sha,
-    write_index_segments,
+    write_tree,
 )
 from bertopic_spark.operators.ctfidf import DEFAULT_CLAMP
 from bertopic_spark.operators.postings import doc_term_counts
 
 _MANIFEST = "gens.json"
-_STATS_SCHEMA = "term string, df long"
+# the generation tree format; an index whose config names no format holds
+# no document lengths in its blocks and must be rebuilt
+GEN_FORMAT = "gen_blocks"
+_STATS_SCHEMA = "term string, df long, n_docs long"
 _NORMS_SCHEMA = "doc_id long, doc_len long"
 _IDS_SCHEMA = "doc_id long"
-
-
-def _write_manifest(root: str, manifest: dict) -> None:
-    tmp = os.path.join(root, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(root, _MANIFEST))
 
 
 class IncrementalIndex:
@@ -134,11 +139,15 @@ class IncrementalIndex:
         n_buckets: int = N_TERM_BUCKETS,
         clamp: float | None = DEFAULT_CLAMP,
     ) -> "IncrementalIndex":
-        if os.path.exists(os.path.join(root, _MANIFEST)):
+        try:
+            read_manifest(root, _MANIFEST)
+        except FileNotFoundError:
+            pass
+        else:
             raise ValueError(f"index already exists at {root}")
-        os.makedirs(root, exist_ok=True)
         manifest = {
             "config": {
+                "format": GEN_FORMAT,
                 "mode": mode,
                 "bm25_weighting": bool(bm25_weighting),
                 "reduce_frequent_words": bool(reduce_frequent_words),
@@ -148,13 +157,19 @@ class IncrementalIndex:
             },
             "gens": [],
         }
-        _write_manifest(root, manifest)
+        write_manifest(root, manifest, _MANIFEST)
         return cls(spark, root, manifest)
 
     @classmethod
     def open(cls, spark: SparkSession, root: str) -> "IncrementalIndex":
-        with open(os.path.join(root, _MANIFEST)) as f:
-            return cls(spark, root, json.load(f))
+        manifest = read_manifest(root, _MANIFEST)
+        found = manifest["config"].get("format")
+        if found != GEN_FORMAT:
+            raise ValueError(
+                f"{root}: generations in format {found!r}, not {GEN_FORMAT!r} "
+                "(written before postings carried their document length); "
+                "rebuild the index")
+        return cls(spark, root, manifest)
 
     def status(self) -> dict:
         gens = self.manifest["gens"]
@@ -174,8 +189,8 @@ class IncrementalIndex:
 
     # -- internals ----------------------------------------------------------
 
-    def _gen_dir(self, name: str) -> str:
-        return os.path.join(self.root, name)
+    def _gen_dir(self, name: str, part: str = "") -> str:
+        return f"{self.root.rstrip('/')}/{name}" + (f"/{part}" if part else "")
 
     def _next_name(self, kind: str) -> str:
         n = len(self.manifest["gens"])
@@ -188,18 +203,40 @@ class IncrementalIndex:
                 mx = max(mx, int(g["id_max"]))
         return mx + 1
 
-    def _tfn(self, tf: F.Column, doc_len: F.Column) -> F.Column:
-        tfn = tf / doc_len
-        if self.cfg["reduce_frequent_words"]:
-            tfn = F.sqrt(tfn)
-        return tfn
-
     def _counts(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         x = doc_term_counts(df, text_col, [id_col], self.cfg["mode"],
                             with_len=True)
         if id_col != "doc_id":
             x = x.withColumnRenamed(id_col, "doc_id")
         return x
+
+    def _write_stats(self, gdir: str, x: DataFrame):
+        """The per-term stats (term, df = Σtf, n_docs) of (doc_id, term,
+        tf, doc_len) rows, written under ``gdir``; returns the rows'
+        scalar counters (n_classes, sum_len, id_min, id_max)."""
+        (x.groupBy("term")
+         .agg(F.sum("tf").alias("df"), F.count(F.lit(1)).alias("n_docs"))
+         .write.mode("overwrite").parquet(f"{gdir}/stats"))
+        return x.agg(
+            F.countDistinct("doc_id").alias("n_classes"),
+            F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_len"),
+            F.min("doc_id").alias("id_min"),
+            F.max("doc_id").alias("id_max"),
+        ).collect()[0]
+
+    def _write_add(self, gdir: str, x: DataFrame):
+        """An add generation from (doc_id, term, tf, doc_len) rows: its
+        "gen_blocks" tree, whose value slot holds doc_len, its norms and
+        its stats; returns the scalar counters."""
+        blocks = build_block_index(
+            x.select("doc_id", "term", "tf",
+                     F.col("doc_len").cast("double").alias("score")),
+            self.cfg["span"])
+        write_tree(blocks, f"{gdir}/segments", GEN_FORMAT,
+                   self.cfg["n_buckets"])
+        (x.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
+         .write.mode("overwrite").parquet(f"{gdir}/norms"))
+        return self._write_stats(gdir, x)
 
     # -- mutation -----------------------------------------------------------
 
@@ -258,22 +295,7 @@ class IncrementalIndex:
         x = self._counts(df, text_col, id_col).persist()
         try:
             name = self._next_name("add")
-            gdir = self._gen_dir(name)
-            scores = x.select(
-                "doc_id", "term", "tf",
-                self._tfn(F.col("tf"), F.col("doc_len")).cast("float")
-                .cast("double").alias("score"))
-            write_index_segments(
-                build_block_index(scores, self.cfg["span"]),
-                os.path.join(gdir, "segments"), self.cfg["n_buckets"])
-            (x.groupBy("term").agg(F.sum("tf").alias("df"))
-             .write.mode("overwrite").parquet(os.path.join(gdir, "stats")))
-            (x.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
-             .write.mode("overwrite").parquet(os.path.join(gdir, "norms")))
-            s = x.agg(
-                F.countDistinct("doc_id").alias("n_classes"),
-                F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_len"),
-            ).collect()[0]
+            s = self._write_add(self._gen_dir(name), x)
             entry = {
                 "name": name, "kind": "add",
                 "n_rows": int(agg["n_rows"]),
@@ -285,7 +307,7 @@ class IncrementalIndex:
         finally:
             x.unpersist()
         self.manifest["gens"].append(entry)
-        _write_manifest(self.root, self.manifest)
+        write_manifest(self.root, self.manifest, _MANIFEST)
         return entry
 
     def delete(self, docs: DataFrame, text_col: str = "content",
@@ -310,13 +332,8 @@ class IncrementalIndex:
         try:
             name = self._next_name("delete")
             gdir = self._gen_dir(name)
-            (x.groupBy("term").agg(F.sum("tf").alias("df"))
-             .write.mode("overwrite").parquet(os.path.join(gdir, "stats")))
-            ids.write.mode("overwrite").parquet(os.path.join(gdir, "ids"))
-            s = x.agg(
-                F.countDistinct("doc_id").alias("n_classes"),
-                F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_len"),
-            ).collect()[0]
+            s = self._write_stats(gdir, x)
+            ids.write.mode("overwrite").parquet(f"{gdir}/ids")
             n_rows = ids.count()
             entry = {
                 "name": name, "kind": "delete",
@@ -327,7 +344,7 @@ class IncrementalIndex:
         finally:
             x.unpersist()
         self.manifest["gens"].append(entry)
-        _write_manifest(self.root, self.manifest)
+        write_manifest(self.root, self.manifest, _MANIFEST)
         return entry
 
     # -- read side ----------------------------------------------------------
@@ -337,8 +354,8 @@ class IncrementalIndex:
         the norms/ids sidecars (postings never decoded)."""
         added, deleted = [], []
         for g in gens:
-            path = os.path.join(self._gen_dir(g["name"]),
-                                "norms" if g["kind"] == "add" else "ids")
+            path = self._gen_dir(g["name"],
+                                 "norms" if g["kind"] == "add" else "ids")
             r = self.spark.read.schema(
                 _NORMS_SCHEMA if g["kind"] == "add" else _IDS_SCHEMA
             ).parquet(path).select("doc_id")
@@ -365,16 +382,13 @@ class IncrementalIndex:
             raise ValueError(
                 f"need 0 <= g0 <= g1 <= {len(gens)}, got ({g0}, {g1})")
 
-        def _union(parts):
+        def ids(parts):
             if not parts:
                 return self.spark.createDataFrame([], _IDS_SCHEMA)
-            out = parts[0]
-            for x in parts[1:]:
-                out = out.unionByName(x)
-            return out.distinct()
+            return _union(parts).distinct()
 
-        w_add, w_del = map(_union, self._gen_ids(gens[g0:g1]))
-        p_add, p_del = map(_union, self._gen_ids(gens[:g0]))
+        w_add, w_del = map(ids, self._gen_ids(gens[g0:g1]))
+        p_add, p_del = map(ids, self._gen_ids(gens[:g0]))
         existed_at_g0 = p_add.join(p_del, "doc_id", "left_anti")
         return (w_add.join(w_del, "doc_id", "left_anti")
                 .select("doc_id", F.lit("added").alias("change"))
@@ -385,39 +399,31 @@ class IncrementalIndex:
 
     def tombstones(self) -> DataFrame | None:
         """Union of all tombstoned doc_ids (None when no deletes exist)."""
-        dels = [g for g in self.manifest["gens"] if g["kind"] == "delete"]
-        if not dels:
-            return None
-        reads = [
-            self.spark.read.schema(_IDS_SCHEMA)
-            .parquet(os.path.join(self._gen_dir(g["name"]), "ids"))
-            for g in dels
-        ]
-        out = reads[0]
-        for r in reads[1:]:
-            out = out.unionByName(r)
-        return out.distinct()
+        reads = [self.spark.read.schema(_IDS_SCHEMA)
+                 .parquet(self._gen_dir(g["name"], "ids"))
+                 for g in self.manifest["gens"] if g["kind"] == "delete"]
+        return _union(reads).distinct() if reads else None
 
     def merged_stats(self, terms: Sequence[str] | None = None) -> DataFrame:
-        """(term, df, idf) under the live corpus — the signed sum of per-gen
-        stats (term filter pushed to each parquet scan) crossed with the
-        driver-side scalar counters. Identical math to ctfidf.term_stats."""
+        """(term, df, n_docs, idf) under the live corpus — the signed sum of
+        per-gen stats (term filter pushed to each parquet scan) crossed
+        with the driver-side scalar counters. Identical math to
+        ctfidf.term_stats."""
         st = self.status()
         parts = []
         for g in self.manifest["gens"]:
             r = self.spark.read.schema(_STATS_SCHEMA).parquet(
-                os.path.join(self._gen_dir(g["name"]), "stats"))
+                self._gen_dir(g["name"], "stats"))
             if terms is not None:
                 r = r.filter(F.col("term").isin(list(terms)))
             sign = 1 if g["kind"] == "add" else -1
-            parts.append(r.select("term", (F.col("df") * sign).alias("df")))
+            parts.append(r.select("term", *[(F.col(c) * sign).alias(c)
+                                            for c in ("df", "n_docs")]))
         if not parts or st["n_classes"] <= 0:
             return self.spark.createDataFrame(
-                [], "term string, df long, idf double")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        dft = (out.groupBy("term").agg(F.sum("df").alias("df"))
+                [], "term string, df long, n_docs long, idf double")
+        dft = (_union(parts).groupBy("term")
+               .agg(F.sum("df").alias("df"), F.sum("n_docs").alias("n_docs"))
                .filter(F.col("df") > 0))
         a = st["sum_len"] // st["n_classes"]  # floor(avg class_len), exact ints
         if self.cfg["bm25_weighting"]:
@@ -428,175 +434,128 @@ class IncrementalIndex:
             idf = F.log(arg)
         else:
             idf = F.log(F.lit(a) / F.col("df") + 1.0)
-        return dft.select("term", "df", idf.alias("idf"))
+        return dft.select("term", "df", "n_docs", idf.alias("idf"))
 
-    def _segments(self, g: dict) -> SegmentTree:
-        return SegmentTree(
-            self.spark, os.path.join(self._gen_dir(g["name"]), "segments"),
-            "blocks")
-
-    def _pruned_candidates(self, terms: Sequence[str]) -> DataFrame | None:
-        """(term, doc_id, tf, tfn32) decoded postings of the query's terms,
-        read from only the buckets of each generation's tree that hold
-        them."""
+    def _scan(self, terms: Sequence[str] | None = None) -> DataFrame | None:
+        """The blocks of ``terms`` (all blocks when None) across add
+        generations, read from only the buckets of each generation's tree
+        that hold them; None when there is no add generation."""
         adds = [g for g in self.manifest["gens"] if g["kind"] == "add"]
         if not adds:
             return None
-        parts = [self._segments(g).scan(terms) for g in adds]
-        blocks = parts[0]
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p)
-        return decode_blocks(blocks).withColumnRenamed("score", "tfn32")
+        return _union([SegmentTree(self.spark,
+                                   self._gen_dir(g["name"], "segments"),
+                                   GEN_FORMAT).scan(terms) for g in adds])
 
     def norms(self) -> DataFrame:
         """(doc_id, doc_len) across add generations (doc ids are disjoint)."""
-        adds = [g for g in self.manifest["gens"] if g["kind"] == "add"]
-        reads = [
-            self.spark.read.schema(_NORMS_SCHEMA)
-            .parquet(os.path.join(self._gen_dir(g["name"]), "norms"))
-            for g in adds
-        ]
+        reads = [self.spark.read.schema(_NORMS_SCHEMA)
+                 .parquet(self._gen_dir(g["name"], "norms"))
+                 for g in self.manifest["gens"] if g["kind"] == "add"]
         if not reads:
             return self.spark.createDataFrame([], _NORMS_SCHEMA)
-        out = reads[0]
-        for r in reads[1:]:
-            out = out.unionByName(r)
-        return out
+        return _union(reads)
 
     def topk(self, query_terms: Mapping[int, Sequence[str]], k: int = 10,
-             exact: bool = True, scorer: str = "ctfidf",
-             k1: float = 1.2, b: float = 0.75) -> DataFrame:
-        """(query_id, doc_id, score, rank) over the LIVE corpus — same
-        output contract (and, on the exact path, float64 math) as
-        operators/bm25.bm25_topk over a full rebuild of the survivors.
+             scorer: str = "ctfidf", k1: float = 1.2,
+             b: float = 0.75) -> DataFrame:
+        """(query_id, doc_id, score, rank) over the LIVE corpus — the output
+        contract of operators/bm25.bm25_topk over a full rebuild of the
+        survivors, scores in float64, ties broken by doc_id ascending.
 
-        exact=True joins the norms sidecar and recomputes tfn = tf/doc_len
-        in float64 (gate/parity path). exact=False ranks on the stored
-        float32 tfn — no norms join, the low-latency serving path (rank
-        flips require two docs within ~1e-7 relative score, which the
-        deterministic doc_id tie-break then resolves identically anyway).
+        The query's blocks from every add generation go to the same top-k
+        kernel as ``serve_topk`` (segments._topk_over_scan). Spark computes
+        the idf of the query's terms from the merged stats; the idf table
+        and the sorted tombstones ride in the kernel's closure, which
+        scores each posting from its tf and the document length stored
+        beside it, and drops tombstoned docs before the per-doc sum.
 
         ``scorer``: "ctfidf" (BERTopic-parity class-based weighting, the
-        default) or "okapi" (classical Okapi BM25 with ``k1``/``b`` —
-        rank-identical to operators/bm25.okapi_bm25_topk over a rebuild
-        of the survivors). ONE index serves both models because
-        generations store idf-FREE postings: tf rides the payload, doc
-        length rides the norms sidecar, document frequency of the query's
-        terms falls out of the already-pruned candidate decode, and the
-        live N / Σlen scalars are the signed manifest counters. Okapi
-        always joins norms (its length normalization needs dl).
-
-        100-TB note: the norms join keys on doc_id AFTER term/bucket pruning
-        (candidates ≪ corpus); co-partition norms by doc_id//span if a
-        profile ever shows that exchange dominating.
+        default: ``(tf / dl)``, its sqrt under ``reduce_frequent_words``,
+        times idf) or "okapi" (classical Okapi BM25 with ``k1``/``b`` —
+        rank-identical to operators/bm25.okapi_bm25_topk over a rebuild of
+        the survivors, its df from the stats' n_docs and its N / avgdl
+        from the signed manifest counters). Each is evaluated in the
+        operation order of its one-shot scorer. ONE index serves both
+        models because generations store idf-free postings.
         """
         if scorer not in ("ctfidf", "okapi"):
             raise ValueError(f"unknown scorer {scorer!r}")
         all_terms = sorted({t for ts in query_terms.values() for t in ts})
-        empty = self.spark.createDataFrame(
-            [], "query_id long, doc_id long, score double, rank int")
-        if not all_terms:
-            return empty
-        cand = self._pruned_candidates(all_terms)
-        if cand is None:
-            return empty
+        scan = self._scan(all_terms) if all_terms else None
+        st = self.status()
+        if scan is None or st["n_classes"] <= 0:
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
+        idf_col = F.col("idf")
+        if scorer == "okapi":  # bm25.okapi_bm25_topk's idf
+            idf_col = F.log(F.lit(1.0) + (F.lit(float(st["n_classes"])) -
+                                          F.col("n_docs") + 0.5) /
+                            (F.col("n_docs") + 0.5))
+        idf = {r["term"]: r["idf"] for r in self.merged_stats(all_terms)
+               .select("term", idf_col.alias("idf")).collect()}
         tomb = self.tombstones()
-        if tomb is not None:
-            cand = cand.join(F.broadcast(tomb), "doc_id", "left_anti")
-        if scorer == "okapi":
-            st = self.status()
-            if st["n_classes"] <= 0:
-                return empty
-            n = float(st["n_classes"])
-            avgdl = st["sum_len"] / st["n_classes"]
-            dfs = cand.groupBy("term").agg(
-                F.count_distinct("doc_id").alias("df"))
-            okapi_idf = F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) /
-                              (F.col("df") + 0.5))
-            denom = (F.col("tf") + F.lit(k1) *
-                     (F.lit(1.0 - b) +
-                      F.lit(b) * F.col("doc_len") / F.lit(avgdl)))
-            scored = (cand.join(self.norms(), "doc_id")
-                      .join(F.broadcast(dfs.select(
-                          "term", okapi_idf.alias("idf"))), "term")
-                      .select("doc_id", "term",
-                              (F.col("idf") * F.col("tf") *
-                               F.lit(k1 + 1.0) / denom).alias("s")))
-        else:
-            idf = self.merged_stats(all_terms).select("term", "idf")
-            if exact:
-                cand = cand.join(self.norms(), "doc_id")
-                tfn = self._tfn(F.col("tf"), F.col("doc_len"))
-            else:
-                tfn = F.col("tfn32")
-            scored = (cand.join(F.broadcast(idf), "term")
-                      .select("doc_id", "term", (tfn * F.col("idf")).alias("s")))
-        qt = self.spark.createDataFrame(
-            [(int(q), t) for q, ts in sorted(query_terms.items())
-             for t in sorted(set(ts))],
-            "query_id long, term string")
-        hits = (scored.join(F.broadcast(qt), "term")
-                .groupBy("query_id", "doc_id").agg(F.sum("s").alias("score")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        return (hits.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "doc_id", "score", "rank"))
+        mask = None if tomb is None else np.array(
+            sorted(r["doc_id"] for r in tomb.collect()), np.int64)
+        rfw = self.cfg["reduce_frequent_words"]
+        avgdl = st["sum_len"] / st["n_classes"]
 
-    def postings(self) -> DataFrame:
-        """Live (term, doc_id, tf) long form — the audit/export relation."""
-        adds = [g for g in self.manifest["gens"] if g["kind"] == "add"]
-        if not adds:
-            return self.spark.createDataFrame(
-                [], "term string, doc_id long, tf long")
-        parts = [decode_blocks(self._segments(g).scan()) for g in adds]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        def score(term, tf, dl):
+            w = pd.Series(term).map(idf).to_numpy(np.float64)
+            if scorer == "okapi":
+                return w * tf * (k1 + 1.0) / (
+                    tf + k1 * ((1.0 - b) + b * dl / avgdl))
+            tfn = tf / dl
+            if rfw:
+                tfn = np.sqrt(tfn)
+            return tfn * w
+
+        # only terms with live postings have an idf; the rest score nothing
+        live = {q: [t for t in ts if t in idf] for q, ts in query_terms.items()}
+        return _topk_over_scan(scan, live, k, score, mask)
+
+    def _live(self) -> DataFrame | None:
+        """Live (term, doc_id, tf, doc_len) postings: every add generation
+        decoded, tombstoned docs dropped; None when there is no add
+        generation."""
+        scan = self._scan()
+        if scan is None:
+            return None
+        out = decode_blocks(scan).select(
+            "term", "doc_id", "tf", F.col("score").cast("long").alias("doc_len"))
         tomb = self.tombstones()
         if tomb is not None:
             out = out.join(F.broadcast(tomb), "doc_id", "left_anti")
-        return out.select("term", "doc_id", "tf")
+        return out
+
+    def postings(self) -> DataFrame:
+        """Live (term, doc_id, tf) long form — the audit/export relation."""
+        live = self._live()
+        if live is None:
+            return self.spark.createDataFrame(
+                [], "term string, doc_id long, tf long")
+        return live.select("term", "doc_id", "tf")
 
     # -- maintenance --------------------------------------------------------
 
     def compact(self) -> dict:
         """Rewrite every generation into one: decode → drop tombstones →
-        re-encode. No retokenization — doc_len is recovered EXACTLY as Σtf
-        over each surviving doc's decoded postings (all terms are decoded
-        here, unlike the query path), so compaction never touches the
-        original corpus. Doc ids are preserved (blocks are id-range keyed;
-        a sparse id space costs nothing)."""
+        re-encode. No retokenization — every posting carries its
+        document's length, so compaction never touches the original
+        corpus. Doc ids are preserved (blocks are id-range keyed; a sparse
+        id space costs nothing)."""
         self._mutable()
-        live = self.postings().persist()
+        gens = self.manifest["gens"]
+        live = self._live()
+        if live is None:
+            live = self.spark.createDataFrame(
+                [], "term string, doc_id long, tf long, doc_len long")
+        live = live.persist()
         try:
-            norms = live.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-            scores = (live.join(norms, "doc_id")
-                      .select("doc_id", "term", "tf",
-                              self._tfn(F.col("tf"), F.col("doc_len"))
-                              .cast("float").cast("double").alias("score")))
-            old = [g["name"] for g in self.manifest["gens"]]
-            name = f"gen-{len(self.manifest['gens']):05d}"
-            gdir = self._gen_dir(name)
-            write_index_segments(
-                build_block_index(scores, self.cfg["span"]),
-                os.path.join(gdir, "segments"), self.cfg["n_buckets"])
-            (live.groupBy("term").agg(F.sum("tf").alias("df"))
-             .write.mode("overwrite").parquet(os.path.join(gdir, "stats")))
-            norms.write.mode("overwrite").parquet(os.path.join(gdir, "norms"))
-            s = live.agg(
-                F.countDistinct("doc_id").alias("n_classes"),
-                F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_len"),
-                F.min("doc_id").alias("id_min"),
-                F.max("doc_id").alias("id_max"),
-            ).collect()[0]
-            prev_rows = (sum(g["n_rows"] for g in self.manifest["gens"]
-                             if g["kind"] == "add")
-                         - sum(g["n_rows"] for g in self.manifest["gens"]
-                               if g["kind"] == "delete"))
+            name = f"gen-{len(gens):05d}"
+            s = self._write_add(self._gen_dir(name), live)
             entry = {
                 "name": name, "kind": "add",
-                "n_rows": int(prev_rows),
+                "n_rows": self.status()["live_docs"],
                 "n_classes": int(s["n_classes"]),
                 "sum_len": int(s["sum_len"]),
                 "id_min": None if s["id_min"] is None else int(s["id_min"]),
@@ -604,8 +563,16 @@ class IncrementalIndex:
             }
         finally:
             live.unpersist()
+        old = [g["name"] for g in gens]
         self.manifest["gens"] = [entry]
-        _write_manifest(self.root, self.manifest)
+        write_manifest(self.root, self.manifest, _MANIFEST)
         for o in old:
-            shutil.rmtree(self._gen_dir(o), ignore_errors=True)
+            remove_dir(self._gen_dir(o))
         return entry
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out

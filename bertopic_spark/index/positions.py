@@ -178,9 +178,8 @@ def read_pos_segments(spark, path: str, terms) -> DataFrame:
 # of index/incremental.IncrementalIndex.
 # ---------------------------------------------------------------------------
 
-import json
-import os
-import shutil
+from bertopic_spark.index.checkpoint import (read_manifest, remove_dir,
+                                             write_manifest)
 
 _POS_MANIFEST = "_POS_MANIFEST.json"
 
@@ -213,9 +212,12 @@ class IncrementalPositions:
     @classmethod
     def create(cls, spark, root: str, mode: str = "ascii_code",
                n_buckets: int = N_TERM_BUCKETS) -> "IncrementalPositions":
-        if os.path.exists(os.path.join(root, _POS_MANIFEST)):
+        try:
+            read_manifest(root, _POS_MANIFEST)
+        except FileNotFoundError:
+            pass
+        else:
             raise ValueError(f"positional index already exists at {root}")
-        os.makedirs(root, exist_ok=True)
         m = {"config": {"mode": mode, "n_buckets": int(n_buckets)},
              "gens": []}
         cls._write(root, m)
@@ -223,15 +225,14 @@ class IncrementalPositions:
 
     @classmethod
     def open(cls, spark, root: str) -> "IncrementalPositions":
-        with open(os.path.join(root, _POS_MANIFEST)) as f:
-            return cls(spark, root, json.load(f))
+        return cls(spark, root, read_manifest(root, _POS_MANIFEST))
 
     @staticmethod
     def _write(root: str, manifest: dict) -> None:
-        tmp = os.path.join(root, _POS_MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, os.path.join(root, _POS_MANIFEST))
+        write_manifest(root, manifest, _POS_MANIFEST)
+
+    def _dir(self, name: str, part: str) -> str:
+        return f"{self.root.rstrip('/')}/{name}/{part}"
 
     def _mutable(self) -> None:
         if self._frozen:
@@ -283,10 +284,10 @@ class IncrementalPositions:
         pos = doc_term_positions(
             df.withColumnRenamed(id_col, "doc_id"), text_col, "doc_id",
             self.manifest["config"]["mode"])
-        write_positions(pos, os.path.join(self.root, name, "positions"),
+        write_positions(pos, self._dir(name, "positions"),
                         self.manifest["config"]["n_buckets"])
         new_ids.write.mode("overwrite").parquet(
-            os.path.join(self.root, name, "ids"))
+            self._dir(name, "ids"))
         entry = {"name": name, "kind": "add", "n_docs": int(agg["n"]),
                  "id_min": lo, "id_max": hi}
         self.manifest["gens"].append(entry)
@@ -313,7 +314,7 @@ class IncrementalPositions:
             raise ValueError("delete of zero ids")
         name = f"pdel-{len(self.manifest['gens']):05d}"
         ids_df.write.mode("overwrite").parquet(
-            os.path.join(self.root, name, "ids"))
+            self._dir(name, "ids"))
         entry = {"name": name, "kind": "delete", "n_docs": int(n)}
         self.manifest["gens"].append(entry)
         self._write(self.root, self.manifest)
@@ -327,7 +328,7 @@ class IncrementalPositions:
         if not adds:
             return None
         parts = [self.spark.read.schema("doc_id long").parquet(
-            os.path.join(self.root, g["name"], "ids")) for g in adds]
+            self._dir(g["name"], "ids")) for g in adds]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)
@@ -338,7 +339,7 @@ class IncrementalPositions:
         if not dels:
             return None
         parts = [self.spark.read.schema("doc_id long").parquet(
-            os.path.join(self.root, g["name"], "ids")) for g in dels]
+            self._dir(g["name"], "ids")) for g in dels]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)
@@ -354,7 +355,7 @@ class IncrementalPositions:
             return self.spark.createDataFrame(
                 [], "doc_id long, term string, pos int")
         parts = [read_positions(
-            self.spark, os.path.join(self.root, g["name"], "positions"),
+            self.spark, self._dir(g["name"], "positions"),
             terms) for g in adds]
         out = parts[0]
         for p in parts[1:]:
@@ -373,7 +374,7 @@ class IncrementalPositions:
             raise ValueError("nothing to compact")
         nb = self.manifest["config"]["n_buckets"]
         parts = [SegmentTree(self.spark,
-                             os.path.join(self.root, g["name"], "positions"),
+                             self._dir(g["name"], "positions"),
                              "positions").scan()
                  .select("doc_id", "term", "pos") for g in adds]
         live = parts[0]
@@ -383,7 +384,7 @@ class IncrementalPositions:
         if tomb is not None:
             live = live.join(F.broadcast(tomb), "doc_id", "left_anti")
         name = f"pgen-c{len(self.manifest['gens']):05d}"
-        write_positions(live, os.path.join(self.root, name, "positions"), nb)
+        write_positions(live, self._dir(name, "positions"), nb)
         live_ids = self._gen_ids()
         tomb2 = self.tombstones()
         if tomb2 is not None:
@@ -391,7 +392,7 @@ class IncrementalPositions:
                                      "left_anti")
         live_ids = live_ids.persist()
         live_ids.write.mode("overwrite").parquet(
-            os.path.join(self.root, name, "ids"))
+            self._dir(name, "ids"))
         span = live_ids.agg(F.count(F.lit(1)).alias("n"),
                             F.min("doc_id").alias("lo"),
                             F.max("doc_id").alias("hi")).collect()[0]
@@ -404,5 +405,5 @@ class IncrementalPositions:
         self.manifest["gens"] = [entry]
         self._write(self.root, self.manifest)
         for nm in old:
-            shutil.rmtree(os.path.join(self.root, nm), ignore_errors=True)
+            remove_dir(f"{self.root.rstrip('/')}/{nm}")
         return entry

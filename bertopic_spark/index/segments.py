@@ -146,9 +146,13 @@ def build_block_index(scores: DataFrame, span: int = DEFAULT_SPAN,
 
 N_TERM_BUCKETS = 64
 
-# tree format → (row order within a bucket, payload codecs it may carry)
+# tree format → (row order within a bucket, payload codecs it may carry).
+# "blocks" carry a float64 score per posting and are served as they are;
+# "gen_blocks" (incremental.py's generations) carry the document length in
+# that slot instead, so only a caller that scores them may read them.
 TREE_FORMATS = {
     "blocks": (("term", "blk"), tuple(CODECS)),
+    "gen_blocks": (("term", "blk"), tuple(CODECS)),
     "pos_blocks": (("term", "blk"), ("pos_varint",)),
     "positions": (("term", "doc_id", "pos"), ()),
 }
@@ -172,11 +176,24 @@ def payload_format(df: DataFrame, where: str = "frame") -> tuple[int, str]:
 
 
 def block_decoder(df: DataFrame):
-    """(span, decode_fn) for the scoring blocks in ``df``."""
+    """The one decode loop of the scoring blocks in ``df``: a function of a
+    batch's ``blk`` and ``payload`` columns that returns (postings per
+    block, doc ids, tfs, values), the last three concatenated over the
+    blocks in row order. Span and codec come from the payload tag."""
     span, codec = payload_format(df)
     if codec not in CODECS:
         raise ValueError(f"payload codec {codec!r} is not a scoring-block codec")
-    return span, CODECS[codec][1]
+    decode = CODECS[codec][1]
+
+    def decode_rows(blk, payload):
+        parts = [decode(bytes(p), int(b) * span) for b, p in zip(blk, payload)]
+        if not parts:
+            return (np.empty(0, np.int64), np.empty(0, np.int64),
+                    np.empty(0, np.int64), np.empty(0, np.float64))
+        ids, tfs, values = (np.concatenate(c) for c in zip(*parts))
+        return np.array([len(p[0]) for p in parts], np.int64), ids, tfs, values
+
+    return decode_rows
 
 
 def write_tree(df: DataFrame, path: str, fmt: str, n_buckets: int) -> dict:
@@ -283,6 +300,11 @@ def serve_topk(spark, path: str, query_terms: dict[int, list[str]],
     per-query pass: AQE submits each stage as its own job); per-query
     latency = request time / batch size.
 
+    The stored value of each posting is its score. A generation tree of
+    ``IncrementalIndex`` ("gen_blocks", whose value is a document length)
+    raises here, naming the path; serve it with ``IncrementalIndex.topk``,
+    which goes through the same kernel with a scoring step.
+
     Ties at rank k break by doc_id ascending — the engine-wide
     (score desc, doc_id asc) order.
     """
@@ -338,18 +360,25 @@ TOPK_SCHEMA = "query_id long, doc_id long, score double, rank int"
 
 
 def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
-                    k: int) -> DataFrame:
-    """Shared tail of the serving paths.
+                    k: int, score=None, mask=None) -> DataFrame:
+    """The one top-k kernel over compressed blocks, shared by
+    ``serve_topk``, ``IndexServer`` and ``IncrementalIndex.topk``.
 
     The term → query-ids map rides in the plan as one constant, exploded
     on ``term``, so the blocks fan out to every query that asks for their
     term without a join. One shuffle by query_id carries the compressed
-    payloads; each query's group is then decoded, its scores summed per
-    doc and its top k taken in a single Arrow pass. A query's group holds
+    payloads; each query's group is then decoded, scored, summed per doc
+    and its top k taken in a single Arrow pass. A query's group holds
     only its candidate blocks, so its memory is bounded by the postings
     it scores.
+
+    ``score(term, tf, value)`` turns a group's postings (numpy arrays, one
+    entry per posting) into their scores; without it the stored value is
+    the score (a "blocks" tree). ``mask``, a sorted int64 array of doc
+    ids, drops those docs' postings before the per-doc sum. Both travel
+    in the kernel's closure.
     """
-    span, decode = block_decoder(scan)
+    decode_rows = block_decoder(scan)
     by_term: dict[str, list[int]] = {}
     for qid, ts in sorted(query_terms.items()):
         for t in sorted(set(ts)):
@@ -363,14 +392,15 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
         # fixed (term, blk) order → each doc's score is summed in the same
         # term order on every run, whatever order the shuffle delivered
         pdf = pdf.sort_values(["term", "blk"], kind="stable")
-        ids, scores = [], []
-        for blk, payload in zip(pdf["blk"], pdf["payload"]):
-            i, _, s = decode(bytes(payload), int(blk) * span)
-            ids.append(i)
-            scores.append(s)
-        docs, inv = np.unique(np.concatenate(ids), return_inverse=True)
-        total = np.bincount(inv, weights=np.concatenate(scores),
-                            minlength=len(docs))
+        n, ids, tf, value = decode_rows(pdf["blk"], pdf["payload"])
+        s = value if score is None else score(
+            np.repeat(pdf["term"].to_numpy(), n), tf, value)
+        if mask is not None and len(mask):
+            at = np.minimum(np.searchsorted(mask, ids), len(mask) - 1)
+            keep = mask[at] != ids
+            ids, s = ids[keep], s[keep]
+        docs, inv = np.unique(ids, return_inverse=True)
+        total = np.bincount(inv, weights=s, minlength=len(docs))
         top = np.lexsort((docs, -total))[:k]
         return pd.DataFrame({
             "query_id": np.full(len(top), pdf["query_id"].iloc[0], np.int64),
@@ -388,34 +418,13 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
 
     mapInPandas (Arrow batches): one narrow pass, no shuffle.
     """
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
-    out_schema = StructType([
-        StructField("term", StringType()),
-        StructField("doc_id", LongType()),
-        StructField("tf", LongType()),
-        StructField("score", DoubleType()),
-    ])
-    span, decode_fn = block_decoder(blocks)
+    decode_rows = block_decoder(blocks)
 
     def gen(batches):
         for pdf in batches:
-            terms, dids, tfs, scs = [], [], [], []
-            for term, blk, payload in zip(pdf["term"], pdf["blk"], pdf["payload"]):
-                ids, t, s = decode_fn(bytes(payload), int(blk) * span)
-                terms.append(np.full(len(ids), term, dtype=object))
-                dids.append(ids)
-                tfs.append(t)
-                scs.append(s)
-            if not dids:
-                yield pd.DataFrame({"term": [], "doc_id": [], "tf": [], "score": []})
-                continue
-            yield pd.DataFrame({
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(dids),
-                "tf": np.concatenate(tfs),
-                "score": np.concatenate(scs),
-            })
+            n, ids, tf, value = decode_rows(pdf["blk"], pdf["payload"])
+            yield pd.DataFrame({"term": np.repeat(pdf["term"].to_numpy(), n),
+                                "doc_id": ids, "tf": tf, "score": value})
 
-    return blocks.select("term", "blk", "payload").mapInPandas(gen, out_schema)
+    return blocks.select("term", "blk", "payload").mapInPandas(
+        gen, "term string, doc_id long, tf long, score double")

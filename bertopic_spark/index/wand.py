@@ -21,11 +21,10 @@ exhaustive scorer (tested on every fixture query).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
 
 from bertopic_spark.index.segments import block_decoder
 
@@ -33,34 +32,17 @@ from bertopic_spark.index.segments import block_decoder
 def _decode_score(cand: DataFrame) -> DataFrame:
     """(query_id, term, blk, payload) → exact (query_id, doc_id, score) sums;
     span and codec come from the payload tag."""
-    out_schema = StructType([
-        StructField("query_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-    ])
-
-    span, decode_fn = block_decoder(cand)
+    decode_rows = block_decoder(cand)
 
     def gen(batches):
-        import numpy as np
-
         for pdf in batches:
-            qids, dids, scs = [], [], []
-            for qid, blk, payload in zip(pdf["query_id"], pdf["blk"], pdf["payload"]):
-                ids, _, s = decode_fn(bytes(payload), int(blk) * span)
-                qids.append(np.full(len(ids), int(qid), dtype=np.int64))
-                dids.append(ids)
-                scs.append(s)
-            if not dids:
-                yield pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-                continue
+            n, ids, _, value = decode_rows(pdf["blk"], pdf["payload"])
             yield pd.DataFrame({
-                "query_id": np.concatenate(qids),
-                "doc_id": np.concatenate(dids),
-                "score": np.concatenate(scs),
-            })
+                "query_id": np.repeat(pdf["query_id"].to_numpy(np.int64), n),
+                "doc_id": ids, "score": value})
 
-    decoded = cand.select("query_id", "blk", "payload").mapInPandas(gen, out_schema)
+    decoded = cand.select("query_id", "blk", "payload").mapInPandas(
+        gen, "query_id long, doc_id long, score double")
     return decoded.groupBy("query_id", "doc_id").agg(F.sum("score").alias("score"))
 
 

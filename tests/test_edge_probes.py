@@ -458,3 +458,68 @@ def test_auto_reduce_single_topic_noop(spark, mini_docs):
         mini_docs.withColumn("topic", F.lit(0)), "content", "doc_id")
     out = m.reduce_topics("auto", distance_threshold=1.0)
     assert out is m and not m.mappings_
+
+
+def _gate_vs_oracle(spark, sf_dir, spark_df, sql):
+    """Rows of a registry gate on Spark against its oracle SQL on DuckDB
+    over the parquet tables in ``sf_dir``; returns the oracle's rows."""
+    import oracle_crosscheck as oc
+
+    con = oc.duckdb_con(sf_dir)
+    duck = con.sql(sql).df()
+    con.close()
+    errs = oc.compare("gate", spark_df.toPandas(), duck)
+    assert not errs, errs
+    return duck
+
+
+def test_common_terms_gate_counts_token_empty_docs(spark, tmp_path):
+    """"table" is in 9 of the 10 documents that have tokens, above the
+    0.78 cutoff over those 10 (8) but not over all 12 rows (10): the two
+    token-empty rows decide whether "table" admits candidates, so the
+    gate and its oracle must count the same population."""
+    import pandas as pd
+
+    from bertopic_spark.entry_queries import (SQL_COMMON_TERMS,
+                                              q_common_terms_topk)
+
+    texts = [f"table filler{i} " * (1 + i % 3) for i in range(9)]
+    texts += ["scan alone here", "", "!!! ---"]
+    pd.DataFrame({
+        "doc_id": list(range(len(texts))), "text": texts,
+        "lang": "python", "source": "s",
+        "n_chars": [len(t) for t in texts],
+    }).to_parquet(tmp_path / "documents.parquet", index=False)
+    got = q_common_terms_topk(spark, str(tmp_path))
+    duck = _gate_vs_oracle(spark, str(tmp_path), got, SQL_COMMON_TERMS)
+    # "table" is rare over all rows, so it admits docs without "scan"
+    assert set(duck[duck.query_id == 0].doc_id) == set(range(10))
+
+
+def test_neardup_lsh_gate_caps_like_its_oracle(spark, tmp_path):
+    """Six copies of one vector share a bucket in every LSH table; under a
+    cap of 4 that bucket is oversized, so none of the copies pair, while
+    two distinct near-duplicates in small buckets still do. Gate and
+    oracle must apply the same cap."""
+    import pandas as pd
+
+    from bertopic_spark.entry_queries import (_sql_embedding_neardup_lsh,
+                                              q_embedding_neardup_lsh)
+
+    vecs = [[1.0, 2, 3, 4, 5, 6, 7, 8]] * 6
+    vecs += [[0.0, 0, 0, 0, 0, 0, 0, 1], [0.0, 0, 0, 0, 0, 0, 0.01, 1],
+             [-8.0, 7, -6, 5, -4, 3, -2, 1]]
+    pd.DataFrame({"vec_id": list(range(len(vecs))), "embedding": vecs,
+                  "label": 0}).to_parquet(tmp_path / "embeddings.parquet",
+                                          index=False)
+    sf = str(tmp_path)
+    uncapped = _gate_vs_oracle(
+        spark, sf, q_embedding_neardup_lsh(spark, sf),
+        _sql_embedding_neardup_lsh())
+    capped = _gate_vs_oracle(
+        spark, sf, q_embedding_neardup_lsh(spark, sf, max_bucket=4),
+        _sql_embedding_neardup_lsh(max_bucket=4))
+    pairs = set(zip(capped.id_a, capped.id_b))
+    assert (6, 7) in pairs
+    assert min(a for a, _ in pairs) >= 6  # no pair of or with a copy
+    assert (0, 1) in set(zip(uncapped.id_a, uncapped.id_b))

@@ -23,25 +23,23 @@ def _qt_map():
     return {q: sorted(set(tokenize_one(t, MODE))) for q, t in QUERIES.items()}
 
 
-def _rebuild_topk(spark, docs, k=10):
+def _rebuild_topk(spark, docs, k=10, **weighting):
     qt = query_terms(queries_df(spark, QUERIES), MODE)
-    t = bm25_topk_adhoc(docs, qt, k=k, text_col="text", mode=MODE)
+    t = bm25_topk_adhoc(docs, qt, k=k, text_col="text", mode=MODE,
+                        **weighting)
     return [(r.query_id, r.doc_id, r.score, r["rank"])
             for r in t.orderBy("query_id", "rank").collect()]
 
 
-def _inc_topk(idx, k=10, exact=True):
-    t = idx.topk(_qt_map(), k=k, exact=exact)
+def _inc_topk(idx, k=10, **scoring):
+    t = idx.topk(_qt_map(), k=k, **scoring)
     return [(r.query_id, r.doc_id, r.score, r["rank"])
             for r in t.orderBy("query_id", "rank").collect()]
 
 
-@pytest.fixture(scope="module")
-def built(spark, documents_df, tmp_path_factory):
-    """Two appends + one delete over the sf0.001 documents table."""
-    root = str(tmp_path_factory.mktemp("incidx"))
-    shutil.rmtree(root)
-    idx = IncrementalIndex.create(spark, root, mode=MODE)
+def _evens_odds_del17(spark, documents_df, root, **cfg):
+    """Two appends (even, then odd doc ids) + one delete (every 17th)."""
+    idx = IncrementalIndex.create(spark, root, mode=MODE, **cfg)
     idx.append(documents_df.filter(F.col("doc_id") % 2 == 0),
                text_col="text", id_col="doc_id")
     idx.append(documents_df.filter(F.col("doc_id") % 2 == 1),
@@ -51,20 +49,115 @@ def built(spark, documents_df, tmp_path_factory):
     return idx
 
 
-def test_append_delete_matches_rebuild(spark, documents_df, built):
+@pytest.fixture(scope="module")
+def built(spark, documents_df, tmp_path_factory):
+    """Two appends + one delete over the sf0.001 documents table."""
+    root = str(tmp_path_factory.mktemp("incidx"))
+    shutil.rmtree(root)
+    return _evens_odds_del17(spark, documents_df, root)
+
+
+@pytest.mark.parametrize("bm25_weighting, reduce_frequent_words",
+                         [(True, False), (True, True), (False, False),
+                          (False, True)])
+def test_append_delete_matches_rebuild(spark, documents_df, built, tmp_path,
+                                       bm25_weighting, reduce_frequent_words):
+    weighting = {"bm25_weighting": bm25_weighting,
+                 "reduce_frequent_words": reduce_frequent_words}
+    idx = built if (bm25_weighting, reduce_frequent_words) == (True, False) \
+        else _evens_odds_del17(spark, documents_df, str(tmp_path / "idx"),
+                               **weighting)
     surv = documents_df.filter(F.col("doc_id") % 17 != 0)
-    ref = _rebuild_topk(spark, surv)
-    inc = _inc_topk(built)
+    ref = _rebuild_topk(spark, surv, **weighting)
+    inc = _inc_topk(idx)
     assert [(q, d, r) for q, d, _, r in inc] == [
         (q, d, r) for q, d, _, r in ref]
     assert max(abs(a[2] - b[2]) for a, b in zip(inc, ref)) < 1e-9
 
 
-def test_fast_path_rank_identical(built):
-    exact = _inc_topk(built, exact=True)
-    fast = _inc_topk(built, exact=False)
-    assert [(q, d, r) for q, d, _, r in fast] == [
-        (q, d, r) for q, d, _, r in exact]
+@pytest.mark.parametrize("scorer", ["ctfidf", "okapi"])
+def test_tombstoned_top_doc_is_masked(spark, tmp_path, scorer):
+    """Doc 1 ranks first for "alpha" until it is deleted; after the delete
+    the kernel's tombstone mask must drop it, and the rest must rank as a
+    rebuild over the survivors does."""
+    from bertopic_spark.operators.bm25 import okapi_bm25_topk
+
+    docs = spark.createDataFrame(
+        [(1, "alpha"), (2, "alpha beta"), (3, "alpha beta gamma"),
+         (4, "delta epsilon zeta theta iota kappa"),
+         (5, "lambda sigma omega delta epsilon zeta")],
+        "doc_id long, text string")
+    idx = IncrementalIndex.create(spark, str(tmp_path / "tomb"), mode=MODE)
+    idx.append(docs, text_col="text", id_col="doc_id")
+    idx.delete(docs.filter("doc_id = 1"), text_col="text", id_col="doc_id")
+    q = {0: ["alpha"]}
+    before = idx.as_of(1).topk(q, k=3, scorer=scorer).collect()
+    assert before[0]["doc_id"] == 1 and before[0]["rank"] == 1
+    got = [(r.doc_id, r.score) for r in
+           idx.topk(q, k=3, scorer=scorer).orderBy("rank").collect()]
+    surv = docs.filter("doc_id != 1")
+    qt = spark.createDataFrame([(0, "alpha")], "query_id long, term string")
+    ref_fn = okapi_bm25_topk if scorer == "okapi" else bm25_topk_adhoc
+    ref = [(r.doc_id, r.score) for r in
+           ref_fn(surv, qt, k=3, text_col="text", mode=MODE)
+           .orderBy("rank").collect()]
+    assert [d for d, _ in got] == [d for d, _ in ref] == [2, 3]
+    for (_, a), (_, b) in zip(got, ref):
+        assert a == pytest.approx(b, abs=1e-12)
+
+
+def test_generation_misuse_raises_naming_the_path(spark, tmp_path):
+    """A generation tree is not a scored tree, and an index written before
+    generations carried their document length cannot be read."""
+    import json
+
+    from bertopic_spark.index.checkpoint import MANIFEST
+    from bertopic_spark.index.segments import serve_topk
+
+    root = str(tmp_path / "gens")
+    idx = IncrementalIndex.create(spark, root, mode=MODE)
+    idx.append(spark.createDataFrame([(1, "alpha beta")],
+                                     "doc_id long, text string"),
+               text_col="text", id_col="doc_id")
+    tree = f"{root}/gen-00000/segments"
+    with pytest.raises(ValueError, match=f"{tree}.*'gen_blocks' tree"):
+        serve_topk(spark, tree, {0: ["alpha"]})
+
+    # an older index: no format in its config, "blocks" generation trees
+    with open(f"{root}/gens.json") as f:
+        m = json.load(f)
+    del m["config"]["format"]
+    with open(f"{root}/gens.json", "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match=f"{root}.*rebuild"):
+        IncrementalIndex.open(spark, root)
+    with open(f"{tree}/{MANIFEST}") as f:
+        tm = json.load(f)
+    tm["metrics"]["format"] = "blocks"
+    with open(f"{tree}/{MANIFEST}", "w") as f:
+        json.dump(tm, f)
+    with pytest.raises(ValueError, match=f"{tree}.*not a 'gen_blocks' tree"):
+        idx.topk({0: ["alpha"]})
+
+
+def test_uri_root_matches_plain_path(spark, documents_df, asof_idx, tmp_path,
+                                     monkeypatch):
+    """A file:// root keeps its manifest under the URI, not under a
+    relative ./file: directory, and answers as the plain-path index."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    root = f"file://{tmp_path}/uri_idx"
+    _evens_odds_del17(spark, documents_df, root)
+    idx = IncrementalIndex.open(spark, root)
+    assert idx.status() == asof_idx.status()
+    assert _inc_topk(idx) == _inc_topk(asof_idx)
+    assert os.path.exists(f"{tmp_path}/uri_idx/gens.json")
+    assert not os.path.exists(f"{tmp_path}/file:")
+    idx.compact()
+    assert IncrementalIndex.open(spark, root).status()["generations"] == 1
+    assert sorted(os.listdir(f"{tmp_path}/uri_idx")) == ["gen-00003",
+                                                         "gens.json"]
 
 
 def test_open_resumes_from_manifest(spark, built):
