@@ -6772,27 +6772,41 @@ WINDOW w AS (PARTITION BY event_type ORDER BY ts
 
 
 def q_okapi_wand_topk(spark, sf_dir):
-    """Okapi served through block-max WAND (okapi_doc_scores →
-    build_block_index → blockmax_topk): the same compressed-block pruning
-    machinery runs a second ranking function unchanged because the blocks
-    carry scorer-agnostic (tf, score) streams — and non-negative Okapi
-    scores make block-max upper bounds tight. Oracle = the exhaustive
-    Okapi SQL (pruned path, same truth)."""
-    from bertopic_spark.index.segments import build_block_index
-    from bertopic_spark.index.wand import blockmax_topk
+    """Okapi served through the block-max pruned serving kernel
+    (okapi_doc_scores → build_block_index → write_index_segments into a
+    temp dir → serve_topk): the same compressed-block machinery runs a
+    second ranking function unchanged because the blocks carry
+    scorer-agnostic (tf, score) streams. At span 512 the sf0.1 documents
+    fall into 10 doc-range buckets, so the pruning runs. Oracle = the
+    exhaustive Okapi SQL (pruned path, same truth)."""
+    import shutil
+    import tempfile
+
+    from bertopic_spark.index.segments import (build_block_index, serve_topk,
+                                               write_index_segments)
     from bertopic_spark.operators.bm25 import okapi_doc_scores
 
     d = _docs(spark, sf_dir)
-    qt = query_terms(queries_df(spark, DRIVER_QUERIES), MODE)
-    handles: list = []
-    rel = okapi_doc_scores(d, k1=OKAPI_K1, b=OKAPI_B, text_col="text",
-                           mode=MODE, _persisted_out=handles)
-    blocks = build_block_index(rel, span=512)
-    t = blockmax_topk(blocks, qt, k=10, persist_cand=False)
-    return t.select(
-        "query_id", "doc_id", _r6(F.col("score")).alias("score"),
-        F.col("rank").cast("long").alias("rn"),
-    )
+    qts: dict = {}
+    for r in query_terms(queries_df(spark, DRIVER_QUERIES), MODE).collect():
+        qts.setdefault(r["query_id"], []).append(r["term"])
+    root = tempfile.mkdtemp(prefix="gate_okapi_")
+    held: list = []
+    try:
+        rel = okapi_doc_scores(d, k1=OKAPI_K1, b=OKAPI_B, text_col="text",
+                               mode=MODE, _persisted_out=held)
+        write_index_segments(build_block_index(rel, span=512), f"{root}/seg",
+                             n_buckets=16)
+        t = serve_topk(spark, f"{root}/seg", qts, k=10)
+        out = t.select(
+            "query_id", "doc_id", _r6(F.col("score")).alias("score"),
+            F.col("rank").cast("long").alias("rn"),
+        ).localCheckpoint(eager=True)
+    finally:
+        for x in held:
+            x.unpersist()
+        shutil.rmtree(root, ignore_errors=True)
+    return out
 
 
 FUSE_LEG_K, FUSE_K = 20, 10

@@ -14,8 +14,8 @@ doc-id-RANGE aligned, not fixed-count. Rationale:
   skew handling for posting construction (no explicit salting needed: the
   composite key (term, blk) is the salt, and it's deterministic).
 * WAND-style skipping wants monotone doc-id ranges per block anyway; range
-  alignment gives every term the SAME bucket grid, so per-bucket upper
-  bounds across query terms are a groupBy away (see wand.py).
+  alignment gives every term the SAME bucket grid, so a bucket's upper
+  bound across query terms is a sum of block maxes (segments.query_topk).
 
 Encoding (pure little-endian varint, first doc-id delta-encoded against the
 block's range start): deterministic — byte-identical across cluster sizes,

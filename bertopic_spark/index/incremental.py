@@ -60,6 +60,7 @@ from bertopic_spark.index.segments import (
     N_TERM_BUCKETS,
     TOPK_SCHEMA,
     SegmentTree,
+    _check_k,
     _topk_over_scan,
     assign_doc_ids,
     build_block_index,
@@ -398,11 +399,13 @@ class IncrementalIndex:
                     .select("doc_id", F.lit("deleted").alias("change"))))
 
     def tombstones(self) -> DataFrame | None:
-        """Union of all tombstoned doc_ids (None when no deletes exist)."""
+        """Union of all tombstoned doc_ids (None when no deletes exist).
+        Distinct without a shuffle: each delete generation stores distinct
+        ids and ``delete`` refuses an id that is already tombstoned."""
         reads = [self.spark.read.schema(_IDS_SCHEMA)
                  .parquet(self._gen_dir(g["name"], "ids"))
                  for g in self.manifest["gens"] if g["kind"] == "delete"]
-        return _union(reads).distinct() if reads else None
+        return _union(reads) if reads else None
 
     def merged_stats(self, terms: Sequence[str] | None = None) -> DataFrame:
         """(term, df, n_docs, idf) under the live corpus — the signed sum of
@@ -479,6 +482,7 @@ class IncrementalIndex:
         operation order of its one-shot scorer. ONE index serves both
         models because generations store idf-free postings.
         """
+        _check_k(k)
         if scorer not in ("ctfidf", "okapi"):
             raise ValueError(f"unknown scorer {scorer!r}")
         all_terms = sorted({t for ts in query_terms.values() for t in ts})
@@ -494,8 +498,8 @@ class IncrementalIndex:
         idf = {r["term"]: r["idf"] for r in self.merged_stats(all_terms)
                .select("term", idf_col.alias("idf")).collect()}
         tomb = self.tombstones()
-        mask = None if tomb is None else np.array(
-            sorted(r["doc_id"] for r in tomb.collect()), np.int64)
+        mask = None if tomb is None else np.unique(
+            np.array([r["doc_id"] for r in tomb.collect()], np.int64))
         rfw = self.cfg["reduce_frequent_words"]
         avgdl = st["sum_len"] / st["n_classes"]
 

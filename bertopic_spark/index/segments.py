@@ -175,12 +175,11 @@ def payload_format(df: DataFrame, where: str = "frame") -> tuple[int, str]:
     return int(md["span"]), md["codec"]
 
 
-def block_decoder(df: DataFrame):
-    """The one decode loop of the scoring blocks in ``df``: a function of a
-    batch's ``blk`` and ``payload`` columns that returns (postings per
-    block, doc ids, tfs, values), the last three concatenated over the
-    blocks in row order. Span and codec come from the payload tag."""
-    span, codec = payload_format(df)
+def block_decoder(span: int, codec: str):
+    """The one decode loop of scoring blocks of format ``(span, codec)``
+    (``payload_format`` of a frame): a function of a batch's ``blk`` and
+    ``payload`` columns that returns (postings per block, doc ids, tfs,
+    values), the last three concatenated over the blocks in row order."""
     if codec not in CODECS:
         raise ValueError(f"payload codec {codec!r} is not a scoring-block codec")
     decode = CODECS[codec][1]
@@ -287,9 +286,8 @@ def pruned_block_scan(spark, path: str, terms: list[str]) -> DataFrame:
 def serve_topk(spark, path: str, query_terms: dict[int, list[str]],
                k: int = 10) -> DataFrame:
     """Low-latency serving path: pruned scan → one shuffle of the
-    compressed blocks by query → decode, score and top-k per query in one
-    Arrow pass (vs blockmax_topk's multi-phase plan, which wins when the
-    candidate set is large; after bucket+term pruning it rarely is).
+    compressed blocks by query → block-max pruned decode, score and top-k
+    per query in one Arrow pass (``query_topk``).
 
     The tree at ``path`` carries its own format — bucket count in its
     manifest, span and codec in the payload tag — so any tree
@@ -331,7 +329,7 @@ class IndexServer:
     buckets), queries as sub-second jobs against the cache.
 
     Use as a context manager or call ``close()`` — the cache is explicitly
-    released (same lifetime contract as bm25.py / wand.py).
+    released (same lifetime contract as bm25.py).
     """
 
     def __init__(self, spark, path: str):
@@ -359,6 +357,70 @@ class IndexServer:
 TOPK_SCHEMA = "query_id long, doc_id long, score double, rank int"
 
 
+def _check_k(k: int) -> None:
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got k={k}")
+
+
+def query_topk(term, blk, max_score, payload, k: int, decode_rows,
+               score=None, mask=None):
+    """One query's top k over its candidate blocks: (doc ids, scores,
+    blocks decoded), best first, ties by doc id ascending.
+
+    ``term``, ``blk``, ``max_score`` and ``payload`` are the query's block
+    rows, at most one per (term, blk); ``decode_rows`` is a
+    ``block_decoder``; ``score`` and ``mask`` are ``_topk_over_scan``'s.
+
+    Block-max pruning: blocks are doc-range aligned, so every posting of a
+    doc lies in the bucket ``blk``. A bucket's bound is the sum of
+    max(max_score, 0) over its rows, added in term order, the order each
+    doc's score is summed in. A doc lacking a term adds nothing where the
+    bound adds a non-negative block max, and float addition is monotone,
+    so no doc scores above its bucket's bound, whatever the signs of the
+    scores. Buckets are decoded in (bound desc, blk asc) order until the
+    next bound is strictly below the k-th best score so far (an equal
+    score could still win on doc id). Each doc's sum is the one a full
+    decode computes, so the answer is the exhaustive top k. Without a
+    stored bound (``max_score`` None: a scoring step's value is no score)
+    every block is decoded in one pass.
+    """
+    _check_k(k)
+    term, blk = np.asarray(term), np.asarray(blk, np.int64)
+    payload = np.asarray(payload, object)
+    # (term, blk) order, whatever order the shuffle delivered: each doc's
+    # score and each bound are summed in the same term order on every run
+    order = np.lexsort((blk, term))
+    term, blk, payload = term[order], blk[order], payload[order]
+    if max_score is None:
+        groups, bound, visit = [np.arange(len(blk))], [np.inf], [0]
+    else:
+        buckets, inv = np.unique(blk, return_inverse=True)
+        clipped = np.maximum(np.asarray(max_score, np.float64)[order], 0.0)
+        bound = np.bincount(inv, weights=clipped, minlength=len(buckets))
+        groups = np.split(np.argsort(inv, kind="stable"),
+                          np.cumsum(np.bincount(inv))[:-1])
+        visit = np.lexsort((buckets, -bound))
+    docs, total, n_decoded = np.empty(0, np.int64), np.empty(0), 0
+    for g in visit:
+        if len(total) >= k and bound[g] < total[k - 1]:
+            break
+        rows = groups[g]
+        n, ids, tf, value = decode_rows(blk[rows], payload[rows])
+        s = value if score is None else score(np.repeat(term[rows], n), tf, value)
+        if mask is not None and len(mask):
+            at = np.minimum(np.searchsorted(mask, ids), len(mask) - 1)
+            keep = mask[at] != ids
+            ids, s = ids[keep], s[keep]
+        d, slot = np.unique(ids, return_inverse=True)
+        docs = np.concatenate([docs, d])
+        total = np.concatenate(
+            [total, np.bincount(slot, weights=s, minlength=len(d))])
+        top = np.lexsort((docs, -total))[:k]
+        docs, total = docs[top], total[top]
+        n_decoded += len(rows)
+    return docs, total, n_decoded
+
+
 def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
                     k: int, score=None, mask=None) -> DataFrame:
     """The one top-k kernel over compressed blocks, shared by
@@ -367,18 +429,20 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
     The term → query-ids map rides in the plan as one constant, exploded
     on ``term``, so the blocks fan out to every query that asks for their
     term without a join. One shuffle by query_id carries the compressed
-    payloads; each query's group is then decoded, scored, summed per doc
-    and its top k taken in a single Arrow pass. A query's group holds
-    only its candidate blocks, so its memory is bounded by the postings
-    it scores.
+    payloads; each query's group then goes through ``query_topk`` in a
+    single Arrow pass, which decodes only the doc-range buckets whose
+    block-max bound can still reach the top k. A query's group holds only
+    its candidate blocks, so its memory is bounded by the postings it
+    scores.
 
     ``score(term, tf, value)`` turns a group's postings (numpy arrays, one
     entry per posting) into their scores; without it the stored value is
-    the score (a "blocks" tree). ``mask``, a sorted int64 array of doc
-    ids, drops those docs' postings before the per-doc sum. Both travel
-    in the kernel's closure.
+    the score (a "blocks" tree) and ``max_score`` bounds it. ``mask``, a
+    sorted int64 array of doc ids, drops those docs' postings before the
+    per-doc sum. Both travel in the kernel's closure. ``k`` < 1 raises.
     """
-    decode_rows = block_decoder(scan)
+    _check_k(k)
+    decode_rows = block_decoder(*payload_format(scan))
     by_term: dict[str, list[int]] = {}
     for qid, ts in sorted(query_terms.items()):
         for t in sorted(set(ts)):
@@ -386,27 +450,18 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
     qmap = F.from_json(F.lit(json.dumps(by_term, sort_keys=True)),
                        "map<string,array<bigint>>")
     cand = scan.select(F.explode(qmap[F.col("term")]).alias("query_id"),
-                       "term", "blk", "payload")
+                       "term", "blk", "max_score", "payload")
 
     def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # fixed (term, blk) order → each doc's score is summed in the same
-        # term order on every run, whatever order the shuffle delivered
-        pdf = pdf.sort_values(["term", "blk"], kind="stable")
-        n, ids, tf, value = decode_rows(pdf["blk"], pdf["payload"])
-        s = value if score is None else score(
-            np.repeat(pdf["term"].to_numpy(), n), tf, value)
-        if mask is not None and len(mask):
-            at = np.minimum(np.searchsorted(mask, ids), len(mask) - 1)
-            keep = mask[at] != ids
-            ids, s = ids[keep], s[keep]
-        docs, inv = np.unique(ids, return_inverse=True)
-        total = np.bincount(inv, weights=s, minlength=len(docs))
-        top = np.lexsort((docs, -total))[:k]
+        docs, total, _ = query_topk(
+            pdf["term"].to_numpy(), pdf["blk"].to_numpy(),
+            None if score else pdf["max_score"].to_numpy(),
+            pdf["payload"].to_numpy(), k, decode_rows, score, mask)
         return pd.DataFrame({
-            "query_id": np.full(len(top), pdf["query_id"].iloc[0], np.int64),
-            "doc_id": docs[top],
-            "score": total[top],
-            "rank": np.arange(1, len(top) + 1, dtype=np.int32),
+            "query_id": np.full(len(docs), pdf["query_id"].iloc[0], np.int64),
+            "doc_id": docs,
+            "score": total,
+            "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
         })
 
     return cand.groupBy("query_id").applyInPandas(topk, TOPK_SCHEMA)
@@ -418,7 +473,7 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
 
     mapInPandas (Arrow batches): one narrow pass, no shuffle.
     """
-    decode_rows = block_decoder(blocks)
+    decode_rows = block_decoder(*payload_format(blocks))
 
     def gen(batches):
         for pdf in batches:

@@ -10,8 +10,9 @@ Physical shape (SURVEY §3.2): the query set is small → broadcast the
 tokenized query terms onto the postings (an inverted-index probe: only
 postings of matching terms survive the join), then one groupBy(query, doc)
 shuffle whose cardinality is |matching postings|, then a per-query window
-top-k. No cross join, no dense matrix. The block-max WAND path
-(index/wand.py) must be rank-identical to this.
+top-k. No cross join, no dense matrix. The block-max pruned serving
+kernel over compressed blocks (index/segments.py, ``query_topk``) must be
+rank-identical to this.
 """
 
 from __future__ import annotations
@@ -2426,9 +2427,10 @@ def maxscore_topk(
     stats_out: list | None = None,
 ) -> DataFrame:
     """MaxScore dynamic pruning (Turtle & Flood 1995) — the term-granular
-    sibling of block-max WAND (index/wand.py), over ANY scored index
-    relation (doc_id, term, score): rank-identical (query_id, doc_id,
-    score, rank) to ``bm25_topk(scores, qterms, k)``.
+    sibling of the block-max pruning in index/segments.py's
+    ``query_topk``, over ANY scored index relation (doc_id, term, score):
+    rank-identical (query_id, doc_id, score, rank) to
+    ``bm25_topk(scores, qterms, k)``.
 
     Batch adaptation of the classic cursor walk:
       1. θ seed — the best-impact term's own top-k postings are scored

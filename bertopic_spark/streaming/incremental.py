@@ -158,19 +158,24 @@ def stream_append_index(spark: SparkSession, input_dir: str, idx,
     skips marked batches on replay. A crash between commit and marker makes
     the replay raise on the id-range collision (append validates caller
     ids against every existing generation) instead of silently
-    double-counting — loud, never wrong.
+    double-counting — loud, never wrong. The markers go through the index
+    root's own filesystem, as its manifests do, so a URI root works.
     """
-    import os as _os
+    from pyarrow import fs as pafs
 
+    from bertopic_spark.index.checkpoint import _filesystem
+
+    filesystem, root = _filesystem(idx.root)
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        marker = _os.path.join(idx.root, f"stream_batch_{batch_id}.done")
-        if _os.path.exists(marker) or batch_df.isEmpty():
+        marker = f"{root}/stream_batch_{batch_id}.done"
+        if (filesystem.get_file_info(marker).type != pafs.FileType.NotFound
+                or batch_df.isEmpty()):
             return
         idx.append(batch_df, text_col=text_col, id_col=id_col)
-        with open(marker, "w") as f:
-            f.write("done")
+        with filesystem.open_output_stream(marker) as f:
+            f.write(b"done")
 
     writer = (
         stream.writeStream.foreachBatch(handle)

@@ -9,8 +9,9 @@ stream) and this job measures them head-to-head on the same corpus:
   score stream) and total payload bytes,
 * index build and full-decode wall time,
 * CONTENT equality: decoded postings fingerprint identically, and
-* SERVING equality: blockmax WAND top-k is row-identical across codecs
-  on a 20-query batch (rank identity is codec-independent).
+* SERVING equality: each codec's blocks, written as a segment tree and
+  served with ``serve_topk``, give row-identical top-k answers on a
+  20-query batch (rank identity is codec-independent).
 
 Run:  python jobs/pfor_ab.py [n_files] [span]
 Prints one JSON line; recorded in BENCH/PFOR.md.
@@ -19,7 +20,9 @@ Prints one JSON line; recorded in BENCH/PFOR.md.
 from __future__ import annotations
 
 import json
+import shutil
 import sys
+import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -29,13 +32,13 @@ sys.path.insert(0, ".")
 from bertopic_spark import get_spark  # noqa: E402
 from bertopic_spark.corpus import fixture_queries, load_corpus  # noqa: E402
 from bertopic_spark.index.segments import (build_block_index,  # noqa: E402
-                                           decode_blocks)
-from bertopic_spark.index.wand import blockmax_topk  # noqa: E402
+                                           decode_blocks, serve_topk,
+                                           write_index_segments)
 from bertopic_spark.operators.bm25 import (doc_scores, queries_df,  # noqa: E402
                                            query_terms)
 
 
-def build_variant(scores, codec: str, span: int, qt) -> dict:
+def build_variant(scores, codec: str, span: int, qts: dict) -> dict:
     t0 = time.perf_counter()
     blocks = build_block_index(scores, span, codec=codec).persist()
     m = blocks.agg(
@@ -51,14 +54,16 @@ def build_variant(scores, codec: str, span: int, qt) -> dict:
           .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("s"))
           .collect()[0])
     decode_s = time.perf_counter() - t0
-    handles: list = []
-    topk = blockmax_topk(blocks, qt, k=10, _persisted_out=handles)
-    tfp = (topk.select(F.xxhash64("query_id", "doc_id", F.round("score", 9),
-                                  "rank").alias("h"))
-           .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("s"))
-           .collect()[0])
-    for h in handles:
-        h.unpersist()
+    seg = tempfile.mkdtemp(prefix=f"pfor_ab_{codec}_")
+    try:
+        write_index_segments(blocks, f"{seg}/seg")
+        topk = serve_topk(scores.sparkSession, f"{seg}/seg", qts, k=10)
+        tfp = (topk.select(F.xxhash64("query_id", "doc_id",
+                                      F.round("score", 9), "rank").alias("h"))
+               .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("s"))
+               .collect()[0])
+    finally:
+        shutil.rmtree(seg, ignore_errors=True)
     blocks.unpersist()
     return {
         "codec": codec,
@@ -73,11 +78,11 @@ def build_variant(scores, codec: str, span: int, qt) -> dict:
     }
 
 
-def run_pair(corpus, span: int, qt) -> dict:
+def run_pair(corpus, span: int, qts: dict) -> dict:
     scores = doc_scores(corpus, text_col="content", id_col="doc_id").persist()
     scores.count()
-    a = build_variant(scores, "varint", span, qt)
-    b = build_variant(scores, "pfor", span, qt)
+    a = build_variant(scores, "varint", span, qts)
+    b = build_variant(scores, "pfor", span, qts)
     scores.unpersist()
     return {
         "varint": a,
@@ -91,22 +96,23 @@ def run_pair(corpus, span: int, qt) -> dict:
 
 def main(n_files: int = 20000, span: int = 1024) -> dict:
     spark = get_spark("pfor-ab", cpus=32)
-    qt = query_terms(queries_df(spark, fixture_queries(20)), "ascii_code")
-    qt = qt.persist()
-    qt.count()
+    qts: dict = {}
+    for r in query_terms(queries_df(spark, fixture_queries(20)),
+                         "ascii_code").collect():
+        qts.setdefault(r["query_id"], []).append(r["term"])
     out = {"n_files": n_files, "span": span}
     # dense-vocabulary regime (default generator): tiny gaps, varint's
     # best case (1-byte floor) — pfor must win via sub-byte bit widths
     dense = load_corpus(spark, n_files=n_files).persist()
     dense.count()
-    out["dense_vocab"] = run_pair(dense, span, qt)
+    out["dense_vocab"] = run_pair(dense, span, qts)
     dense.unpersist()
     # Heaps-law regime (rare-term-dominated dictionary — the 100-TB shape):
     # long gaps for rare terms, varint needs 2-3 bytes, pfor packs tight
     heaps = load_corpus(spark, n_files=n_files, locality=0.6,
                         pool_size=20 * n_files).persist()
     heaps.count()
-    out["heaps_vocab"] = run_pair(heaps, span, qt)
+    out["heaps_vocab"] = run_pair(heaps, span, qts)
     heaps.unpersist()
     print(json.dumps(out))
     return out

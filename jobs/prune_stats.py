@@ -1,12 +1,10 @@
 #!/usr/bin/env python
-"""Measure pruning skip rates with the stats_out counters (VERDICT r3 #9).
+"""Measure MaxScore skip rates with the stats_out counters (VERDICT r3 #9).
 
-Runs the two pruned serving paths over the sf0.1 documents table with
-their per-query stats relations enabled and prints markdown tables:
-
-* ``maxscore_topk(stats_out=)`` — postings probed vs postings scored;
-* ``blockmax_topk(stats_out=)`` — candidate buckets vs surviving buckets
-  (block-max WAND over the compressed segment relation).
+Runs ``maxscore_topk`` over the sf0.1 documents table with its per-query
+stats relation enabled and prints a markdown table of postings probed vs
+postings scored. The block-max pruning of the serving kernel is tested
+directly (``tests/test_wand.py``).
 
 Usage:  python jobs/prune_stats.py [sf_dir] [n_queries]
 """
@@ -24,11 +22,7 @@ def main(argv: list[str] | None = None) -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
     n_q = int(argv[1]) if len(argv) > 1 else 8
 
-    from pyspark.sql import functions as F
-
     from bertopic_spark.entry_queries import DRIVER_QUERIES
-    from bertopic_spark.index.segments import build_block_index
-    from bertopic_spark.index.wand import blockmax_topk
     from bertopic_spark.operators.bm25 import (maxscore_topk,
                                                okapi_doc_scores, queries_df,
                                                query_terms)
@@ -52,23 +46,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"| {r['query_id']} | {r['n_terms']} | {r['n_essential']} | "
               f"{r['n_postings']} | {r['n_scored']} | {r['n_skipped']} | "
               f"{r['skip_rate']} |")
-
-    span = 256  # many buckets at 5k docs so bucket pruning is exercised
-    blocks = build_block_index(scores, span).persist()
-    bm_stats: list = []
-    blockmax_topk(blocks, qt, k=10, seed_buckets=4,
-                  stats_out=bm_stats).count()
-    print("\n## Block-max WAND bucket skip rates (span=256)\n")
-    print("| query_id | n_buckets | n_survivors | n_skipped | skip_rate |")
-    print("|---|---|---|---|---|")
-    for r in bm_stats[0].orderBy("query_id").collect():
-        print(f"| {r['query_id']} | {r['n_buckets']} | {r['n_survivors']} | "
-              f"{r['n_skipped']} | {r['skip_rate']} |")
-    agg = bm_stats[0].agg(
-        F.sum("n_buckets").alias("b"), F.sum("n_skipped").alias("s")
-    ).collect()[0]
-    print(f"\nAggregate bucket skip rate: {agg['s']}/{agg['b']} = "
-          f"{round(agg['s'] / max(agg['b'], 1), 3)}")
     return 0
 
 

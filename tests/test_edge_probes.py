@@ -60,6 +60,27 @@ def test_oov_only_query_and_mixed_batch(spark, tiny_seg):
     assert {r["query_id"] for r in got} == {1}
 
 
+def test_k_below_one_raises(spark, tiny_seg, tmp_path):
+    """k < 1 is refused by every entry to the top-k kernel, before any
+    answer is computed (the kernel's slice would otherwise return every
+    candidate but the last for k=-1)."""
+    from bertopic_spark.index.incremental import IncrementalIndex
+
+    idx = IncrementalIndex.create(spark, str(tmp_path / "inc"))
+    idx.append(spark.createDataFrame([(1, "def handler_1")],
+                                     "doc_id long, content string"),
+               id_col="doc_id")
+    with IndexServer(spark, tiny_seg) as srv:
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k=") as e:
+                serve_topk(spark, tiny_seg, {1: ["handler_1"]}, k=k)
+            assert f"k={k}" in str(e.value)
+            with pytest.raises(ValueError, match=f"k={k}"):
+                srv.topk({1: ["handler_1"]}, k=k)
+            with pytest.raises(ValueError, match=f"k={k}"):
+                idx.topk({1: ["handler_1"]}, k=k)
+
+
 @pytest.fixture(scope="module")
 def sparse_seg(spark, tmp_path_factory):
     """The 20-doc tiny corpus spread over 64 buckets: most bucket

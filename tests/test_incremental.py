@@ -106,6 +106,27 @@ def test_tombstoned_top_doc_is_masked(spark, tmp_path, scorer):
         assert a == pytest.approx(b, abs=1e-12)
 
 
+def test_tombstones_union_without_a_shuffle(spark, tmp_path):
+    """Two delete generations: the tombstone relation is their plain
+    union (already distinct, as delete refuses a tombstoned id), its
+    executed plan holds no Exchange, and topk masks every id in it."""
+    docs = spark.createDataFrame(
+        [(1, "alpha"), (2, "alpha beta"), (3, "alpha beta gamma"),
+         (4, "alpha delta"), (5, "beta gamma")], "doc_id long, text string")
+    idx = IncrementalIndex.create(spark, str(tmp_path / "tombs"), mode=MODE)
+    idx.append(docs, text_col="text", id_col="doc_id")
+    idx.delete(docs.filter("doc_id = 1"), text_col="text", id_col="doc_id")
+    idx.delete(docs.filter("doc_id in (2, 3)"), text_col="text",
+               id_col="doc_id")
+    tomb = idx.tombstones()
+    assert sorted(r["doc_id"] for r in tomb.collect()) == [1, 2, 3]
+    plan = tomb._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    got = [r.doc_id for r in
+           idx.topk({0: ["alpha"]}, k=5).orderBy("rank").collect()]
+    assert got == [4]
+
+
 def test_generation_misuse_raises_naming_the_path(spark, tmp_path):
     """A generation tree is not a scored tree, and an index written before
     generations carried their document length cannot be read."""
@@ -263,6 +284,36 @@ def test_stream_append_matches_batch(spark, documents_df, tmp_path):
     q = stream_append_index(spark, inp, idx, "text", "doc_id", schema, ckpt)
     q.awaitTermination(120)
     assert len(IncrementalIndex.open(spark, root).manifest["gens"]) == n_gens
+
+
+def test_stream_markers_on_uri_root(spark, documents_df, tmp_path,
+                                    monkeypatch):
+    """On a file:// root the replay markers land under the root (not in a
+    relative ./file: directory), and a batch id replayed from a fresh
+    stream checkpoint appends nothing."""
+    import os
+
+    from bertopic_spark.streaming.incremental import stream_append_index
+
+    monkeypatch.chdir(tmp_path)
+    inp = str(tmp_path / "in")
+    documents_df.select("doc_id", "text").write.parquet(inp)
+    schema = "doc_id long, text string"
+    root = f"file://{tmp_path}/uri_stream"
+    idx = IncrementalIndex.create(spark, root, mode=MODE)
+    stream_append_index(spark, inp, idx, "text", "doc_id", schema,
+                        str(tmp_path / "ckpt1")).awaitTermination(120)
+    markers = [f for f in os.listdir(tmp_path / "uri_stream")
+               if f.startswith("stream_batch_")]
+    assert "stream_batch_0.done" in markers
+    n_gens = len(IncrementalIndex.open(spark, root).manifest["gens"])
+    assert n_gens == len(markers)
+    # a fresh checkpoint restarts the batch ids at 0: the markers skip them
+    stream_append_index(spark, inp, IncrementalIndex.open(spark, root),
+                        "text", "doc_id", schema,
+                        str(tmp_path / "ckpt2")).awaitTermination(120)
+    assert len(IncrementalIndex.open(spark, root).manifest["gens"]) == n_gens
+    assert not os.path.exists(tmp_path / "file:")
 
 
 @pytest.fixture(scope="module")
