@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructType
 
 from bertopic_spark.index.blocks import CODECS, DEFAULT_SPAN
-from bertopic_spark.index.checkpoint import read_manifest, write_stage
+from bertopic_spark.index.checkpoint import _filesystem, read_manifest, write_stage
 
 
 def assign_doc_ids(df: DataFrame, order_cols: Sequence[str],
@@ -165,9 +165,12 @@ def tag_payload(payload: Column, span: int, codec: str) -> Column:
     return payload.alias("payload", metadata={"span": int(span), "codec": codec})
 
 
-def payload_format(df: DataFrame, where: str = "frame") -> tuple[int, str]:
-    """(span, codec) from the payload tag; raises when there is none."""
-    md = df.schema["payload"].metadata if "payload" in df.columns else {}
+def payload_format(df: DataFrame | StructType,
+                   where: str = "frame") -> tuple[int, str]:
+    """(span, codec) from the payload tag of a frame or a schema; raises
+    when there is none."""
+    schema = df if isinstance(df, StructType) else df.schema
+    md = schema["payload"].metadata if "payload" in schema.names else {}
     if "span" not in md or "codec" not in md:
         raise ValueError(
             f"{where}: payload column carries no format tag {{span, codec}} — "
@@ -230,6 +233,9 @@ class SegmentTree:
     stays a partition column), and parquet term min/max stats prune row
     groups within them. A query whose buckets are all empty, or an empty
     tree, reads as an empty frame with the tree's schema.
+
+    The manifest also names each bucket's files, so ``read`` reads
+    buckets on the driver with pyarrow, without a Spark job.
     """
 
     def __init__(self, spark, path: str, fmt: str):
@@ -242,13 +248,29 @@ class SegmentTree:
         self.spark, self.path = spark, path.rstrip("/")
         self.n_buckets = int(m["metrics"]["n_buckets"])
         self.schema = StructType.fromJson(m["schema"])
-        self.buckets = {int(p["file"].split("/")[0].split("=")[1])
-                        for p in m["partitions"]}
+        self.files: dict[int, list[str]] = {}
+        for p in m["partitions"]:
+            b = int(p["file"].split("/")[0].split("=")[1])
+            self.files.setdefault(b, []).append(p["file"])
 
     def buckets_of(self, terms) -> list[int]:
         """The non-empty buckets that can hold ``terms``."""
         return sorted({term_bucket(t, self.n_buckets) for t in terms}
-                      & self.buckets)
+                      & self.files.keys())
+
+    def read(self, buckets, terms):
+        """The (term, blk, max_score, payload) rows of ``terms`` in
+        ``buckets`` as a pyarrow table, read on the driver through the
+        tree's own filesystem (so URI roots work), with the term filter
+        pushed into the row-group read."""
+        import pyarrow.parquet as pq
+
+        filesystem, root = _filesystem(self.path)
+        return pq.read_table(
+            [f"{root}/{f}" for b in buckets for f in self.files[b]],
+            filesystem=filesystem, partitioning=None,
+            columns=["term", "blk", "max_score", "payload"],
+            filters=[("term", "in", sorted(set(terms)))])
 
     def scan(self, terms=None) -> DataFrame:
         """The whole tree, or only the rows of ``terms``."""
@@ -285,18 +307,19 @@ def pruned_block_scan(spark, path: str, terms: list[str]) -> DataFrame:
 
 def serve_topk(spark, path: str, query_terms: dict[int, list[str]],
                k: int = 10) -> DataFrame:
-    """Low-latency serving path: pruned scan → one shuffle of the
-    compressed blocks by query → block-max pruned decode, score and top-k
-    per query in one Arrow pass (``query_topk``).
+    """Low-latency serving path: the query's buckets → block-max pruned
+    decode, score and top-k per query (``query_topk``), on the driver.
 
     The tree at ``path`` carries its own format — bucket count in its
     manifest, span and codec in the payload tag — so any tree
     ``write_index_segments`` wrote is served without format arguments.
 
-    query_terms: {query_id: [terms]} for a whole batch — one request
-    serves the batch in two Spark jobs (scan + shuffle write, then the
-    per-query pass: AQE submits each stage as its own job); per-query
-    latency = request time / batch size.
+    query_terms: {query_id: [terms]} for a whole batch. The driver reads
+    the batch's non-empty buckets with pyarrow, keeping only the rows of
+    its terms, and runs ``query_topk`` per query; the answer is a local
+    frame whose ``collect`` runs no Spark job. The driver holds the
+    blocks of the batch's terms while it scores them. The Spark route of
+    the same kernel (``_topk_over_scan``) serves ``IncrementalIndex.topk``.
 
     The stored value of each posting is its score. A generation tree of
     ``IncrementalIndex`` ("gen_blocks", whose value is a document length)
@@ -304,48 +327,27 @@ def serve_topk(spark, path: str, query_terms: dict[int, list[str]],
     which goes through the same kernel with a scoring step.
 
     Ties at rank k break by doc_id ascending — the engine-wide
-    (score desc, doc_id asc) order.
+    (score desc, doc_id asc) order. ``k`` < 1 raises.
     """
-    all_terms = sorted({t for ts in query_terms.values() for t in ts})
-    return _topk_over_scan(pruned_block_scan(spark, path, all_terms),
-                           query_terms, k)
+    return _serve(SegmentTree(spark, path, "blocks"), query_terms, k)
 
 
 class IndexServer:
-    """Warm serving session: pins the segment relation in executor storage
-    ONCE and answers every subsequent query from the cache through the
-    same tail as ``serve_topk`` — no manifest or footer reads per
-    request. Like ``serve_topk`` it takes the bucket count and block
-    format from the tree. The gain is small: on a 250-file corpus (4-core
-    VM) its p50 was 326 ms against 369 ms for the cold path, because at
-    that size per-job Spark overhead, not the listing or the scan, sets
-    the latency.
-
-    The cached relation keeps the (bucket, term) sort order from
-    ``write_index_segments``, so InMemoryTableScan's per-batch min/max
-    stats prune non-matching batches — the in-memory analog of the on-disk
-    partition/row-group pruning. At 100 TB this is the serving-tier shape:
-    hot segments pinned in executor memory (MEMORY_AND_DISK spills cold
-    buckets), queries as sub-second jobs against the cache.
-
-    Use as a context manager or call ``close()`` — the cache is explicitly
-    released (same lifetime contract as bm25.py).
+    """Warm serving session over one tree: reads its manifest once, then
+    answers each request like ``serve_topk``, on the driver with no Spark
+    job. Like ``serve_topk`` it takes the bucket count and block format
+    from the tree. It holds nothing but the manifest; ``close()`` and the
+    context manager are kept for callers that scope a session.
     """
 
     def __init__(self, spark, path: str):
         self.tree = SegmentTree(spark, path, "blocks")
-        self.blocks = self.tree.scan().persist()
-        self.blocks.count()
 
     def topk(self, query_terms: dict[int, list[str]], k: int = 10) -> DataFrame:
-        all_terms = sorted({t for ts in query_terms.values() for t in ts})
-        scan = self.blocks.filter(
-            F.col("bucket").isin(self.tree.buckets_of(all_terms))
-            & F.col("term").isin(all_terms))
-        return _topk_over_scan(scan, query_terms, k)
+        return _serve(self.tree, query_terms, k)
 
     def close(self) -> None:
-        self.blocks.unpersist()
+        """Nothing to release: the server pins no data."""
 
     def __enter__(self):
         return self
@@ -423,8 +425,8 @@ def query_topk(term, blk, max_score, payload, k: int, decode_rows,
 
 def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
                     k: int, score=None, mask=None) -> DataFrame:
-    """The one top-k kernel over compressed blocks, shared by
-    ``serve_topk``, ``IndexServer`` and ``IncrementalIndex.topk``.
+    """The top-k kernel's Spark route, which ``IncrementalIndex.topk``
+    takes (``serve_topk`` runs the same kernel on the driver, ``_serve``).
 
     The term → query-ids map rides in the plan as one constant, exploded
     on ``term``, so the blocks fan out to every query that asks for their
@@ -465,6 +467,39 @@ def _topk_over_scan(scan: DataFrame, query_terms: dict[int, list[str]],
         })
 
     return cand.groupBy("query_id").applyInPandas(topk, TOPK_SCHEMA)
+
+
+def _serve(tree: SegmentTree, query_terms: dict[int, list[str]],
+           k: int) -> DataFrame:
+    """``_topk_over_scan`` on the driver: the batch's buckets as one
+    pyarrow table (``SegmentTree.read``), then ``query_topk`` per query
+    over the rows of its terms. Span and codec come from the tree's
+    schema. The answer is a local frame, so its ``collect`` runs no Spark
+    job."""
+    import pyarrow as pa
+
+    _check_k(k)
+    decode_rows = block_decoder(*payload_format(tree.schema, tree.path))
+    terms = sorted({t for ts in query_terms.values() for t in ts})
+    buckets = tree.buckets_of(terms)
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0),
+              np.empty(0, np.int32))]
+    if buckets:
+        rows = tree.read(buckets, terms)
+        term, blk, max_score, payload = (
+            rows[c].to_numpy() for c in ("term", "blk", "max_score", "payload"))
+        for qid, ts in sorted(query_terms.items()):
+            sel = np.isin(term, sorted(set(ts)))
+            if not sel.any():
+                continue
+            docs, total, _ = query_topk(term[sel], blk[sel], max_score[sel],
+                                        payload[sel], k, decode_rows)
+            parts.append((np.full(len(docs), qid, np.int64), docs, total,
+                          np.arange(1, len(docs) + 1, dtype=np.int32)))
+    qids, docs, scores, ranks = (np.concatenate(c) for c in zip(*parts))
+    table = pa.table({"query_id": qids, "doc_id": docs, "score": scores,
+                      "rank": ranks})
+    return tree.spark.createDataFrame(table, TOPK_SCHEMA)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bertopic_spark.index.checkpoint import _filesystem
 from bertopic_spark.operators.postings import class_term_counts, doc_term_counts
 
 
@@ -145,6 +146,23 @@ def stream_ingest(spark: SparkSession, input_dir: str, idx: IncrementalIndex,
     return writer.start()
 
 
+def _exists(root: str, name: str) -> bool:
+    """Whether ``root/name`` exists, asked of the root's own filesystem
+    (``root`` may be a URI, as Spark's writes under it allow)."""
+    from pyarrow import fs as pafs
+
+    filesystem, path = _filesystem(root)
+    return filesystem.get_file_info(f"{path}/{name}").type != pafs.FileType.NotFound
+
+
+def _write_marker(root: str, name: str) -> None:
+    """Write the replay marker ``root/name`` through the root's own
+    filesystem."""
+    filesystem, path = _filesystem(root)
+    with filesystem.open_output_stream(f"{path}/{name}") as f:
+        f.write(b"done")
+
+
 def stream_append_index(spark: SparkSession, input_dir: str, idx,
                         text_col: str, id_col: str, schema: str,
                         checkpoint_dir: str, trigger_once: bool = True):
@@ -161,21 +179,14 @@ def stream_append_index(spark: SparkSession, input_dir: str, idx,
     double-counting — loud, never wrong. The markers go through the index
     root's own filesystem, as its manifests do, so a URI root works.
     """
-    from pyarrow import fs as pafs
-
-    from bertopic_spark.index.checkpoint import _filesystem
-
-    filesystem, root = _filesystem(idx.root)
     stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        marker = f"{root}/stream_batch_{batch_id}.done"
-        if (filesystem.get_file_info(marker).type != pafs.FileType.NotFound
-                or batch_df.isEmpty()):
+        marker = f"stream_batch_{batch_id}.done"
+        if _exists(idx.root, marker) or batch_df.isEmpty():
             return
         idx.append(batch_df, text_col=text_col, id_col=id_col)
-        with filesystem.open_output_stream(marker) as f:
-            f.write(b"done")
+        _write_marker(idx.root, marker)
 
     writer = (
         stream.writeStream.foreachBatch(handle)
@@ -304,22 +315,25 @@ def stream_dedup(spark: SparkSession, input_dir: str, out_root: str,
     batch-mode oracle in tests reads with a digest-distinct), which turns
     exactly-once into at-least-once-with-idempotent-read rather than
     silent duplication.
+
+    ``out_root`` may be a URI (``file:///…``): the seen-digest check and
+    the markers go through its own filesystem, as Spark's writes do.
     """
     from pyspark.sql import Window
 
+    out_root = out_root.rstrip("/")
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    docs_dir = os.path.join(out_root, "docs")
-    seen_dir = os.path.join(out_root, "seen")
+    docs_dir, seen_dir = f"{out_root}/docs", f"{out_root}/seen"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(out_root, f"dedup_batch_{batch_id}.done")
-        if os.path.exists(marker) or batch_df.isEmpty():
+        marker = f"dedup_batch_{batch_id}.done"
+        if _exists(out_root, marker) or batch_df.isEmpty():
             return
         b = batch_df.withColumn("digest", F.sha2(F.col(text_col), 256))
         w = Window.partitionBy("digest").orderBy(F.asc(id_col))
         b = (b.withColumn("_rn", F.row_number().over(w))
              .filter(F.col("_rn") == 1).drop("_rn"))
-        if os.path.exists(seen_dir):
+        if _exists(out_root, "seen"):
             seen = spark.read.parquet(seen_dir).select("digest")
             b = b.join(seen, "digest", "left_anti")
         b = b.persist()
@@ -328,8 +342,7 @@ def stream_dedup(spark: SparkSession, input_dir: str, out_root: str,
             b.select("digest").write.mode("append").parquet(seen_dir)
         finally:
             b.unpersist()
-        with open(marker, "w") as f:
-            f.write("done")
+        _write_marker(out_root, marker)
 
     writer = (
         stream.writeStream.foreachBatch(handle)

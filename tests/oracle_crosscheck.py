@@ -121,10 +121,10 @@ def main(sf_dir: str = "/root/testdata/sf0.001", only: list[str] | None = None) 
 
     spark = get_spark("oracle-crosscheck", cpus=8, shuffle_partitions=8)
     con = duckdb_con(sf_dir)
-    qs = e.queries()
-    names = [n for n in qs if not only or n in only]
-    failed = []
+    names = [n for n in e.queries() if not only or n in only]
+    counts = {"OK": 0, "WEAK": 0, "FAIL": 0}
     for name, status, detail in replay(spark, con, sf_dir, names):
+        counts[status] += 1
         if status == "OK":
             print(f"OK   {name}: {detail} rows")
         elif status == "WEAK":
@@ -133,9 +133,9 @@ def main(sf_dir: str = "/root/testdata/sf0.001", only: list[str] | None = None) 
             print(f"FAIL {name}:")
             for er in detail:
                 print("   ", er)
-            failed.append(name)
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} queries match")
-    return 1 if failed else 0
+    print(f"\n{len(names)} queries: {counts['OK']} OK (match their oracle), "
+          f"{counts['WEAK']} WEAK (no oracle), {counts['FAIL']} FAIL")
+    return 1 if counts["FAIL"] else 0
 
 
 if __name__ == "__main__":

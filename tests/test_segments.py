@@ -1,11 +1,16 @@
 """Segment serving path: bucket layout, pruned scan, serve_topk identity,
 pure-Python xxhash64 parity."""
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from bertopic_spark.corpus import fixture_queries
 from bertopic_spark.index.segments import (
+    IndexServer,
+    SegmentTree,
+    _topk_over_scan,
     build_block_index,
     pruned_block_scan,
     serve_topk,
@@ -71,9 +76,8 @@ def test_serve_topk_rank_identical(spark, corpus_df, seg_path):
 
 def test_index_server_matches_cold_path_and_releases_cache(spark, seg_path):
     """Warm serving session (IndexServer): identical results to the cold
-    serve_topk path, and the pinned relation is released on close()."""
-    from bertopic_spark.index.segments import IndexServer
-
+    serve_topk path, and nothing is left in executor storage after
+    close()."""
     path, _ = seg_path
     fq = fixture_queries(10)
     qts = {qid: sorted(set(tokenize_one(fq[qid], "ascii_code")))
@@ -90,7 +94,7 @@ def test_index_server_matches_cold_path_and_releases_cache(spark, seg_path):
     n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
     with IndexServer(spark, path) as srv:
         warm = rel(srv.topk(qts, k=10))
-        # single-query serve against the cache too
+        # single-query serve on the same session
         one = rel(srv.topk({0: qts[0]}, k=10))
     assert warm == cold
     assert one[0] == cold[0]
@@ -169,3 +173,68 @@ def test_pruned_scan_reads_only_query_buckets(spark, tie_seg):
         roots += [paths.apply(j).toString() for j in range(paths.size())]
     assert {int(re.search(r"bucket=(\d+)$", r).group(1)) for r in roots} == want
     assert {r["term"] for r in sc.select("term").collect()} == set(terms)
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"serve-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_serve_topk_runs_no_job_and_matches_the_spark_kernel(spark, tie_seg):
+    """serve_topk reads and scores on the driver with no Spark job, and its
+    rows are those of the kernel's Spark route (the one
+    IncrementalIndex.topk takes) over the pruned scan: the same
+    (query_id, rank, doc_id) and float64 scores equal with ==."""
+    path, _ = tie_seg
+    qts = {0: ["alpha", "beta"], 1: ["shared", "delta"], 2: ["zzzoov"]}
+    terms = sorted({t for ts in qts.values() for t in ts})
+
+    def rows(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in df.collect())
+
+    on_driver, n_driver = _jobs(
+        spark, lambda: rows(serve_topk(spark, path, qts, k=3)))
+    on_spark, n_spark = _jobs(spark, lambda: rows(_topk_over_scan(
+        SegmentTree(spark, path, "blocks").scan(terms), qts, 3)))
+    assert n_driver == 0 and n_spark >= 1
+    assert on_driver == on_spark and {q for q, *_ in on_driver} == {0, 1}
+
+
+def test_index_server_runs_no_spark_job(spark, tie_seg):
+    """IndexServer.topk answers like serve_topk with no Spark job, on its
+    first request and on a repeat."""
+    path, _ = tie_seg
+    qts = {0: ["alpha", "beta"], 3: ["shared", "delta"]}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    with IndexServer(spark, path) as srv:
+        first, n_first = _jobs(spark, lambda: rows(srv.topk(qts, k=3)))
+        again, n_again = _jobs(spark, lambda: rows(srv.topk(qts, k=3)))
+    assert (n_first, n_again) == (0, 0)
+    assert first == again == rows(serve_topk(spark, path, qts, k=3)) and first
+
+
+def test_serve_topk_on_a_uri_root(spark, tie_seg):
+    """A file:// tree root is read on the driver through the root's own
+    filesystem, with the answer of the plain path and no Spark job."""
+    path, _ = tie_seg
+    qts = {0: ["alpha", "beta"], 1: ["gamma", "epsilon"]}
+
+    def rows(p):
+        return sorted(tuple(r) for r in serve_topk(spark, p, qts, k=4).collect())
+
+    uri, n = _jobs(spark, lambda: rows("file://" + path))
+    assert n == 0 and uri == rows(path) and len(uri) == 8

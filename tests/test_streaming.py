@@ -270,3 +270,44 @@ def test_stream_dedup_across_batches(spark, tmp_path):
                      str(tmp_path / "ddck"), trigger_once=True)
     q.awaitTermination(120)
     assert spark.read.parquet(out + "/docs").count() == len(got2)
+
+
+def test_stream_dedup_on_a_uri_root(spark, tmp_path, monkeypatch):
+    """With a file:// out_root the seen digests and the replay markers go
+    through the root's filesystem: a batch-2 copy of a batch-1 document is
+    dropped, a replayed batch writes nothing, and nothing lands under a
+    "file:" directory in the working directory."""
+    from bertopic_spark.streaming.incremental import stream_dedup
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    schema = "doc_id long, text string"
+    src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
+    out = "file://" + str(tmp_path / "out")
+
+    def run():
+        q = stream_dedup(spark, src, out, "text", "doc_id", schema, ck,
+                         trigger_once=True)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return {(r.doc_id, r.text)
+                for r in spark.read.parquet(out + "/docs").collect()}
+
+    spark.createDataFrame([(1, "alpha"), (2, "beta")], schema) \
+        .write.mode("append").parquet(src)
+    assert run() == {(1, "alpha"), (2, "beta")}
+    spark.createDataFrame([(3, "alpha"), (4, "gamma")], schema) \
+        .write.mode("append").parquet(src)
+    want = {(1, "alpha"), (2, "beta"), (4, "gamma")}
+    assert run() == want
+    # replay batch 1: its offsets are logged but its commit is not
+    files = sorted(os.listdir(tmp_path / "out" / "docs"))
+    for name in ("1", ".1.crc"):
+        if os.path.exists(os.path.join(ck, "commits", name)):
+            os.remove(os.path.join(ck, "commits", name))
+    assert run() == want
+    assert os.path.exists(os.path.join(ck, "commits", "1"))  # it re-ran
+    assert sorted(os.listdir(tmp_path / "out" / "docs")) == files
+    assert (tmp_path / "out" / "dedup_batch_1.done").exists()
+    assert not (cwd / "file:").exists()
