@@ -281,10 +281,17 @@ class IndexBuild:
         # corpus rows into the postings via the join).
         fp_docids = derive(fp_corpus, "docids", ",".join(keys) + ",distinct")
         t0 = time.perf_counter()
+        # each stage is read back from parquet, so the relations its
+        # operator persisted (collected in `cached`) are released once the
+        # stage is written
+        cached: list[DataFrame] = []
         docids = run_stage(
             self.spark, self._dir("docids"), "docids", fp_docids,
-            lambda: assign_doc_ids(corpus.select(*keys).distinct(), keys),
+            lambda: assign_doc_ids(corpus.select(*keys).distinct(), keys,
+                                   _persisted_out=cached),
         )
+        while cached:
+            cached.pop().unpersist()
         self.timings["stage_docids"] = round(time.perf_counter() - t0, 3)
         # Map-side join strategy: broadcast while the map is broadcastable
         # (≤ ~5M docs ≈ a few hundred MB); beyond that fall back to a
@@ -302,11 +309,14 @@ class IndexBuild:
         with_ids = corpus.drop("doc_id").join(id_map, keys)
         fp_postings = derive(fp_docids, "postings", f"mode={self.mode}")
         t0 = time.perf_counter()
+        # doc_scores persists its per-document counts for one tokenize pass
         postings = run_stage(
             self.spark, self._dir("postings"), "postings", fp_postings,
             lambda: doc_scores(with_ids, text_col=content_col, id_col="doc_id",
-                               mode=self.mode),
+                               mode=self.mode, _persisted_out=cached),
         )
+        while cached:
+            cached.pop().unpersist()
         self.timings["stage_postings"] = round(time.perf_counter() - t0, 3)
         # the codec and the payload-tagged "blocks" format are params too,
         # so blocks checkpointed in another format recompute, never resume

@@ -44,7 +44,8 @@ from bertopic_spark.index.checkpoint import _filesystem, read_manifest, write_st
 
 def assign_doc_ids(df: DataFrame, order_cols: Sequence[str],
                    num_partitions: int | None = None,
-                   out_col: str = "doc_id") -> DataFrame:
+                   out_col: str = "doc_id",
+                   _persisted_out: list | None = None) -> DataFrame:
     """Dense deterministic 0-based ``out_col`` by (order_cols) without a
     global window.
 
@@ -54,6 +55,11 @@ def assign_doc_ids(df: DataFrame, order_cols: Sequence[str],
     re-ID primitive behind zero_shot_split (P2) and vocab_union (T3/U1) —
     every dense-renumber in the engine goes through this, never through a
     partitionBy-less window.
+
+    The range-partitioned input is persisted, because the offsets are
+    counted from it and must describe the rows the ids are given to. A
+    caller that writes the result out can collect that handle through
+    ``_persisted_out`` and unpersist it afterwards.
     """
     from pyspark.sql import Window
 
@@ -64,6 +70,8 @@ def assign_doc_ids(df: DataFrame, order_cols: Sequence[str],
         .withColumn("_pid", F.spark_partition_id())
     )
     parted = parted.persist()
+    if _persisted_out is not None:
+        _persisted_out.append(parted)
     counts = {r["_pid"]: r["cnt"] for r in
               parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets = {}

@@ -89,37 +89,36 @@ class BERTopicSpark:
         # generation, in application order — per-remap provenance.
         self.mappings_: list[dict[int, int]] = []
         self.custom_labels_: dict | None = None
-        self._state_x: DataFrame | None = None  # partial_fit decayed counts
+        # the class×term counts X (class_cols..., term, tf) that stats_ and
+        # scores_ weigh; partial_fit decays and accumulates it. _x_rdd is
+        # the JVM RDD of X's current localCheckpoint (see _replace_x)
+        self._state_x: DataFrame | None = None
+        self._x_rdd = None
         # embedding-backend seam (X1): (id, vector) relation from fit()
         self.embeddings_: DataFrame | None = None
         self._vec_col = "embedding"
         # (class, count) sizes carried by an imported reference model
         # (no doc_terms_ exist there — see import_reference_model)
         self._imported_sizes: DataFrame | None = None
-        # checkpoint-generation registry: slot name → persistent-RDD ids of
-        # the slot's CURRENT localCheckpoint (see _ckpt_replace)
-        self._ckpt_ids: dict[str, set[int]] = {}
         self._id_col = "doc_id"
         self._text_col = "content"
 
-    def _ckpt_replace(self, slot: str, df: DataFrame) -> DataFrame:
-        """localCheckpoint(eager) ``df`` and release ``slot``'s previous
-        checkpoint blocks. localCheckpoint pins its materialized blocks in
-        executor storage with no public handle to free them — a long
-        incremental session would grow one pinned generation per batch.
-        We diff the persistent-RDD id set around the checkpoint call and
-        unpersist the prior generation only AFTER the new one is eagerly
-        materialized (the new plan may read the old blocks)."""
-        jsc = df.sparkSession.sparkContext._jsc
-        before = {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-        out = df.localCheckpoint(eager=True)
-        jmap = jsc.getPersistentRDDs()
-        for i in self._ckpt_ids.get(slot, ()):
-            h = jmap.get(i)
-            if h is not None:
-                h.unpersist(False)
-        self._ckpt_ids[slot] = {
-            int(i) for i in jmap.keySet().toArray()} - before
+    def _replace_x(self, x: DataFrame) -> DataFrame:
+        """localCheckpoint(eager) ``x`` as the model's counts X
+        (``_state_x``) and release the previous X's blocks.
+        localCheckpoint pins its materialized blocks in executor storage
+        with no public handle to free them (``clearCache`` does not), so a
+        long incremental session would grow one pinned generation per
+        batch. The checkpoint's plan is a ``LogicalRDD`` over exactly that
+        RDD: the model keeps it and unpersists the prior generation only
+        AFTER the new one is eagerly materialized (``x`` may be planned
+        over the old blocks). Caches that the checkpoint job happened to
+        fill (say, the caller's corpus) are not X's and stay."""
+        out = x.localCheckpoint(eager=True)
+        if self._x_rdd is not None:
+            self._x_rdd.unpersist(False)
+        self._x_rdd = out._jdf.queryExecution().logical().rdd()
+        self._state_x = out
         return out
 
     # -- fit ---------------------------------------------------------------
@@ -128,6 +127,17 @@ class BERTopicSpark:
             embeddings: DataFrame | None = None, vec_col: str = "embedding"):
         """Stages 4-9 of the reference lifecycle (SURVEY §3.1) — tokenize,
         class-aggregate, weight, keep artifacts for every query method.
+
+        X, the class×term count matrix, is counted straight from the
+        tokens (one tokenize pass and one groupBy over (class, term), as
+        the reference counts each class's concatenated documents,
+        ``_bertopic.py:4203,4417-4424``), materialized once, and weighed by
+        ``_weigh``: ``stats_`` and ``scores_`` both read that one X.
+        ``doc_terms_``, the per-document counts, is a persisted but lazy
+        relation: fit and ``get_topics`` never compute it; the methods that
+        read it (``get_topic_info``, ``get_representative_docs``,
+        ``topic_coherence``, ``reduce_topics``, ``save``, ...) fill it on
+        first use.
 
         ``embeddings``: optional (id_col, vec_col) relation — the
         embedding-backend seam (reference threads ``backend/_base.py:5``
@@ -144,19 +154,35 @@ class BERTopicSpark:
             eid = id_col if id_col in embeddings.columns else embeddings.columns[0]
             self.embeddings_ = embeddings.select(
                 F.col(eid).alias(id_col), F.col(vec_col).alias(self._vec_col))
-        dt = doc_term_counts(df, text_col, [*self.class_cols, id_col],
-                             self.mode, self.ngram_range)
-        self.doc_terms_ = dt.persist()
-        x = class_term_counts(dt, self.class_cols)
-        self.stats_ = term_stats(x, self.class_cols, self.bm25_weighting,
+        if self.doc_terms_ is not None:
+            self.doc_terms_.unpersist()
+        self.doc_terms_ = doc_term_counts(
+            df, text_col, [*self.class_cols, id_col], self.mode,
+            self.ngram_range).persist()
+        self._weigh(doc_term_counts(df, text_col, self.class_cols, self.mode,
+                                    self.ngram_range))
+        return self
+
+    def _weigh(self, x: DataFrame) -> None:
+        """Make ``x`` the model's class×term counts X and weigh it.
+
+        X is materialized once, lineage cut (``_replace_x``, which
+        releases the previous X after the new one exists). The previous
+        ``stats_``/``scores_`` are released too; the new ones (df, idf and
+        the scores of ``_ctfidf.py:54-115``) are persisted lazily over the
+        one X."""
+        self._replace_x(x)
+        for d in (self.stats_, self.scores_):
+            if d is not None:
+                d.unpersist()
+        self.stats_ = term_stats(self._state_x, self.class_cols,
+                                 self.bm25_weighting,
                                  seed_words=self.seed_words,
                                  seed_multiplier=self.seed_multiplier,
                                  seed_topic_list=self.seed_topic_list).persist()
-        self.scores_ = ctfidf(
-            x, self.class_cols, self.bm25_weighting,
-            self.reduce_frequent_words, stats=self.stats_,
-        ).persist()
-        return self
+        self.scores_ = ctfidf(self._state_x, self.class_cols,
+                              self.bm25_weighting, self.reduce_frequent_words,
+                              stats=self.stats_).persist()
 
     def fit_transform(self, df: DataFrame, text_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
@@ -563,10 +589,9 @@ class BERTopicSpark:
         """Single-pass sliced re-aggregation with frozen idf (reference
         loops per slice, _bertopic.py:996-1016)."""
         self._check_fitted()
-        dt = doc_term_counts(self.doc_table_, self._text_col,
-                             [*self.class_cols, slice_col, self._id_col],
-                             self.mode, self.ngram_range)
-        x = class_term_counts(dt, [*self.class_cols, slice_col])
+        x = doc_term_counts(self.doc_table_, self._text_col,
+                            [*self.class_cols, slice_col], self.mode,
+                            self.ngram_range)
         s = ctfidf(x, [*self.class_cols, slice_col], self.bm25_weighting,
                    self.reduce_frequent_words, stats=self.stats_)
         return top_k_terms(s, [*self.class_cols, slice_col], k or self.top_n_words)
@@ -587,10 +612,9 @@ class BERTopicSpark:
         if nr_bins:
             doc_table = _bin_timestamps(doc_table, ts_col, nr_bins)
             ts_col = f"{ts_col}_bin"
-        dt = doc_term_counts(doc_table, self._text_col,
-                             [*self.class_cols, ts_col, self._id_col],
-                             self.mode, self.ngram_range)
-        x = class_term_counts(dt, [ts_col, *self.class_cols])
+        x = doc_term_counts(doc_table, self._text_col,
+                            [ts_col, *self.class_cols], self.mode,
+                            self.ngram_range)
         s = ctfidf(x, [ts_col, *self.class_cols], self.bm25_weighting,
                    self.reduce_frequent_words, stats=self.stats_)
         if evolution_tuning:
@@ -705,41 +729,23 @@ class BERTopicSpark:
         text_col = text_col or self._text_col
         id_col = id_col or self._id_col
         if self.scores_ is None:
-            self.fit(batch, text_col, id_col)
-            pre = self.doc_terms_
-            self.doc_terms_ = self._ckpt_replace("doc_terms", pre)
-            pre.unpersist()  # the persist() handle fit() created
-            self._state_x = self._ckpt_replace(
-                "state_x",
-                class_term_counts(self.doc_terms_, self.class_cols)
-                .withColumn("tf", F.col("tf").cast("double")))
-            return self
-        dt = doc_term_counts(batch, text_col, [*self.class_cols, id_col],
-                             self.mode, self.ngram_range)
-        self.doc_terms_ = self._ckpt_replace(
-            "doc_terms", self.doc_terms_.unionByName(dt))
-        # doc-table-backed methods (topics_over_time, get_document_info,
-        # approximate_distribution, reduce_outliers) must see every batch,
-        # not just the first (ADVICE r2). Lazy union — the plan grows by one
-        # scan per batch, which is fine for session-scale batch counts; the
-        # heavy per-batch state (doc_terms_/_state_x) is checkpointed above.
+            return self.fit(batch, text_col, id_col)
+        # doc_terms_ and the doc-table-backed methods (topics_over_time,
+        # get_document_info, approximate_distribution, reduce_outliers)
+        # must see every batch, not just the first (ADVICE r2). Lazy
+        # unions — each plan grows by one scan per batch, which is fine for
+        # session-scale batch counts; the per-batch state X is checkpointed.
+        old = self.doc_terms_
+        self.doc_terms_ = old.unionByName(doc_term_counts(
+            batch, text_col, [*self.class_cols, id_col], self.mode,
+            self.ngram_range)).persist()
+        old.unpersist()
         self.doc_table_ = self.doc_table_.unionByName(
             batch.select(*self.doc_table_.columns))
-        new = class_term_counts(dt, self.class_cols) \
-            .withColumn("tf", F.col("tf").cast("double"))
-        self._state_x = self._ckpt_replace(
-            "state_x",
-            decayed_update(self._state_x, new, decay, None, self.class_cols))
-        x = self._state_x
-        for d in (self.stats_, self.scores_):
-            if d is not None:
-                d.unpersist()
-        self.stats_ = term_stats(x, self.class_cols, self.bm25_weighting,
-                                 seed_words=self.seed_words,
-                                 seed_multiplier=self.seed_multiplier,
-                                 seed_topic_list=self.seed_topic_list).persist()
-        self.scores_ = ctfidf(x, self.class_cols, self.bm25_weighting,
-                              self.reduce_frequent_words, stats=self.stats_).persist()
+        new = doc_term_counts(batch, text_col, self.class_cols, self.mode,
+                              self.ngram_range)
+        self._weigh(decayed_update(self._state_x, new, decay, None,
+                                   self.class_cols))
         return self
 
     def hierarchical_topics(self) -> DataFrame:
@@ -873,7 +879,9 @@ class BERTopicSpark:
         tcol = self.class_cols[0]
         self.merge_topics({int(t): outlier_label for t in topics_to_delete})
         # the outlier class carries no representation (reference zeroes it)
-        self.scores_ = self.scores_.filter(F.col(tcol) != outlier_label).persist()
+        old = self.scores_
+        self.scores_ = old.filter(F.col(tcol) != outlier_label).persist()
+        old.unpersist()
         return self
 
     def get_params(self, deep: bool = False) -> dict:
@@ -908,9 +916,6 @@ class BERTopicSpark:
             self.reduce_frequent_words = reduce_frequent_words
         if top_n_words is not None:
             self.top_n_words = top_n_words
-        for df in (self.doc_terms_, self.stats_, self.scores_):
-            if df is not None:
-                df.unpersist()
         return self.fit(self.doc_table_, self._text_col, self._id_col)
 
     def merge_topics(self, mapping: Mapping[int, int]):
@@ -921,14 +926,13 @@ class BERTopicSpark:
         from bertopic_spark.operators.topics import remap_topics
 
         self.mappings_.append({int(k): int(v) for k, v in mapping.items()})
-        self.doc_terms_ = remap_topics(self.doc_terms_, mapping, self.class_cols[0]).persist()
-        x = class_term_counts(self.doc_terms_, self.class_cols)
-        self.stats_ = term_stats(x, self.class_cols, self.bm25_weighting,
-                                 seed_words=self.seed_words,
-                                 seed_multiplier=self.seed_multiplier,
-                                 seed_topic_list=self.seed_topic_list).persist()
-        self.scores_ = ctfidf(x, self.class_cols, self.bm25_weighting,
-                              self.reduce_frequent_words, stats=self.stats_).persist()
+        tcol = self.class_cols[0]
+        old = self.doc_terms_
+        self.doc_terms_ = remap_topics(old, mapping, tcol).persist()
+        old.unpersist()
+        # a merged class's counts are the sum of its members' rows of X
+        self._weigh(class_term_counts(remap_topics(self._state_x, mapping, tcol),
+                                      self.class_cols))
         return self
 
     def reduce_topics(self, nr_topics: int | str,
@@ -1074,14 +1078,15 @@ class BERTopicSpark:
                 "attach them as a column")
         self._text_col, self._id_col = text_col, id_col
         self.doc_table_ = docs
-        dt = doc_term_counts(docs, text_col, [*self.class_cols, id_col],
-                             self.mode, self.ngram_range)
-        self.doc_terms_ = self._ckpt_replace("doc_terms", dt)
-        x = class_term_counts(self.doc_terms_, self.class_cols)
-        self._state_x = self._ckpt_replace(
-            "state_x", x.withColumn("tf", F.col("tf").cast("double")))
+        if self.doc_terms_ is not None:
+            self.doc_terms_.unpersist()
+        self.doc_terms_ = doc_term_counts(
+            docs, text_col, [*self.class_cols, id_col], self.mode,
+            self.ngram_range).persist()
+        x = self._replace_x(doc_term_counts(
+            docs, text_col, self.class_cols, self.mode, self.ngram_range))
         dfd = x.groupBy("term").agg(F.sum("tf").alias("df"))
-        # Replace-then-reap, mirroring _ckpt_replace: the new persisted
+        # Replace-then-reap, mirroring _replace_x: the new persisted
         # relations are eagerly materialized first (their plans read the
         # old ones), then the previous imported handles are unpersisted so
         # repeat attach calls in a long-lived session don't compound
@@ -1129,6 +1134,7 @@ class BERTopicSpark:
         m.scores_ = spark.read.parquet(f"{path}/scores")
         m.stats_ = spark.read.parquet(f"{path}/stats")
         m.doc_terms_ = spark.read.parquet(f"{path}/doc_terms")
+        m._state_x = class_term_counts(m.doc_terms_, m.class_cols)
         return m
 
     # -- cross-model merge (J8; reference merge_models, _bertopic.py:3590-3729)
@@ -1207,4 +1213,5 @@ class BERTopicSpark:
                     other.scores_.filter(F.col(tcol).isin(list(app_map))),
                     app_map, tcol)
                 merged.scores_ = merged.scores_.unionByName(new_rows)
+        merged._state_x = class_term_counts(merged.doc_terms_, merged.class_cols)
         return merged

@@ -106,25 +106,35 @@ def doc_term_counts(
       network/disk-bound, i.e. at the 10^12-doc target. Requires key_cols
       to be row-unique (e.g. include doc_id); class-level keys must use
       "shuffle" or fold with ``class_term_counts`` afterwards.
+
+    Both branches explode with ``explode_outer`` and drop the NULL row an
+    empty or NULL token array yields. A plain ``explode`` gets the filter
+    ``size(tokens) > 0 AND isnotnull(tokens)`` from Spark's
+    ``InferFiltersFromGenerate`` rule, which is then pushed below the
+    projection and copies the tokenizer into it: the optimized plan held
+    three tokenizer calls, and each document was tokenized more than once.
+    The rows are the same, since the tokenizer never yields a NULL token.
     """
     toks = with_tokens(df.select(*key_cols, text_col), text_col, mode, ngram_range, use_udf)
     if combine == "local":
         out = toks.withColumn("pairs", runlength_pairs(F.col("tokens"))).select(
             *key_cols,
             F.size("tokens").cast("long").alias("doc_len"),
-            F.explode("pairs").alias("p"),
-        ).select(*key_cols, F.col("p.term").alias("term"), F.col("p.tf").alias("tf"),
-                 "doc_len")
+            F.explode_outer("pairs").alias("p"),
+        ).filter(F.col("p").isNotNull()).select(
+            *key_cols, F.col("p.term").alias("term"), F.col("p.tf").alias("tf"), "doc_len")
         return out if with_len else out.drop("doc_len")
     if not with_len:
         return (
-            toks.select(*key_cols, F.explode("tokens").alias("term"))
+            toks.select(*key_cols, F.explode_outer("tokens").alias("term"))
+            .filter(F.col("term").isNotNull())
             .groupBy(*key_cols, "term")
             .agg(F.count(F.lit(1)).alias("tf"))
         )
     toks = toks.withColumn("doc_len", F.size("tokens").cast("long"))
     return (
-        toks.select(*key_cols, "doc_len", F.explode("tokens").alias("term"))
+        toks.select(*key_cols, "doc_len", F.explode_outer("tokens").alias("term"))
+        .filter(F.col("term").isNotNull())
         .groupBy(*key_cols, "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.first("doc_len").alias("doc_len"))
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bertopic_spark.index.checkpoint import _filesystem
-from bertopic_spark.operators.postings import class_term_counts, doc_term_counts
+from bertopic_spark.operators.postings import doc_term_counts
 
 
 def vocab_union(vocab: DataFrame, new_terms: DataFrame) -> DataFrame:
@@ -77,12 +77,12 @@ class IncrementalIndex:
         self.spark, self.root = spark, root
         self.class_cols, self.decay, self.delete_min_df = class_cols, decay, delete_min_df
         self.mode = mode
-        os.makedirs(root, exist_ok=True)
+        filesystem, path = _filesystem(root)
+        filesystem.create_dir(path, recursive=True)
 
     def _read(self, name: str, schema: str) -> DataFrame:
-        p = os.path.join(self.root, name)
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.read.parquet(p)
+        if _exists(self.root, f"{name}/_SUCCESS"):
+            return self.spark.read.parquet(os.path.join(self.root, name))
         return self.spark.createDataFrame([], schema)
 
     def _write(self, df: DataFrame, name: str) -> None:
@@ -102,8 +102,7 @@ class IncrementalIndex:
         return self._read("vocab", "term string, term_id long")
 
     def partial_fit(self, batch: DataFrame, text_col: str, class_col_values: list[str]) -> None:
-        dt = doc_term_counts(batch, text_col, [*class_col_values, "doc_id"], self.mode)
-        counts = class_term_counts(dt, class_col_values)
+        counts = doc_term_counts(batch, text_col, class_col_values, self.mode)
         for src, dst in zip(class_col_values, self.class_cols):
             if src != dst:
                 counts = counts.withColumnRenamed(src, dst)

@@ -203,3 +203,18 @@ def test_pre_tag_blocks_checkpoint_is_not_resumed(spark, tmp_path):
     assert read_manifest(bdir)["created_utc"] != old["created_utc"]
     assert read_manifest(os.path.join(root, "postings")) == postings
     assert payload_format(blocks) == (4096, "varint")
+
+
+def test_repeated_builds_leave_no_cached_relation(spark, tmp_path):
+    """The docids stage persists its range-partitioned keys and the
+    postings stage its per-document counts; each releases them once the
+    stage is written, so repeated builds leave the persistent-RDD count
+    flat."""
+    corpus = spark.createDataFrame(
+        [("r", f"p{i}", "c", f"alpha beta_{i % 3} gamma{i} alpha") for i in range(40)],
+        "repo string, path string, commit string, content string")
+    jsc = spark.sparkContext._jsc
+    n0 = jsc.getPersistentRDDs().size()
+    for i in range(3):
+        IndexBuild(spark, str(tmp_path / f"idx{i}")).build(corpus)
+        assert jsc.getPersistentRDDs().size() == n0

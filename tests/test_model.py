@@ -382,3 +382,79 @@ def test_get_topic_aspects(model):
         assert len(langs) == 5, aspect
     with pytest.raises(ValueError):
         model.get_topic_aspects("nope")
+
+
+def _with_edge_docs(documents_df):
+    """The fixture corpus plus a document with a NULL class and one whose
+    text yields no token."""
+    spark = documents_df.sparkSession
+    edge = spark.createDataFrame(
+        [(100_000, None, "table scan merge null class"), (100_001, "es", "!! ?")],
+        "doc_id long, lang string, text string")
+    return documents_df.select("doc_id", "lang", "text").unionByName(edge)
+
+
+@pytest.mark.parametrize("params", [
+    {},
+    {"bm25_weighting": True},
+    {"reduce_frequent_words": True},
+    {"seed_words": ["table", "merge"], "seed_topic_list": [["scan"], ["merge"]]},
+    {"ngram_range": (1, 2)},
+], ids=["default", "bm25", "reduce_frequent", "seeded", "ngram12"])
+def test_fit_matches_the_per_document_route(documents_df, params):
+    """fit counts X straight from the tokens; folding per-document counts
+    up to classes gives the same integers, so stats_, scores_ and
+    get_topics are the same float64 rows."""
+    from collections import Counter
+
+    from bertopic_spark.operators.ctfidf import ctfidf, term_stats, top_k_terms
+    from bertopic_spark.operators.postings import class_term_counts, doc_term_counts
+
+    df = _with_edge_docs(documents_df)
+    m = BERTopicSpark(class_cols=["lang"], **params).fit(df, "text", "doc_id")
+    x = class_term_counts(
+        doc_term_counts(df, "text", ["lang", "doc_id"], m.mode, m.ngram_range),
+        ["lang"])
+    stats = term_stats(x, ["lang"], m.bm25_weighting, seed_words=m.seed_words,
+                       seed_multiplier=m.seed_multiplier,
+                       seed_topic_list=m.seed_topic_list)
+    scores = ctfidf(x, ["lang"], m.bm25_weighting, m.reduce_frequent_words,
+                    stats=stats)
+
+    def rows(d):
+        return Counter(map(tuple, d.collect()))
+
+    got = rows(m.stats_)
+    assert got == rows(stats)
+    assert any(r[0] == "null" for r in got)  # the NULL class's X rows count
+    assert rows(m.scores_) == rows(scores)
+    assert rows(m.get_topics()) == rows(top_k_terms(scores, ["lang"], 10))
+
+
+def test_refits_release_their_cached_relations(documents_df):
+    """update_topics, merge_topics and partial_fit each replace X, stats_
+    and scores_: afterwards as many persistent RDDs remain as after
+    fit + get_topics, which leave the per-document counts unmaterialized."""
+    spark = documents_df.sparkSession
+    jsc = spark.sparkContext._jsc
+    d = documents_df.select("doc_id", "text", (F.col("doc_id") % 5).alias("topic"))
+    d.count()  # the fixture's own cache is materialized before counting
+
+    def persistent():
+        return jsc.getPersistentRDDs().size()
+
+    n0 = persistent()
+    m = BERTopicSpark(class_cols=["topic"]).fit(d.filter("doc_id < 400"),
+                                                 "text", "doc_id")
+    m.get_topics().collect()
+    n1 = persistent()
+    assert n1 - n0 == 3  # X, stats_, scores_; doc_terms_ is still lazy
+
+    m.update_topics(bm25_weighting=True)
+    m.get_topics().collect()
+    m.merge_topics({1: 0})
+    m.get_topics().collect()
+    m.partial_fit(d.filter("doc_id >= 400"), "text", "doc_id")
+    m.get_topics().collect()
+    assert persistent() == n1
+    assert sum(r["count"] for r in m.get_topic_info().collect()) == d.count()

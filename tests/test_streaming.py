@@ -73,6 +73,28 @@ def test_incremental_index_matches_one_shot(spark, documents_df, tmp_path):
     assert idx.scores().count() == len(want)
 
 
+def test_incremental_index_on_a_uri_root(spark, documents_df, tmp_path,
+                                         monkeypatch):
+    """A file:// root keeps the state across batches exactly as a plain
+    path does (each batch reads the state the previous one wrote), and no
+    "file:" directory appears in the working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    b1 = documents_df.filter("doc_id % 2 = 0")
+    b2 = documents_df.filter("doc_id % 2 = 1")
+
+    def state(root):
+        idx = IncrementalIndex(spark, root, class_cols=("lang",), decay=0.5)
+        idx.partial_fit(b1, "text", ["lang"])
+        idx.partial_fit(b2, "text", ["lang"])
+        return ({(r["lang"], r["term"]): r["tf"] for r in idx.state().collect()},
+                {(r["term"], r["term_id"]) for r in idx.vocab().collect()})
+
+    assert state("file://" + str(tmp_path / "uri")) == state(str(tmp_path / "plain"))
+    assert not (cwd / "file:").exists()
+
+
 def test_stream_ingest_foreachbatch(spark, documents_df, tmp_path):
     src = str(tmp_path / "src")
     documents_df.limit(50).write.parquet(src + "/b1")

@@ -101,3 +101,28 @@ def test_doc_term_counts_combine_modes_identical(spark):
     assert a.columns == b.columns
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert a.count() == b.count() > 0
+
+
+@pytest.mark.parametrize("combine", ["shuffle", "local"])
+@pytest.mark.parametrize("with_len", [False, True])
+def test_doc_term_counts_tokenizes_each_document_once(spark, combine, with_len):
+    """The optimized plan evaluates the tokenizer once (no filter inferred
+    from the explode drags a copy of it below the projection), and the rows
+    are the python kernel's counts: no row for a NULL or token-free text."""
+    from collections import Counter
+
+    from bertopic_spark.operators.postings import doc_term_counts
+
+    rows = [(0, "aa bb aa cc aa bb"), (1, ""), (2, None), (3, "zz !!"),
+            (4, "naïve café naïve")]
+    df = spark.createDataFrame(rows, "doc_id long, t string")
+    out = doc_term_counts(df, "t", ["doc_id"], with_len=with_len, combine=combine)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract_all") == 1
+    want = set()
+    for i, t in rows:
+        toks = tokenize_one(t) if t is not None else []
+        for term, tf in Counter(toks).items():
+            want.add((i, term, tf, len(toks)) if with_len else (i, term, tf))
+    assert {tuple(r) for r in out.collect()} == want
+    assert out.count() == len(want)
