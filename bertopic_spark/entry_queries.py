@@ -6775,9 +6775,11 @@ def q_okapi_wand_topk(spark, sf_dir):
     """Okapi served through the block-max pruned serving kernel
     (okapi_doc_scores → build_block_index → write_index_segments into a
     temp dir → serve_topk): the same compressed-block machinery runs a
-    second ranking function unchanged because the blocks carry
-    scorer-agnostic (tf, score) streams. At span 512 the sf0.1 documents
-    fall into 10 doc-range buckets, so the pruning runs. Oracle = the
+    second ranking function because the blocks carry score-free
+    (doc gap, tf, doc length) streams and the tree names its scorer
+    (okapi, k1, b, avgdl) beside each term's RSJ idf. At span 512 the
+    sf0.1 documents fall into 10 doc-range buckets, so the pruning runs.
+    Oracle = the
     exhaustive Okapi SQL (pruned path, same truth)."""
     import shutil
     import tempfile

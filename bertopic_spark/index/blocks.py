@@ -1,7 +1,10 @@
-"""Compressed posting blocks: delta + varint doc-ids, varint tfs, one
-float64 value per posting (the score in a "blocks" tree, the document
-length in an incremental generation's "gen_blocks" tree), per-block
-max-value / doc-range metadata (north rule).
+"""Compressed posting blocks: one score-free layout for every scoring
+tree — a varint count, then doc-id gaps, tfs and document lengths, each
+a varint (or PFor) stream — plus per-block doc-range metadata (north
+rule). No score is stored: a batch tree keeps one float64 weight per
+(term, blk) row beside the payload, an incremental generation takes its
+weights from the merged stats, and the top-k kernel scores every posting
+from (tf, doc length, weight) (segments.posting_scorer).
 
 Layout decision for 100 TB: blocks are keyed by (term, doc_id // SPAN) —
 doc-id-RANGE aligned, not fixed-count. Rationale:
@@ -28,7 +31,6 @@ rule's addition, not the reference's.
 
 from __future__ import annotations
 
-import struct
 from typing import Iterable, List, Tuple
 
 import numpy as np
@@ -115,7 +117,15 @@ def _varint_decode(buf: bytes, pos: int, n: int) -> Tuple[List[int], int]:
     return vals, pos
 
 
-def encode_block_py(doc_ids: List[int], tfs: List[int], scores: List[float],
+def _gaps(ids: np.ndarray, range_start: int) -> np.ndarray:
+    """Doc-id gaps, the first one against the block's range start."""
+    gaps = np.empty(ids.shape, dtype=np.uint64)
+    gaps[0] = ids[0] - range_start
+    gaps[1:] = np.diff(ids).astype(np.uint64)
+    return gaps
+
+
+def encode_block_py(doc_ids: List[int], tfs: List[int], doc_lens: List[int],
                     range_start: int) -> bytes:
     """Scalar reference encoder (property-test oracle for the numpy path)."""
     if not doc_ids:
@@ -126,63 +136,59 @@ def encode_block_py(doc_ids: List[int], tfs: List[int], scores: List[float],
     deltas.extend(doc_ids[i] - doc_ids[i - 1] for i in range(1, len(doc_ids)))
     _varint_encode(deltas, out)
     _varint_encode(tfs, out)
-    out += struct.pack(f"<{len(scores)}d", *scores)
+    _varint_encode(doc_lens, out)
     return bytes(out)
 
 
-def decode_block_py(payload: bytes, range_start: int) -> Tuple[List[int], List[int], List[float]]:
+def decode_block_py(payload: bytes, range_start: int) -> Tuple[List[int], List[int], List[int]]:
     """Scalar reference decoder (oracle for the numpy path)."""
     if not payload:
         return [], [], []
     (n,), pos = _varint_decode(payload, 0, 1)
     deltas, pos = _varint_decode(payload, pos, n)
     tfs, pos = _varint_decode(payload, pos, n)
-    scores = list(struct.unpack_from(f"<{n}d", payload, pos))
+    doc_lens, pos = _varint_decode(payload, pos, n)
     doc_ids = []
     acc = range_start
-    for i, d in enumerate(deltas):
-        acc = acc + d if i else range_start + d
+    for d in deltas:
+        acc += d
         doc_ids.append(acc)
-    return doc_ids, tfs, scores
+    return doc_ids, tfs, doc_lens
 
 
-def encode_block(doc_ids, tfs, scores, range_start: int) -> bytes:
+def encode_block(doc_ids, tfs, doc_lens, range_start: int) -> bytes:
     """Encode one block's postings (doc_ids ascending within the block).
 
-    Payload: varint n; varint first_doc_delta (vs range_start); varint
-    doc-id gaps; varint tfs; float64 scores (little-endian).
-    Scores stay float64 so the WAND path is bit-identical to the exhaustive
-    scorer (rank-identity gate); ids/tfs carry the compression win.
-    Vectorized (numpy); byte-identical to ``encode_block_py``.
+    Payload: varint n; varint doc-id gaps (the first against
+    range_start); varint tfs; varint document lengths. No score is
+    stored: a posting's score is a function of its tf, its document's
+    length and the per-(term, blk) weight beside the payload, and the
+    top-k kernel computes it in float64 in the operation order of the
+    one-shot scorers (segments.posting_scorer), so it is bit-identical
+    to theirs. Vectorized (numpy); byte-identical to ``encode_block_py``.
     """
     ids = np.asarray(doc_ids, dtype=np.int64)
     if ids.size == 0:
         return b""
-    deltas = np.empty(ids.shape, dtype=np.uint64)
-    deltas[0] = ids[0] - range_start
-    deltas[1:] = np.diff(ids).astype(np.uint64)
     head = bytearray()
     _varint_encode([int(ids.size)], head)
-    return (
-        bytes(head)
-        + _varint_encode_np(deltas)
-        + _varint_encode_np(np.asarray(tfs, dtype=np.uint64))
-        + np.asarray(scores, dtype="<f8").tobytes()
-    )
+    return bytes(head) + _varint_encode_np(np.concatenate([
+        _gaps(ids, range_start), np.asarray(tfs, dtype=np.uint64),
+        np.asarray(doc_lens, dtype=np.uint64)]))
 
 
-def decode_block(payload: bytes, range_start: int) -> Tuple[List[int], List[int], List[float]]:
+def decode_block(payload: bytes, range_start: int) -> Tuple[List[int], List[int], List[int]]:
     """Inverse of encode_block (numpy fast path; returns plain lists)."""
-    ids, tfs, scores = decode_block_arrays(payload, range_start)
-    return list(ids), list(tfs), list(scores)
+    ids, tfs, doc_lens = decode_block_arrays(payload, range_start)
+    return ids.tolist(), tfs.tolist(), doc_lens.tolist()
 
 
 # ---------------------------------------------------------------------------
 # PFor-delta codec (Zukowski et al., ICDE 2006; NewPFD patch scheme of
 # Yan/Ding/Suel, WWW 2009): bit-pack every value's low b bits at a fixed
 # width chosen per block, patch the overflow ("exceptions") out of band as
-# varints. Same block grid / metadata / float64 score stream as the varint
-# codec — only the integer streams change — so WAND metadata and rank
+# varints. Same block grid, metadata and three integer streams as the
+# varint codec — only their bytes change — so block maxes and rank
 # identity are codec-independent. The north rule names this family
 # explicitly ("delta+varint (PForDelta-style) compressed posting blocks");
 # jobs/pfor_ab.py measures both codecs head-to-head.
@@ -277,57 +283,99 @@ def _pfor_decode_np(buf: np.ndarray, pos: int, n: int) -> Tuple[np.ndarray, int]
     return vals, pos
 
 
-def encode_block_pfor(doc_ids, tfs, scores, range_start: int) -> bytes:
+def encode_block_pfor(doc_ids, tfs, doc_lens, range_start: int) -> bytes:
     """PFor-delta flavor of ``encode_block``: varint n; PFor(doc-id gaps);
-    PFor(tfs); float64 scores. Same semantics, alternative codec."""
+    PFor(tfs); PFor(document lengths). Same semantics, alternative codec."""
     ids = np.asarray(doc_ids, dtype=np.int64)
     if ids.size == 0:
         return b""
-    deltas = np.empty(ids.shape, dtype=np.uint64)
-    deltas[0] = ids[0] - range_start
-    deltas[1:] = np.diff(ids).astype(np.uint64)
     head = bytearray()
     _varint_encode([int(ids.size)], head)
     return (
         bytes(head)
-        + _pfor_encode_np(deltas)
+        + _pfor_encode_np(_gaps(ids, range_start))
         + _pfor_encode_np(np.asarray(tfs, dtype=np.uint64))
-        + np.asarray(scores, dtype="<f8").tobytes()
+        + _pfor_encode_np(np.asarray(doc_lens, dtype=np.uint64))
     )
+
+
+def _empty_postings():
+    return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
 
 
 def decode_block_pfor_arrays(payload: bytes, range_start: int):
     """Inverse of encode_block_pfor (numpy arrays, same contract as
     ``decode_block_arrays``)."""
     if not payload:
-        return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))
+        return _empty_postings()
     buf = np.frombuffer(payload, dtype=np.uint8)
     (n_arr, pos) = _varint_decode_np(buf, 0, 1)
     n = int(n_arr[0])
     deltas, pos = _pfor_decode_np(buf, pos, n)
     tfs, pos = _pfor_decode_np(buf, pos, n)
-    scores = np.frombuffer(payload, dtype="<f8", count=n, offset=pos)
+    doc_lens, pos = _pfor_decode_np(buf, pos, n)
     doc_ids = np.cumsum(deltas.astype(np.int64)) + range_start
-    return doc_ids, tfs.astype(np.int64), scores
+    return doc_ids, tfs.astype(np.int64), doc_lens.astype(np.int64)
 
 
 def decode_block_arrays(payload: bytes, range_start: int):
-    """Decode to numpy arrays (int64 ids, int64 tfs, float64 scores) —
-    the zero-copy-ish path the query kernels consume."""
-    if not payload:
-        return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    (n_arr, pos) = _varint_decode_np(buf, 0, 1)
-    n = int(n_arr[0])
-    deltas, pos = _varint_decode_np(buf, pos, n)
-    tfs, pos = _varint_decode_np(buf, pos, n)
-    scores = np.frombuffer(payload, dtype="<f8", count=n, offset=pos)
-    doc_ids = np.cumsum(deltas.astype(np.int64)) + range_start
-    return doc_ids, tfs.astype(np.int64), scores
+    """Inverse of encode_block as numpy arrays (int64 ids, int64 tfs,
+    int64 document lengths)."""
+    return _decode_varint_payloads([payload], [range_start])[1:]
 
 
-# codec name → (encode, decode); the name is what a block payload's
-# format tag records (segments.tag_payload)
+def _decode_varint_payloads(payloads, range_starts):
+    """Every varint block of a batch in one pass over the concatenated
+    payloads: each payload is nothing but varints (n, then 3·n values),
+    so all of them decode at once, and a payload's first varint is the
+    number of varints that end before its first byte."""
+    lens = np.fromiter((len(p) for p in payloads), np.int64, len(payloads))
+    buf = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    ends = np.flatnonzero(buf < 0x80)
+    starts = np.empty_like(ends)
+    starts[:1] = 0
+    starts[1:] = ends[:-1] + 1
+    vals = (buf[starts] & 0x7F).astype(np.uint64)
+    width = ends - starts + 1
+    for kk in range(1, int(width.max()) if len(width) else 0):
+        sel = np.flatnonzero(width > kk)
+        vals[sel] |= ((buf[starts[sel] + kk] & 0x7F).astype(np.uint64)
+                      << np.uint64(7 * kk))
+    vals = vals.astype(np.int64)
+    first = np.searchsorted(ends, np.cumsum(lens) - lens)
+    n = np.zeros(len(lens), np.int64)
+    full = lens > 0
+    n[full] = vals[first[full]]
+    total = int(n.sum())
+    block_start = np.cumsum(n) - n  # each block's first posting
+    rep_n = np.repeat(n, n)
+    at = np.repeat(first + 1 - block_start, n) + np.arange(total)
+    gaps = vals[at]
+    csum = np.cumsum(gaps)
+    # a block's ids restart from its range start
+    before = (csum - gaps)[block_start[full]]
+    ids = csum + np.repeat(np.asarray(range_starts, np.int64)[full]
+                           - before, n[full])
+    return n, ids, vals[at + rep_n], vals[at + 2 * rep_n]
+
+
+def decode_payloads(codec: str, payloads, range_starts):
+    """A batch of ``codec`` blocks: (postings per block, doc ids, tfs,
+    document lengths), the last three concatenated in block order. The
+    varint codec decodes the whole batch in one vectorized pass; PFor
+    decodes block by block."""
+    if codec == "varint":
+        return _decode_varint_payloads(payloads, range_starts)
+    decode = CODECS[codec][1]
+    parts = [decode(p, r) for p, r in zip(payloads, range_starts)]
+    if not parts:
+        return (np.empty(0, np.int64), *_empty_postings())
+    ids, tfs, doc_lens = (np.concatenate(c) for c in zip(*parts))
+    return np.array([len(p[0]) for p in parts], np.int64), ids, tfs, doc_lens
+
+
+# codec name → (encode, decode one block); the name is what a block
+# payload's format tag records (segments.tag_payload)
 CODECS = {
     "varint": (encode_block, decode_block_arrays),
     "pfor": (encode_block_pfor, decode_block_pfor_arrays),

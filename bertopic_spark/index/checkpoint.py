@@ -206,9 +206,10 @@ def derive(parent_fp: str, stage: str, params: str) -> str:
 class IndexBuild:
     """The staged, resumable BM25 index build (north rule end-to-end job).
 
-    stages: docids → postings(scored) → blocks; each checkpointed under
-    ``root/<stage>/`` with lineage manifests. ``status()`` reports progress.
-    The blocks carry their span and codec in the payload tag, so no reader
+    stages: docids → postings(scored, with each score's doc_len and
+    weight) → blocks; each checkpointed under ``root/<stage>/`` with
+    lineage manifests. ``status()`` reports progress. The blocks carry
+    their span, codec, layout and scorer in the payload tag, so no reader
     is told them again.
     """
 
@@ -226,7 +227,7 @@ class IndexBuild:
 
     def build(self, corpus: DataFrame, content_col: str = "content",
               sha_col: str | None = "content_sha") -> DataFrame:
-        from bertopic_spark.index.segments import (assign_doc_ids,
+        from bertopic_spark.index.segments import (LAYOUT, assign_doc_ids,
                                                    build_block_index,
                                                    verify_content_sha)
         from bertopic_spark.operators.bm25 import doc_scores
@@ -307,7 +308,10 @@ class IndexBuild:
         # a caller-supplied doc_id is re-derived from the same key order —
         # drop it so the map's column is the single source of truth
         with_ids = corpus.drop("doc_id").join(id_map, keys)
-        fp_postings = derive(fp_docids, "postings", f"mode={self.mode}")
+        # the postings carry each score's factors (doc_len, the tagged
+        # weight), so postings checkpointed without them recompute
+        fp_postings = derive(fp_docids, "postings",
+                             f"mode={self.mode},factors=doc_len,weight")
         t0 = time.perf_counter()
         # doc_scores persists its per-document counts for one tokenize pass
         postings = run_stage(
@@ -318,11 +322,13 @@ class IndexBuild:
         while cached:
             cached.pop().unpersist()
         self.timings["stage_postings"] = round(time.perf_counter() - t0, 3)
-        # the codec and the payload-tagged "blocks" format are params too,
-        # so blocks checkpointed in another format recompute, never resume
+        # the codec, the payload-tagged "blocks" format and the posting
+        # layout are params too, so blocks checkpointed in another format
+        # or layout recompute, never resume
         codec = "varint"
         fp_blocks = derive(fp_postings, "blocks",
-                           f"span={self.span},codec={codec},format=blocks")
+                           f"span={self.span},codec={codec},format=blocks,"
+                           f"layout={LAYOUT}")
         t0 = time.perf_counter()
         blocks = run_stage(
             self.spark, self._dir("blocks"), "blocks", fp_blocks,

@@ -13,9 +13,11 @@ added or removed; only the small per-term ``idf`` table does (df and the
 int-truncated average length A are corpus-global). So:
 
 * every **add generation** stores idf-free postings as a "gen_blocks"
-  tree: the payload carries (doc id, tf) and, in its float64 value slot,
-  the document length (Lucene keeps norms in .nvd; here they ride the
-  block). Beside it sit a per-term stats relation (term, df = Σtf,
+  tree, in the one score-free layout of every scoring tree: the payload
+  carries (doc gap, tf, document length) per posting (Lucene keeps norms
+  in .nvd; here they are a varint stream of the block). Unlike a batch
+  tree it stores no per-term weight, since idf moves with every
+  generation. Beside it sit a per-term stats relation (term, df = Σtf,
   n_docs = documents holding the term) and a ``norms`` sidecar
   (doc_id, doc_len) for the id-collision check and ``changes_between``.
 * every **delete generation** stores the tombstoned doc_ids plus the same
@@ -23,10 +25,12 @@ int-truncated average length A are corpus-global). So:
 * at query time the merged statistics are one signed sum over the per-gen
   stats (pruned to the query's terms, pushed to the parquet scan) and a
   driver-side sum of per-gen scalar counters. Spark computes each query
-  term's idf from them, and the idf table and the tombstones go to the
-  same top-k kernel that serves batch trees (segments._topk_over_scan),
-  which scores every posting from its tf and doc length in float64, in
-  the operation order of the one-shot scorers. Top-k over
+  term's idf from them, and the idf table (each block row's weight) and
+  the tombstones go to the same top-k kernel that serves batch trees
+  (segments._topk_over_scan), which scores every posting from its tf and
+  doc length in float64 with the scorer batch trees use
+  (segments.posting_scorer), in the operation order of the one-shot
+  scorers. Top-k over
   (adds − deletes) therefore matches a rebuild over the surviving
   documents.
 
@@ -49,7 +53,6 @@ from __future__ import annotations
 from typing import Mapping, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,7 +76,8 @@ from bertopic_spark.operators.postings import doc_term_counts
 
 _MANIFEST = "gens.json"
 # the generation tree format; an index whose config names no format holds
-# no document lengths in its blocks and must be rebuilt
+# no document lengths in its blocks, and one whose trees hold them in a
+# float64 value slot (no payload layout tag), must be rebuilt
 GEN_FORMAT = "gen_blocks"
 _STATS_SCHEMA = "term string, df long, n_docs long"
 _NORMS_SCHEMA = "doc_id long, doc_len long"
@@ -170,7 +174,12 @@ class IncrementalIndex:
                 f"{root}: generations in format {found!r}, not {GEN_FORMAT!r} "
                 "(written before postings carried their document length); "
                 "rebuild the index")
-        return cls(spark, root, manifest)
+        index = cls(spark, root, manifest)
+        for g in manifest["gens"]:  # a tree in another layout raises
+            if g["kind"] == "add":
+                SegmentTree(spark, index._gen_dir(g["name"], "segments"),
+                            GEN_FORMAT)
+        return index
 
     def status(self) -> dict:
         gens = self.manifest["gens"]
@@ -227,12 +236,10 @@ class IncrementalIndex:
 
     def _write_add(self, gdir: str, x: DataFrame):
         """An add generation from (doc_id, term, tf, doc_len) rows: its
-        "gen_blocks" tree, whose value slot holds doc_len, its norms and
-        its stats; returns the scalar counters."""
-        blocks = build_block_index(
-            x.select("doc_id", "term", "tf",
-                     F.col("doc_len").cast("double").alias("score")),
-            self.cfg["span"])
+        "gen_blocks" tree (unweighted blocks), its norms and its stats;
+        returns the scalar counters."""
+        blocks = build_block_index(x.select("doc_id", "term", "tf", "doc_len"),
+                                   self.cfg["span"])
         write_tree(blocks, f"{gdir}/segments", GEN_FORMAT,
                    self.cfg["n_buckets"])
         (x.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
@@ -469,9 +476,10 @@ class IncrementalIndex:
         The query's blocks from every add generation go to the same top-k
         kernel as ``serve_topk`` (segments._topk_over_scan). Spark computes
         the idf of the query's terms from the merged stats; the idf table
-        and the sorted tombstones ride in the kernel's closure, which
-        scores each posting from its tf and the document length stored
-        beside it, and drops tombstoned docs before the per-doc sum.
+        (the weight of each block row) and the sorted tombstones ride in
+        the kernel's closure, which scores each posting from its tf and
+        the document length stored beside it with ``posting_scorer``, and
+        drops tombstoned docs before the per-doc sum.
 
         ``scorer``: "ctfidf" (BERTopic-parity class-based weighting, the
         default: ``(tf / dl)``, its sqrt under ``reduce_frequent_words``,
@@ -500,22 +508,15 @@ class IncrementalIndex:
         tomb = self.tombstones()
         mask = None if tomb is None else np.unique(
             np.array([r["doc_id"] for r in tomb.collect()], np.int64))
-        rfw = self.cfg["reduce_frequent_words"]
-        avgdl = st["sum_len"] / st["n_classes"]
-
-        def score(term, tf, dl):
-            w = pd.Series(term).map(idf).to_numpy(np.float64)
-            if scorer == "okapi":
-                return w * tf * (k1 + 1.0) / (
-                    tf + k1 * ((1.0 - b) + b * dl / avgdl))
-            tfn = tf / dl
-            if rfw:
-                tfn = np.sqrt(tfn)
-            return tfn * w
-
+        if scorer == "okapi":
+            params = {"scorer": scorer, "k1": k1, "b": b,
+                      "avgdl": st["sum_len"] / st["n_classes"]}
+        else:
+            params = {"scorer": scorer, "reduce_frequent_words":
+                      self.cfg["reduce_frequent_words"]}
         # only terms with live postings have an idf; the rest score nothing
         live = {q: [t for t in ts if t in idf] for q, ts in query_terms.items()}
-        return _topk_over_scan(scan, live, k, score, mask)
+        return _topk_over_scan(scan, live, k, idf, params, mask)
 
     def _live(self) -> DataFrame | None:
         """Live (term, doc_id, tf, doc_len) postings: every add generation
@@ -524,8 +525,7 @@ class IncrementalIndex:
         scan = self._scan()
         if scan is None:
             return None
-        out = decode_blocks(scan).select(
-            "term", "doc_id", "tf", F.col("score").cast("long").alias("doc_len"))
+        out = decode_blocks(scan)
         tomb = self.tombstones()
         if tomb is not None:
             out = out.join(F.broadcast(tomb), "doc_id", "left_anti")

@@ -22,13 +22,12 @@ the reference pipeline are pluggable no-ops. Everything returns DataFrames.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bertopic_spark.index.checkpoint import read_manifest, write_manifest
 from bertopic_spark.operators.ctfidf import ctfidf, term_stats, top_k_terms
 from bertopic_spark.operators.postings import class_term_counts, doc_term_counts
 
@@ -740,8 +739,9 @@ class BERTopicSpark:
             batch, text_col, [*self.class_cols, id_col], self.mode,
             self.ngram_range)).persist()
         old.unpersist()
-        self.doc_table_ = self.doc_table_.unionByName(
-            batch.select(*self.doc_table_.columns))
+        if self.doc_table_ is not None:  # a loaded model holds none
+            self.doc_table_ = self.doc_table_.unionByName(
+                batch.select(*self.doc_table_.columns))
         new = doc_term_counts(batch, text_col, self.class_cols, self.mode,
                               self.ngram_range)
         self._weigh(decayed_update(self._state_x, new, decay, None,
@@ -1010,13 +1010,17 @@ class BERTopicSpark:
     # -- persistence (S4/S5: parquet artifacts + json config) ----------------
 
     def save(self, path: str) -> None:
+        """Write the model under ``path`` (a local path or a URI): scores_,
+        stats_, doc_terms_, the class×term counts X as they are (decayed
+        by ``partial_fit``, so the next ``partial_fit`` of the loaded
+        model resumes from them) and ``config.json``, written through the
+        path's own filesystem."""
         self._check_fitted()
-        os.makedirs(path, exist_ok=True)
         self.scores_.write.mode("overwrite").parquet(f"{path}/scores")
         self.stats_.write.mode("overwrite").parquet(f"{path}/stats")
         self.doc_terms_.write.mode("overwrite").parquet(f"{path}/doc_terms")
-        with open(f"{path}/config.json", "w") as f:
-            json.dump({
+        self._state_x.write.mode("overwrite").parquet(f"{path}/x")
+        write_manifest(path, {
                 "class_cols": self.class_cols, "mode": self.mode,
                 "ngram_range": list(self.ngram_range),
                 "bm25_weighting": self.bm25_weighting,
@@ -1031,7 +1035,7 @@ class BERTopicSpark:
                 "seed_words": self.seed_words,
                 "seed_multiplier": self.seed_multiplier,
                 "seed_topic_list": self.seed_topic_list,
-            }, f)
+            }, "config.json")
 
     @classmethod
     def import_reference_model(cls, spark: SparkSession, path: str,
@@ -1108,8 +1112,8 @@ class BERTopicSpark:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "BERTopicSpark":
-        with open(f"{path}/config.json") as f:
-            cfg = json.load(f)
+        """The model ``save`` wrote under ``path``, its X included."""
+        cfg = read_manifest(path, "config.json")
         m = cls(
             class_cols=cfg["class_cols"], mode=cfg["mode"],
             ngram_range=tuple(cfg["ngram_range"]),
@@ -1134,7 +1138,7 @@ class BERTopicSpark:
         m.scores_ = spark.read.parquet(f"{path}/scores")
         m.stats_ = spark.read.parquet(f"{path}/stats")
         m.doc_terms_ = spark.read.parquet(f"{path}/doc_terms")
-        m._state_x = class_term_counts(m.doc_terms_, m.class_cols)
+        m._state_x = spark.read.parquet(f"{path}/x")
         return m
 
     # -- cross-model merge (J8; reference merge_models, _bertopic.py:3590-3729)

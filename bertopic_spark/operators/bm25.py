@@ -23,6 +23,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bertopic_spark.index.segments import score_col, tag_weight
 from bertopic_spark.operators.ctfidf import ctfidf, term_stats
 from bertopic_spark.operators.postings import doc_term_counts
 
@@ -38,7 +39,14 @@ def doc_scores(
     _persisted_out: list | None = None,
     combine: str = "shuffle",
 ) -> DataFrame:
-    """The scored doc-level index: (doc_id, term, tf, score).
+    """The scored doc-level index: (doc_id, term, tf, score, doc_len,
+    weight).
+
+    ``weight`` is the term's idf and ``doc_len`` the document's length,
+    the two factors of score = tf / doc_len (its sqrt under
+    ``reduce_frequent_words``) × weight; ``weight`` carries the scorer
+    tag (segments.tag_weight), so ``build_block_index`` stores postings
+    without scores and the serving kernel recomputes these values.
 
     ``combine`` is passed through to ``doc_term_counts``: "shuffle"
     (default, fastest single-box) vs "local" (zero-shuffle counting for
@@ -60,11 +68,16 @@ def doc_scores(
         x = x.persist()
         if _persisted_out is not None:
             _persisted_out.append(x)
-    return ctfidf(
+    scored = ctfidf(
         x, [id_col],
         bm25_weighting=bm25_weighting,
         reduce_frequent_words=reduce_frequent_words,
+        with_weight=True,
     )
+    return scored.select(
+        id_col, "term", "tf", "score", F.col("class_len").alias("doc_len"),
+        tag_weight(F.col("idf"), "ctfidf",
+                   reduce_frequent_words=bool(reduce_frequent_words)))
 
 
 def queries_df(spark, queries: Mapping[int, str]) -> DataFrame:
@@ -974,9 +987,12 @@ def okapi_doc_scores(
     persist_counts: bool = True,
     _persisted_out: list | None = None,
 ) -> DataFrame:
-    """Okapi-scored doc-level index: (doc_id, term, tf, score) with
+    """Okapi-scored doc-level index: (doc_id, term, tf, score, doc_len,
+    weight) with
     score = idf_RSJ(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)) — the
-    per-term decomposition of classical BM25, so
+    per-term decomposition of classical BM25; ``weight`` is idf_RSJ(t),
+    tagged with the scorer and its k1, b and avgdl (segments.tag_weight),
+    so
     ``bm25_topk(okapi_doc_scores(c), q)`` ≡ ``okapi_bm25_topk(c, q)``
     and the relation feeds every downstream serving structure unchanged:
     ``build_block_index``/WAND (block-max bounds are tighter AND the
@@ -995,18 +1011,20 @@ def okapi_doc_scores(
            .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
            .collect()[0])
     n_docs, avgdl = int(row["n"]), row["avgdl"]
+    scorer = {"k1": float(k1), "b": float(b), "avgdl": float(avgdl or 0.0)}
+    weight = tag_weight(F.col("weight"), "okapi", **scorer)
     if n_docs == 0:
-        return x.select(id_col, "term", "tf",
-                        F.lit(0.0).alias("score")).limit(0)
+        return x.select(id_col, "term", "tf", F.lit(0.0).alias("score"),
+                        "doc_len", F.lit(0.0).alias("weight")
+                        ).select(id_col, "term", "tf", "score", "doc_len",
+                                 weight).limit(0)
     dfs = x.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) /
                 (F.col("df") + 0.5))
-    denom = (F.col("tf") + F.lit(k1) *
-             (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl)))
-    return (x.join(dfs.select("term", idf.alias("_idf")), "term")
+    return (x.join(dfs.select("term", idf.alias("weight")), "term")
             .select(id_col, "term", "tf",
-                    (F.col("_idf") * F.col("tf") * F.lit(k1 + 1.0) / denom)
-                    .alias("score")))
+                    score_col({"scorer": "okapi", **scorer}).alias("score"),
+                    "doc_len", weight))
 
 
 def search_after(

@@ -26,6 +26,8 @@ shuffle of the fact table — class totals reuse the groupBy shuffle).
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -98,25 +100,42 @@ def ctfidf(
     reduce_frequent_words: bool = False,
     clamp: float | None = DEFAULT_CLAMP,
     stats: DataFrame | None = None,
+    with_weight: bool = False,
 ) -> DataFrame:
     """transform(X): (class_cols..., term, tf, score).
 
     ``stats`` lets callers reuse a frozen idf table (the reference reuses
     ``_idf_diag`` across every transform — ``_ctfidf.py:88-94``); per-slice
     re-aggregation (operators/slices.py) depends on this.
+
+    ``with_weight`` also returns the two factors of each score:
+    ``class_len`` and ``idf`` (score = tf / class_len, its sqrt under
+    ``reduce_frequent_words``, times idf).
+
+    A NULL class is a class like any other: the class lengths join on the
+    class columns null-safely, as ``term_stats`` counts the NULL class's
+    rows in df and in A.
     """
     if stats is None:
         stats = term_stats(x, class_cols, bm25_weighting, clamp)
     if "class_len" in x.columns:
         joined = x  # caller pre-computed lengths narrowly (doc-level path)
     else:
-        joined = x.join(F.broadcast(class_lengths(x, class_cols)), list(class_cols))
+        lens = class_lengths(x, class_cols).select(
+            *[F.col(c).alias(f"_class{i}") for i, c in enumerate(class_cols)],
+            "class_len")
+        on = [F.col(c).eqNullSafe(F.col(f"_class{i}"))
+              for i, c in enumerate(class_cols)]
+        joined = x.join(F.broadcast(lens), reduce(and_, on)).drop(
+            *[f"_class{i}" for i in range(len(class_cols))])
     tf_norm = F.col("tf") / F.col("class_len")
     if reduce_frequent_words:
         tf_norm = F.sqrt(tf_norm)
+    factors = ["class_len", "idf"] if with_weight else []
     return (
         joined.join(F.broadcast(stats.select("term", "idf")), "term")
-        .select(*class_cols, "term", "tf", (tf_norm * F.col("idf")).alias("score"))
+        .select(*class_cols, "term", "tf", (tf_norm * F.col("idf")).alias("score"),
+                *factors)
     )
 
 

@@ -13,9 +13,9 @@ This job QUANTIFIES that design choice against the adversarial baseline
 (ids assigned by md5 of the key — i.e. a deterministic random permutation)
 on the same corpus, same span:
 
-* payload bytes (total and varint-stream-only — the float64 score stream
-  is 8·postings both ways, so the varint-only delta isolates the id-gap
-  effect; the tf stream is value-identical under any permutation),
+* payload bytes (every payload byte is a varint stream; the tf and
+  document-length streams hold the same values under any permutation, so
+  the delta isolates the id-gap effect),
 * block counts (sorted ids touch fewer doc-id ranges per term),
 * and proves CONTENT INVARIANCE: decoded postings reattached to their
   natural keys fingerprint identically both ways — id assignment is pure
@@ -80,7 +80,7 @@ def build_variant(corpus, order: str, span: int) -> dict:
         "order": order,
         "n_blocks": int(m["n_blocks"]),
         "payload_bytes": int(m["payload_bytes"]),
-        "varint_bytes": int(m["payload_bytes"]) - 8 * int(m["postings"]),
+        "varint_bytes": int(m["payload_bytes"]),
         "postings": int(m["postings"]),
         "build_s": round(time.perf_counter() - t0, 3),
         "fingerprint": f"n{fp['n']}_s{fp['s']}_x{fp['x']}",

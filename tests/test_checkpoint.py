@@ -205,6 +205,39 @@ def test_pre_tag_blocks_checkpoint_is_not_resumed(spark, tmp_path):
     assert payload_format(blocks) == (4096, "varint")
 
 
+def test_float64_layout_blocks_checkpoint_is_not_resumed(spark, tmp_path):
+    """Blocks checkpointed in the layout with a float64 score per posting
+    (gated on span, codec and format alone, no layout in the payload tag)
+    recompute instead of resuming; the earlier stages resume, and the
+    postings carry each score's doc_len and tagged weight."""
+    from bertopic_spark.corpus import load_corpus
+    from bertopic_spark.index.checkpoint import derive, read_manifest
+    from bertopic_spark.index.segments import payload_format, payload_scorer
+
+    corpus = load_corpus(spark, n_files=120, seed=42)
+    root = str(tmp_path / "idx")
+    IndexBuild(spark, root).build(corpus)
+    bdir = os.path.join(root, "blocks")
+    postings = read_manifest(os.path.join(root, "postings"))
+    old = read_manifest(bdir)
+    old["input_fingerprint"] = derive(postings["input_fingerprint"], "blocks",
+                                      "span=4096,codec=varint,format=blocks")
+    old["created_utc"] = "2000-01-01T00:00:00Z"
+    for f in old["schema"]["fields"]:
+        f["metadata"].pop("layout", None)
+    with open(os.path.join(bdir, "_MANIFEST.json"), "w") as f:
+        json.dump(old, f)
+
+    blocks = IndexBuild(spark, root).build(corpus)
+    assert read_manifest(bdir)["created_utc"] != old["created_utc"]
+    assert read_manifest(os.path.join(root, "postings")) == postings
+    assert payload_format(blocks) == (4096, "varint")
+    assert payload_scorer(blocks) == {"scorer": "ctfidf",
+                                      "reduce_frequent_words": False}
+    assert [f["name"] for f in postings["schema"]["fields"]] == [
+        "doc_id", "term", "tf", "score", "doc_len", "weight"]
+
+
 def test_repeated_builds_leave_no_cached_relation(spark, tmp_path):
     """The docids stage persists its range-partitioned keys and the
     postings stage its per-document counts; each releases them once the

@@ -214,6 +214,37 @@ def test_tree_misuse_raises_naming_the_path(spark, seg16, tmp_path):
         read_positions(spark, path, ["def"])
 
 
+def test_float64_layout_tree_raises_naming_the_path(spark, seg16, tmp_path):
+    """A tree whose payload tag names no posting layout holds a float64
+    value per posting (the layout before blocks stored document lengths):
+    serve_topk, IndexServer and decode_blocks refuse it, naming the path,
+    and nothing decodes it."""
+    import json
+    import shutil
+
+    from bertopic_spark.index.segments import SegmentTree, decode_blocks
+
+    path, _ = seg16
+    old = str(tmp_path / "float64_layout")
+    shutil.copytree(path, old)
+    mpath = os.path.join(old, "_MANIFEST.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    for fld in m["schema"]["fields"]:
+        fld["metadata"].pop("layout", None)
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="float64_layout.*float64 value"):
+        serve_topk(spark, old, {0: ["def"]}, k=5)
+    with pytest.raises(ValueError, match="float64_layout.*rebuild"):
+        IndexServer(spark, old)
+    scan = spark.read.schema(SegmentTree(spark, path, "blocks").schema).parquet(old)
+    stripped = scan.withColumn("payload", F.col("payload").alias(
+        "payload", metadata={"span": SPAN, "codec": "varint"}))
+    with pytest.raises(ValueError, match="float64 value"):
+        decode_blocks(stripped)
+
+
 def test_null_content_rows_drop_from_postings(spark):
     """NULL content tokenizes to a NULL array; explode drops the row — the
     doc is absent from the index (documented), everything else intact."""

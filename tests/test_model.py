@@ -84,6 +84,52 @@ def test_save_load_roundtrip(model, spark, tmp_path):
     assert out
 
 
+def _decayed_resume(spark, documents_df, path):
+    """(the unsaved model, the model saved and loaded at ``path``), each
+    fitted on one third of the fixture, partial_fit with decay 0.5 on the
+    second, then — after the save and load — on the last."""
+    d = documents_df.select("doc_id", "lang", "text")
+    parts = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    m = BERTopicSpark(class_cols=["lang"]).fit(parts[0], "text", "doc_id")
+    m.partial_fit(parts[1], decay=0.5)
+    m.save(path)
+    loaded = BERTopicSpark.load(spark, path)
+    for x in (m, loaded):
+        x.partial_fit(parts[2], decay=0.5)
+    return m, loaded
+
+
+def test_save_load_keeps_the_decayed_counts(spark, documents_df, tmp_path):
+    """save writes X as partial_fit left it (decayed) and load reads it
+    back, so the loaded model's next partial_fit gives the float64 stats_
+    and scores_ of the model that was never saved."""
+    from collections import Counter
+
+    m, loaded = _decayed_resume(spark, documents_df, str(tmp_path / "m"))
+
+    def rows(d):
+        return Counter(map(tuple, d.collect()))
+
+    assert rows(loaded._state_x) == rows(m._state_x)
+    assert rows(loaded.stats_) == rows(m.stats_)
+    assert rows(loaded.scores_) == rows(m.scores_)
+
+
+def test_save_load_on_a_uri_path(spark, documents_df, tmp_path, monkeypatch):
+    """A file:// model path is written and read through its own
+    filesystem — no ./file: directory — and loads the same model."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    uri = f"file://{tmp_path}/uri_model"
+    m, loaded = _decayed_resume(spark, documents_df, uri)
+    assert os.path.exists(f"{tmp_path}/uri_model/config.json")
+    assert os.path.isdir(f"{tmp_path}/uri_model/x")
+    assert not os.path.exists(f"{tmp_path}/file:")
+    assert (sorted(map(tuple, loaded.get_topics().collect()))
+            == sorted(map(tuple, m.get_topics().collect())))
+
+
 def test_get_document_info(model, documents_df):
     out = model.get_document_info().collect()
     assert len(out) == documents_df.count()
@@ -428,6 +474,11 @@ def test_fit_matches_the_per_document_route(documents_df, params):
     assert got == rows(stats)
     assert any(r[0] == "null" for r in got)  # the NULL class's X rows count
     assert rows(m.scores_) == rows(scores)
+    # ... and the NULL class is scored like any other class
+    null_terms = {r["term"] for r in m.scores_.filter(F.col("lang").isNull())
+                  .collect()}
+    assert {"table", "scan", "merge", "null", "class"} <= null_terms
+    assert m.get_topics().filter(F.col("lang").isNull()).count() > 0
     assert rows(m.get_topics()) == rows(top_k_terms(scores, ["lang"], 10))
 
 

@@ -51,12 +51,12 @@ def test_block_codecs_decode_identically():
         tfs = rng.integers(1, 250, size=n).astype(np.int64)
         if trial % 3 == 0:  # exception path: rare huge tfs
             tfs[rng.integers(0, n, size=max(1, n // 40))] = int(rng.integers(1 << 20, 1 << 40))
-        scs = rng.random(n)
+        dls = tfs + rng.integers(0, 5000, size=n)
         rs = 4096 * 3
-        a = decode_block_arrays(encode_block(ids, tfs, scs, rs), rs)
-        b = decode_block_pfor_arrays(encode_block_pfor(ids, tfs, scs, rs), rs)
-        for x, y in zip(a, b):
-            assert np.array_equal(x, y)
+        a = decode_block_arrays(encode_block(ids, tfs, dls, rs), rs)
+        b = decode_block_pfor_arrays(encode_block_pfor(ids, tfs, dls, rs), rs)
+        for x, y, want in zip(a, b, (ids, tfs, dls)):
+            assert np.array_equal(x, y) and np.array_equal(x, want)
 
 
 def test_pfor_beats_varint_on_gap_profiles():

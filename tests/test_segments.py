@@ -74,6 +74,74 @@ def test_serve_topk_rank_identical(spark, corpus_df, seg_path):
             assert gs == pytest.approx(ws, abs=1e-12)
 
 
+def _term_order_topk(scored, qts, k):
+    """The exhaustive top k of each query from the relation's own float64
+    scores, each doc's sum taken in term order as the kernel takes it:
+    {qid: [(rank, doc, score)]}."""
+    by_term = {}
+    for r in scored.select("term", "doc_id", "score").collect():
+        by_term.setdefault(r["term"], {})[r["doc_id"]] = r["score"]
+    out = {}
+    for q, ts in qts.items():
+        total = {}
+        for t in sorted(set(ts)):
+            for d, sc in by_term.get(t, {}).items():
+                total[d] = total.get(d, 0.0) + sc
+        ranked = sorted(total.items(), key=lambda x: (-x[1], x[0]))[:k]
+        if ranked:
+            out[q] = [(i + 1, d, sc) for i, (d, sc) in enumerate(ranked)]
+    return out
+
+
+@pytest.mark.parametrize("weighting", [
+    {}, {"bm25_weighting": False}, {"reduce_frequent_words": True}, "okapi"])
+def test_score_free_tree_is_rank_identical(spark, corpus_df, tmp_path,
+                                           weighting):
+    """A tree stores (doc gap, tf, doc length) and one weight per row; the
+    kernel's scores are the float64 values the scorer computed at build:
+    decode_blocks gives back each posting's score with ==, serve_topk's
+    sums equal (==) the term-order sums of those scores, and its ranks
+    are bm25_topk's / okapi_bm25_topk's (whose Spark sums may add the
+    same values in another order, so their scores are compared to
+    1e-12)."""
+    from bertopic_spark.index.segments import decode_blocks
+    from bertopic_spark.operators.bm25 import okapi_bm25_topk, okapi_doc_scores
+
+    fq = fixture_queries(20)
+    qts = {q: sorted(set(tokenize_one(fq[q], "ascii_code"))) for q in fq}
+    qt = query_terms(queries_df(spark, fq), "ascii_code")
+    if weighting == "okapi":
+        scored = okapi_doc_scores(corpus_df, mode="ascii_code").persist()
+        oracle = okapi_bm25_topk(corpus_df, qt, k=10, mode="ascii_code")
+    else:
+        scored = doc_scores(corpus_df, mode="ascii_code", **weighting).persist()
+        oracle = bm25_topk(scored, qt, k=10)
+    blocks = build_block_index(scored, SPAN)
+    posting = {(r["term"], r["doc_id"]): (r["tf"], r["score"])
+               for r in scored.collect()}
+    assert {(r["term"], r["doc_id"]): (r["tf"], r["score"])
+            for r in decode_blocks(blocks).collect()} == posting
+    path = str(tmp_path / "idx")
+    write_index_segments(blocks, path, n_buckets=16)
+
+    def ranked(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"]))
+        return {q: sorted(v) for q, v in out.items()}
+
+    got = ranked(serve_topk(spark, path, qts, k=10))
+    assert got == _term_order_topk(scored, qts, 10) and len(got) > 10
+    want = ranked(oracle)
+    assert set(got) == set(want)
+    for q in want:
+        assert [(r, d) for r, d, _ in got[q]] == [(r, d) for r, d, _ in want[q]], q
+        for (_, _, gs), (_, _, ws) in zip(got[q], want[q]):
+            assert gs == pytest.approx(ws, abs=1e-12), q
+    scored.unpersist()
+
+
 def test_index_server_matches_cold_path_and_releases_cache(spark, seg_path):
     """Warm serving session (IndexServer): identical results to the cold
     serve_topk path, and nothing is left in executor storage after

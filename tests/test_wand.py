@@ -11,15 +11,18 @@ import random
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from bertopic_spark.corpus import fixture_queries
 from bertopic_spark.index.blocks import CODECS
 from bertopic_spark.index.segments import (block_decoder, build_block_index,
-                                           query_topk, serve_topk,
-                                           write_index_segments)
+                                           payload_scorer, posting_scorer,
+                                           query_topk, score_col, serve_topk,
+                                           tag_weight, write_index_segments)
 from bertopic_spark.operators.bm25 import bm25_topk, doc_scores, queries_df, query_terms
 
 SPANS = (16, 64)  # 32 and 8 buckets at 500 docs → pruning actually exercised
+CTFIDF = {"scorer": "ctfidf", "reduce_frequent_words": False}
 
 
 @pytest.fixture(scope="module")
@@ -66,14 +69,20 @@ def test_rank_identical_to_exhaustive(spark, setup):
 
 
 def test_negative_block_max_does_not_prune_the_top_doc(spark, tmp_path):
-    """A doc that lacks a term whose block max is negative scores ABOVE
-    Σ max_score of its bucket; the bound clips each block max at 0, so
-    the bucket holding the best doc is still decoded."""
-    rows = [(i, "neg", 1, -1.0) for i in range(200) if i != 130]
-    rows += [(i, "pos", 1, 2.0 + 0.001 * i) for i in range(10)]
-    rows += [(130, "pos", 1, 5.0)]
+    """A doc that lacks a term whose block max is negative (a negative
+    weight) scores ABOVE Σ max_score of its bucket; the bound clips each
+    block max at 0, so the bucket holding the best doc is still decoded.
+    Every doc is 1000 tokens long, so tf/1000 × weight gives the scores
+    -1.0 ("neg"), 2.0 + 0.001·i and 5.0 ("pos")."""
+    rows = [(i, "neg", 1000, -1.0) for i in range(200) if i != 130]
+    rows += [(i, "pos", 2000 + i, 1.0) for i in range(10)]
+    rows += [(130, "pos", 5000, 1.0)]
     sc = spark.createDataFrame(
-        rows, "doc_id long, term string, tf long, score double")
+        rows, "doc_id long, term string, tf long, weight double")
+    sc = sc.select("doc_id", "term", "tf", F.lit(1000).cast("long").alias("doc_len"),
+                   tag_weight(F.col("weight"), "ctfidf",
+                              reduce_frequent_words=False))
+    sc = sc.withColumn("score", score_col(CTFIDF))
     path = str(tmp_path / "neg")
     write_index_segments(build_block_index(sc, 64), path, n_buckets=4)
     got = [(r.doc_id, r.score, r["rank"])
@@ -85,31 +94,35 @@ def test_negative_block_max_does_not_prune_the_top_doc(spark, tmp_path):
     assert got == want
 
 
-def _block_rows(postings, span, codec="varint"):
-    """(term, blk, max_score, payload) arrays from {term: {doc: score}},
-    encoded the way build_block_index does, without Spark."""
+def _block_rows(postings, weights, doc_len, span, codec="varint"):
+    """(term, blk, max_score, weight, payload) arrays from postings
+    {term: {doc: tf}}, per-term weights and per-doc lengths, encoded the
+    way build_block_index does (ctfidf scores tf / doc_len × weight),
+    without Spark."""
     encode = CODECS[codec][0]
-    term, blk, max_score, payload = [], [], [], []
+    score = posting_scorer(CTFIDF)
+    term, blk, max_score, weight, payload = [], [], [], [], []
     for t in sorted(postings):
         docs = np.array(sorted(postings[t]), np.int64)
         for b in np.unique(docs // span):
             ids = docs[docs // span == b]
-            s = np.array([postings[t][d] for d in ids], np.float64)
+            tf = np.array([postings[t][d] for d in ids], np.int64)
+            dl = np.array([doc_len[d] for d in ids], np.int64)
             term.append(t)
             blk.append(int(b))
-            max_score.append(s.max())
-            payload.append(encode(ids, np.ones(len(ids), np.int64), s,
-                                  int(b) * span))
+            max_score.append(score(tf, dl, np.full(len(ids), weights[t])).max())
+            weight.append(weights[t])
+            payload.append(encode(ids, tf, dl, int(b) * span))
     return (np.array(term, object), np.array(blk, np.int64),
-            np.array(max_score), np.array(payload, object))
+            np.array(max_score), np.array(weight), np.array(payload, object))
 
 
-def _exhaustive(postings, terms, k):
+def _exhaustive(postings, weights, doc_len, terms, k):
     """Each doc's score summed in term order, top k by (score desc, doc asc)."""
     total = {}
     for t in sorted(set(terms)):
-        for d, s in postings.get(t, {}).items():
-            total[d] = total.get(d, 0.0) + s
+        for d, tf in postings.get(t, {}).items():
+            total[d] = total.get(d, 0.0) + tf / doc_len[d] * weights[t]
     return sorted(total.items(), key=lambda x: (-x[1], x[0]))[:k]
 
 
@@ -121,19 +134,22 @@ def test_stats_counters_consistent_on_fixture(spark, setup):
     scores, _, qts, _ = setup
     blocks = build_block_index(scores, 64)
     decode_rows = block_decoder(64, "varint")
+    score = posting_scorer(payload_scorer(blocks))
     rows = {}
-    for r in blocks.select("term", "blk", "max_score", "payload").collect():
+    for r in blocks.select("term", "blk", "max_score", "weight",
+                           "payload").collect():
         rows.setdefault(r["term"], []).append(r)
     pruned = 0
     for q, ts in sorted(qts.items()):
         cand = [r for t in ts for r in rows.get(t, [])]
         if not cand:
             continue
-        term, blk, ms, pl = (np.array(c, dtype) for c, dtype in zip(
-            zip(*cand), (object, np.int64, np.float64, object)))
-        docs, total, n = query_topk(term, blk, ms, pl, 10, decode_rows)
-        full_docs, full_total, n_full = query_topk(term, blk, None, pl, 10,
-                                                   decode_rows)
+        term, blk, ms, w, pl = (np.array(c, dtype) for c, dtype in zip(
+            zip(*cand), (object, np.int64, np.float64, np.float64, object)))
+        docs, total, n = query_topk(term, blk, ms, w, pl, 10, decode_rows,
+                                    score)
+        full_docs, full_total, n_full = query_topk(term, blk, None, w, pl, 10,
+                                                   decode_rows, score)
         assert 1 <= n <= len(cand) == n_full, q
         assert docs.tolist() == full_docs.tolist(), q
         assert total.tolist() == full_total.tolist(), q
@@ -145,23 +161,28 @@ def test_pruning_actually_prunes():
     """Spark-free: on a stop-term-skewed relation (one rare high-impact
     term confined to bucket 0, one ubiquitous low-impact term) the kernel
     decodes bucket 0 and skips the 15 others, and the answer is the
-    exhaustive one."""
-    postings = {"common": {i: 0.01 for i in range(1000)},
-                "rare": {i: 5.0 + i * 0.001 for i in range(20)}}
-    term, blk, ms, pl = _block_rows(postings, 64)
+    exhaustive one. Every doc is 1000 tokens long: "common" scores
+    1/1000 × 10 = 0.01, "rare" (5000 + i)/1000 × 1 ≈ 5.0 + 0.001·i."""
+    postings = {"common": {i: 1 for i in range(1000)},
+                "rare": {i: 5000 + i for i in range(20)}}
+    weights = {"common": 10.0, "rare": 1.0}
+    doc_len = {i: 1000 for i in range(1000)}
+    term, blk, ms, w, pl = _block_rows(postings, weights, doc_len, 64)
     # 1000 docs / span 64 = 16 buckets hold 'common', bucket 0 also 'rare'
     assert len(np.unique(blk)) == 16 and len(blk) == 17
-    docs, total, n = query_topk(term, blk, ms, pl, 10, block_decoder(64, "varint"))
+    docs, total, n = query_topk(term, blk, ms, w, pl, 10,
+                                block_decoder(64, "varint"),
+                                posting_scorer(CTFIDF))
     # θ from the rare bucket (~5.01) dwarfs every common-only bound (0.01):
     # only bucket 0's two blocks are decoded, 15 buckets are skipped
     assert n == 2
     assert list(zip(docs.tolist(), total.tolist())) == _exhaustive(
-        postings, ["common", "rare"], 10)
+        postings, weights, doc_len, ["common", "rare"], 10)
 
 
 @pytest.mark.parametrize("codec", ["varint", "pfor"])
 def test_blockmax_kernel_random_relations_property(codec):
-    """Randomized safety net for the clipped bound: random sparse score
+    """Randomized safety net for the clipped bound: random sparse
     relations with NEGATIVE weights, random spans, k and multi-term
     queries — the pruned kernel returns exactly the exhaustive top k
     (same doc ids, bit-identical float64 scores, ties by doc id)."""
@@ -171,30 +192,36 @@ def test_blockmax_kernel_random_relations_property(codec):
         n_docs, n_terms = rng.choice([50, 300]), 12
         span = rng.choice([4, 16, 64])
         terms = [f"t{i}" for i in range(n_terms)]
+        # a coarse grid (power-of-two lengths, small tfs) makes equal
+        # sums, so ties reach rank k
+        weights = {t: rng.choice([-1.0, -0.5, 0.25, 1.0, 2.0,
+                                  round(rng.uniform(-1.0, 4.0), 3)])
+                   for t in terms}
+        doc_len = {d: rng.choice([1, 2, 4]) for d in range(n_docs)}
         postings = {t: {} for t in terms}
         for d in range(n_docs):
             for t in rng.sample(terms, rng.randint(1, 6)):
-                # a coarse grid makes equal sums, so ties reach rank k
-                postings[t][d] = rng.choice([-1.0, -0.5, 0.25, 1.0, 2.0,
-                                             round(rng.uniform(-1.0, 4.0), 3)])
+                postings[t][d] = rng.randint(1, 4)
         decode_rows = block_decoder(span, codec)
         for _ in range(5):
             q = rng.sample(terms, rng.randint(1, 5))
             k = rng.choice([1, 3, 7, 20])
-            term, blk, ms, pl = _block_rows({t: postings[t] for t in q},
-                                            span, codec)
-            docs, total, n = query_topk(term, blk, ms, pl, k, decode_rows)
+            term, blk, ms, w, pl = _block_rows(
+                {t: postings[t] for t in q}, weights, doc_len, span, codec)
+            docs, total, n = query_topk(term, blk, ms, w, pl, k, decode_rows,
+                                        posting_scorer(CTFIDF))
             assert (list(zip(docs.tolist(), total.tolist()))
-                    == _exhaustive(postings, q, k)), (trial, q, k)
+                    == _exhaustive(postings, weights, doc_len, q, k)), (trial, q, k)
             pruned += n < len(blk)
     assert pruned > 0
 
 
 def test_kernel_rejects_k_below_one():
-    term, blk, ms, pl = _block_rows({"a": {0: 1.0}}, 4)
+    term, blk, ms, w, pl = _block_rows({"a": {0: 1}}, {"a": 1.0}, {0: 1}, 4)
     for k in (0, -1):
         with pytest.raises(ValueError, match="k"):
-            query_topk(term, blk, ms, pl, k, block_decoder(4, "varint"))
+            query_topk(term, blk, ms, w, pl, k, block_decoder(4, "varint"),
+                       posting_scorer(CTFIDF))
 
 
 def test_maxscore_rank_identical_both_models(spark, corpus_df):
